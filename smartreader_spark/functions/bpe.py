@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smartreader_spark.functions.textqa import _norm
+from smartreader_spark.memo import SessionMemo
 
 # the end-of-word sentinel of the original algorithm: lets the model
 # distinguish word-final subwords ("est</w>") from word-internal ones
@@ -115,13 +116,11 @@ def _apply_merge(seg, lhs: str, rhs: str):
     )
 
 
-#: memoized training per (application, corpus, knobs) — the training
-#: pass is a driver loop of k small jobs, so the merge table and the
-#: final (localCheckpoint-ed, hence plan-free) segmentation are reused
-#: when `bpe_fertility` runs after `bpe_train` in the same session (the
-#: training._STAGES_CACHE precedent). Keyed by applicationId, never
-#: id(); entries from dead applications are evicted on access.
-_TRAIN_CACHE: dict[tuple, tuple] = {}
+#: memoized training per input and knobs (memo.py) — the training pass
+#: is a driver loop of k small jobs, so the merge table and the final
+#: (localCheckpoint-ed, hence plan-free) segmentation are reused when
+#: `bpe_fertility` runs after `bpe_train` in the same session.
+_TRAIN_CACHE = SessionMemo("bpe.train")
 
 
 def _train(
@@ -132,14 +131,16 @@ def _train(
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Run the merge-learning loop; returns (merge table rows, the final
     per-word segmentation DataFrame (word, cnt, seg))."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, num_merges, min_pair_count)
-    cached = _TRAIN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for stale in [k for k in _TRAIN_CACHE if k[0] != app_id]:
-        del _TRAIN_CACHE[stale]
+    return _TRAIN_CACHE.get_or_build(
+        spark,
+        (sf_dir, num_merges, min_pair_count),
+        (sf_dir,),
+        lambda: _build_train(spark, sf_dir, num_merges, min_pair_count),
+    )
 
+
+def _build_train(spark: SparkSession, sf_dir: str, num_merges: int,
+                 min_pair_count: int) -> tuple[list, DataFrame]:
     words = _word_vocab(spark, sf_dir).select(
         "word",
         "cnt",
@@ -166,7 +167,6 @@ def _train(
             _apply_merge(F.col("seg"), best["lhs"], best["rhs"]).alias("seg"),
         ).localCheckpoint(eager=True)
 
-    _TRAIN_CACHE[key] = (merges, words)
     return merges, words
 
 

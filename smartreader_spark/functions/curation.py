@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import SessionMemo
 from .textqa import _load, _norm
 
 # non-overlapping token-chunk width for passage dedup
@@ -435,23 +436,21 @@ def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) → the three gate outputs, localCheckpointed.
-#: The pipeline_funnel/_STAGES_CACHE precedent (bench.py runs the three
-#: composed curation queries in one session; a 100 TB pipeline likewise
-#: materializes each gate's verdict table once and feeds every composed
-#: consumer from it — recomputing three tokenize+explode passes per
-#: downstream query is the anti-pattern). Entries are evicted per
-#: session key; checkpoint blocks are freed by the ContextCleaner when
-#: the DataFrames are dropped. Cleared by tools that rewrite
-#: {sf_dir} mid-session (the bpe._TRAIN_CACHE discipline).
-_GATES_CACHE: dict = {}
+#: the three gate outputs, localCheckpointed once per input (memo.py).
+#: bench.py runs the three composed curation queries in one session; a
+#: 100 TB pipeline likewise materializes each gate's verdict table once
+#: and feeds every composed consumer from it — recomputing three
+#: tokenize+explode passes per downstream query is the anti-pattern.
+_GATES_CACHE = SessionMemo("curation.gates")
 
 
 def _gates(spark: SparkSession, sf_dir: str) -> dict:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _GATES_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _GATES_CACHE.get_or_build(
+        spark, (sf_dir,), (sf_dir,), lambda: _build_gates(spark, sf_dir)
+    )
+
+
+def _build_gates(spark: SparkSession, sf_dir: str) -> dict:
     # the three gates are independent jobs — overlap them (guide §2.6)
     # so the materialization wall is max(gate), not sum(gate); measured
     # at sf1.0: cap 0.4 s + rep 4.3 s + chunks 1.9 s serialized
@@ -471,11 +470,7 @@ def _gates(spark: SparkSession, sf_dir: str) -> dict:
             k: pool.submit(lambda d: d.localCheckpoint(eager=True), df)
             for k, df in dfs.items()
         }
-        gates = {k: f.result() for k, f in futs.items()}
-    for k in [k for k in _GATES_CACHE if k[0] == key[0] and k != key]:
-        _GATES_CACHE.pop(k)
-    _GATES_CACHE[key] = gates
-    return gates
+        return {k: f.result() for k, f in futs.items()}
 
 
 def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

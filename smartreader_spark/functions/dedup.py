@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import SessionMemo
+
 NGRAM_N = 3
 #: b×r LSH banding (VERDICT r5 #3): 8 bands of r=4 concatenated
 #: min-hashes. Candidate probability 1-(1-s⁴)⁸ keeps ~0.99 recall at
@@ -173,8 +175,7 @@ def _pair_cosine_arrow_fn(dim: int, precut: float):
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str,
                              threshold: float = 0.4,
                              n_planes: int = 4,
-                             exact: bool = False,
-                             jvm_pairs: bool = False) -> DataFrame:
+                             exact: bool = False) -> DataFrame:
     """APPROXIMATE embedding-cosine near-duplicate pairs: only pairs whose
     embeddings share an SRP (sign-random-projection) bucket are candidates
     — an above-threshold pair split by a sign flip on any plane is NOT
@@ -186,61 +187,47 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str,
     Scale shape of the default:
 
     1. candidate generation — SRP bucket id (same deterministic
-       md5-derived hyperplanes as similarity._srp_bucket), self EQUI-join
-       on the bucket: Spark shuffles (bucket, vec_id, embedding) and
-       hash/sort-merge-joins; no cross product anywhere in the plan
-       (asserted in tests/test_plans.py).
-    2. verify — exact cosine on candidates only, JVM-side higher-order
-       functions.
+       md5-derived hyperplanes as similarity._srp_bucket, plane weights
+       inlined as driver-computed literals — bit-identical, see
+       _srp_weights). The bucket formula is SQL-reproducible, so the
+       DuckDB oracle states the exact same candidate set.
+    2. verify — a cogrouped-Arrow numpy stage scores each bucket's pairs
+       (guide §4.2; see _pair_cosine_arrow_fn): np.cumsum is the same
+       sequential left fold as the JVM's zip_with/aggregate, so the pair
+       set and the float64 cosine bits equal the pure-expression salted
+       self-join, which tests/test_functions.py keeps as the equivalence
+       twin (it is ~3x slower at sf1.0).
 
-    The bucket formula is SQL-reproducible, so the DuckDB oracle states
-    the exact same candidate set.
+    The 4-plane bucket space has only 16 values, so a bare bucket
+    grouping hash-partitions into ≤16 partitions and AQE then coalesces
+    those (small map output) down to ~2 tasks while the O(Σ bucket²)
+    pair expansion — invisible to byte-based coalescing — runs serially
+    (measured: 239.9 s at sf1.0 on 32 cores). So the grouping key is
+    salted: side A carries salt = vec_id mod S, side B is exploded over
+    all S salts, splitting every bucket into S independent slices."""
+    from .similarity import _dim_of, _spread, _srp_bucket, cosine
 
-    r7 execution shape (same pair set, same cosine bits — guide §2/§4):
-    the 4-plane bucket space has only 16 values, so the bare bucket
-    equi-join hash-partitioned into ≤16 partitions and AQE then
-    *coalesced* those (small map output) down to ~2 tasks while the
-    join's O(Σ bucket²) pair expansion — invisible to byte-based
-    coalescing — ran serially (measured: 239.9 s at sf1.0 on 32 cores).
-    Fix: (a) salt the join key — side A carries salt = vec_id mod S,
-    side B is exploded over all S salts, so every bucket splits into S
-    independent slices and the explicit repartition(P) pins the
-    parallelism (user-specified partition counts are exempt from AQE
-    coalescing); (b) per-vector norms are computed ONCE before the join
-    (the per-pair cost drops from three interpreted folds to one);
-    (c) the SRP plane weights are inlined as driver-computed literals
-    (bit-identical — see _srp_weights) instead of per-element md5/conv.
-    The per-pair dot itself stays the interpreted zip_with/aggregate
-    fold: a measured A/B at sf1.0 (13.0M pairs) put it at 13.0 s vs
-    35.9 s for a 64-term unrolled expression — the unrolled form blows
-    the JVM's 64 KB generated-method limit, falls out of codegen, and
-    interprets SLOWER than the higher-order fold. S and P derive from
-    the session's parallelism, not a local constant."""
-    from .similarity import (
-        _dim_of,
-        _dot,
-        _norm,
-        _spread,
-        _srp_bucket,
-        cosine,
-    )
+    def _emb():
+        return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double")).alias(
+                "embedding"
+            ),
+        )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    dim = None if exact else _dim_of(spark, sf_dir)
     if exact:
+        emb = _emb()
         a = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
         b = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-        joined = a.join(b, F.col("vec_a") < F.col("vec_b"))
-        cos = F.round(cosine(F.col("ea"), F.col("eb")), 6)
-    elif dim and not jvm_pairs:
-        # r7 default: cogrouped-Arrow pair stage (guide §4.2 — hand the
-        # per-pair arithmetic to vectorized numpy, bit-identically; see
-        # _pair_cosine_arrow_fn). The JVM fold path below (jvm_pairs)
-        # computes the identical result ~3x slower at sf1.0 and is kept
-        # as the pure-expression twin + equivalence gate.
+        pairs = a.join(b, F.col("vec_a") < F.col("vec_b")).withColumn(
+            "cosine", F.round(cosine(F.col("ea"), F.col("eb")), 6)
+        )
+    else:
+        dim = _dim_of(spark, sf_dir)
+        if dim is None:  # empty table
+            return spark.createDataFrame(
+                [], "vec_a bigint, vec_b bigint, cosine double"
+            )
         n_salt = 8  # cogroup fan-out: 2^n_planes buckets × 8 salts
 
         # each cogroup side gets its OWN scan subtree: a self-cogroup
@@ -252,13 +239,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str,
         # Independent reads have distinct ids from the start; the extra
         # 20k-row bucket computation is noise.
         def _emb_bucketed():
-            e0 = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-                "vec_id",
-                F.transform("embedding", lambda x: x.cast("double")).alias(
-                    "embedding"
-                ),
-            )
-            return _spread(e0).withColumn(
+            return _spread(_emb()).withColumn(
                 "bucket", _srp_bucket(F.col("embedding"), n_planes, dim=dim)
             )
 
@@ -282,49 +263,8 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str,
                 "vec_a bigint, vec_b bigint, cosine double",
             )
         )
-        return (
-            pairs.filter(F.col("cosine") >= threshold)
-            .select("vec_a", "vec_b", "cosine")
-            .orderBy("vec_a", "vec_b")
-        )
-    elif dim:
-        par = spark.sparkContext.defaultParallelism
-        n_salt = 32            # slices per bucket (B-side replication)
-        n_part = max(2 * par, 16)
-        emb = _spread(emb).withColumn(
-            "bucket", _srp_bucket(F.col("embedding"), n_planes, dim=dim)
-        ).withColumn("nrm", _norm(F.col("embedding")))
-        a = emb.select(
-            "bucket",
-            F.pmod(F.col("vec_id"), F.lit(n_salt)).cast("int").alias("salt"),
-            F.col("vec_id").alias("vec_a"),
-            F.col("embedding").alias("ea"),
-            F.col("nrm").alias("na"),
-        ).repartition(n_part, "bucket", "salt")
-        b = emb.select(
-            "bucket",
-            F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))).alias("salt"),
-            F.col("vec_id").alias("vec_b"),
-            F.col("embedding").alias("eb"),
-            F.col("nrm").alias("nb"),
-        ).repartition(n_part, "bucket", "salt")
-        joined = a.join(b, ["bucket", "salt"]).filter(
-            F.col("vec_a") < F.col("vec_b")
-        )
-        cos = F.round(
-            _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")),
-            6,
-        )
-    else:
-        emb = emb.withColumn("bucket", _srp_bucket(F.col("embedding"), n_planes))
-        a = emb.select("bucket", F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
-        b = emb.select("bucket", F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-        joined = a.join(b, "bucket").filter(F.col("vec_a") < F.col("vec_b"))
-        cos = F.round(cosine(F.col("ea"), F.col("eb")), 6)
     return (
-        joined
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
+        pairs.filter(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", "cosine")
         .orderBy("vec_a", "vec_b")
     )
@@ -461,35 +401,26 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str,
 
 SIMHASH_MAX_BUCKET = 1000
 
-#: (applicationId, sf_dir, max_hamming, max_bucket_size) → the
-#: localCheckpointed simhash near-dup pair table. dedup_simhash_pairs,
-#: dedup_components and dedup_family_keep_best all mine the IDENTICAL
-#: pair graph from the same raw table in one session — the
-#: _GATES_CACHE / _STAGES_CACHE memoization precedent applied to the
-#: pair miner (r7): first consumer pays the banded self-join, the
-#: component queries reuse the materialized pairs. Session-keyed,
-#: evicted per key change; checkpoint blocks are GC-freed with the
-#: DataFrames.
-_PAIRS_CACHE: dict = {}
+#: the localCheckpointed simhash near-dup pair table, once per input
+#: (memo.py): dedup_simhash_pairs, dedup_components and
+#: dedup_family_keep_best all mine the IDENTICAL pair graph from the same
+#: raw table in one session — the first consumer pays the banded
+#: self-join, the component queries reuse the materialized pairs.
+_PAIRS_CACHE = SessionMemo("dedup.simhash_pairs")
 
 
 def _sf_simhash_pairs(spark: SparkSession, sf_dir: str,
                       max_hamming: int = 3,
                       max_bucket_size: int | None = SIMHASH_MAX_BUCKET) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId, sf_dir, max_hamming, max_bucket_size
+    def build():
+        docs = _spread_docs(_load_documents(spark, sf_dir).select("doc_id", "text"))
+        return simhash_pairs_for_docs(
+            docs, max_hamming=max_hamming, max_bucket_size=max_bucket_size
+        ).localCheckpoint(eager=True)
+
+    return _PAIRS_CACHE.get_or_build(
+        spark, (sf_dir, max_hamming, max_bucket_size), (sf_dir,), build
     )
-    cached = _PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = _spread_docs(_load_documents(spark, sf_dir).select("doc_id", "text"))
-    pairs = simhash_pairs_for_docs(
-        docs, max_hamming=max_hamming, max_bucket_size=max_bucket_size
-    ).localCheckpoint(eager=True)
-    for k in [k for k in _PAIRS_CACHE if k[0] == key[0] and k != key]:
-        _PAIRS_CACHE.pop(k)
-    _PAIRS_CACHE[key] = pairs
-    return pairs
 
 
 def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str,
@@ -615,7 +546,10 @@ def _simhash_wide(spark: SparkSession, sf_dir: str, n_bits: int = 60) -> DataFra
 def simhash_wide_signatures(docs: DataFrame, n_bits: int = 60) -> DataFrame:
     """n-bit SimHash per document (same construction as
     simhash_signatures, wider hash prefix: ceil(n/4) md5 hex chars).
-    `docs` needs (doc_id, text)."""
+    `docs` needs (doc_id, text). `n_bits` is at most 60: a wider md5
+    prefix (16 hex chars) overflows BIGINT for half of all tokens."""
+    if not 1 <= n_bits <= 60:
+        raise ValueError(f"simhash n_bits must be in 1..60, got {n_bits}")
     n_hex = (n_bits + 3) // 4
     toks = docs.select(
         "doc_id", F.explode(F.array_distinct(_tokens(F.col("text")))).alias("tok")

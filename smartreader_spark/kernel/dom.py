@@ -22,9 +22,10 @@ blow the interpreter stack inside an executor.
 
 from __future__ import annotations
 
-import os
 import re
 from html.parser import HTMLParser
+
+from . import fasttok
 
 VOID_ELEMENTS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
@@ -75,8 +76,6 @@ _TABLE_CTX_TAGS = frozenset(
 
 # insertion-mode contexts where stray content is foster-parented
 _TABLE_CONTEXTS = frozenset(["table", "tbody", "thead", "tfoot", "tr"])
-# table-whitespace placement probe (see _flush_text): keep|foster|drop
-_TABLE_WS_MODE = os.environ.get("SMARTREADER_TABLE_WS", "keep")
 _ALLOWED_IN_TABLE = _TABLE_CTX_TAGS | frozenset(
     ["script", "style", "template", "form", "input", "table"]
 )
@@ -529,27 +528,13 @@ class _TreeBuilder(HTMLParser):
             # stray text before body -> open body
             self._ensure_body()
             cur = self._cur()
-        if cur.tag in _TABLE_CONTEXTS:
-            if data.strip():
-                # non-whitespace character tokens in a table context are
-                # foster-parented before the table (HTML5 'in table text')
-                tn = TextNode(data)
-                if self._foster_parent(tn):
-                    return
-            elif _TABLE_WS_MODE != "keep":
-                # whitespace-only runs: HTML5/AngleSharp insert into the
-                # current (table) node — our default ('keep'). The env
-                # switch is a PARITY.md falsification probe for the
-                # lwn-1/yahoo-2 residual: 'foster' moves the run before
-                # the table, 'drop' discards it (old-parser behaviors).
-                # Result (round 3): all three modes produce byte-identical
-                # extractions on both fixtures — hypothesis falsified.
-                if _TABLE_WS_MODE == "foster":
-                    tn = TextNode(data)
-                    if self._foster_parent(tn):
-                        return
-                elif _TABLE_WS_MODE == "drop":
-                    return
+        if cur.tag in _TABLE_CONTEXTS and data.strip():
+            # non-whitespace character tokens in a table context are
+            # foster-parented before the table (HTML5 'in table text');
+            # whitespace-only runs stay in the table node, as in AngleSharp
+            tn = TextNode(data)
+            if self._foster_parent(tn):
+                return
         kids = cur.child_nodes
         if kids and kids[-1].node_type == Node.TEXT:
             kids[-1].data += data  # type: ignore[attr-defined]
@@ -839,9 +824,6 @@ class _TreeBuilder(HTMLParser):
         self._flush_text()
 
 
-USE_FAST_TOKENIZER = True  # flip (or set env SMARTREADER_SLOW_TOKENIZER=1) to A/B
-
-
 def parse_html(html: str) -> Document:
     """Parse an HTML string into a Document.
 
@@ -858,16 +840,13 @@ def parse_html(html: str) -> Document:
     # a leading U+FEFF is a byte-order mark, ignored by HTML5 parsers
     if html.startswith("﻿"):
         html = html.lstrip("﻿")
-    if USE_FAST_TOKENIZER and not os.environ.get("SMARTREADER_SLOW_TOKENIZER"):
-        from . import fasttok
-
-        tb = _TreeBuilder()
-        try:
-            fasttok.tokenize(html, tb)
-            tb._flush_text()
-            return tb.doc
-        except Exception:
-            pass  # any anomaly: re-parse from scratch with the stdlib path
+    tb = _TreeBuilder()
+    try:
+        fasttok.tokenize(html, tb)
+        tb._flush_text()
+        return tb.doc
+    except Exception:
+        pass  # any anomaly: re-parse from scratch with the stdlib path
     tb = _TreeBuilder()
     try:
         tb.feed(html)

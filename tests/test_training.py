@@ -217,3 +217,21 @@ def test_widened_lexicon_multilingual_cross_engine(spark):
         assert best == round(
             spark_row.stopword_ratio * spark_row.n_tokens
         ), (doc_id, best, spark_row.stopword_ratio, spark_row.n_tokens)
+
+
+def test_quality_stage_escapes_sql_literals(spark, monkeypatch):
+    """The stopword gate is one generated SQL string: a stopword holding
+    an apostrophe must be quoted, not end the literal. The real lexicon
+    quotes exactly as before (same generated SQL)."""
+    from smartreader_spark.functions.textqa import STOPWORDS
+
+    real = dict(STOPWORDS)
+    monkeypatch.setitem(STOPWORDS, "fr", (*STOPWORDS["fr"], "l'"))
+    rows = _quality_rows(spark, [("d", " ".join(["l'"] * 25 + ["qwx"] * 10))])
+    assert rows["d"].lang_guess == "fr"
+    assert rows["d"].stopword_ratio == round(25 / 35, 6)
+
+    from smartreader_spark.sqltext import sql_string
+
+    for lang, words in real.items():
+        assert all(sql_string(w) == f"'{w}'" for w in (lang, *words))
