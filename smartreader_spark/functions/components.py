@@ -46,6 +46,7 @@ from smartreader_spark.functions.dedup import (
     _sf_simhash_pairs,
     _spread_docs,
 )
+from smartreader_spark.observed import observed_value
 
 MAX_ITER = 25
 
@@ -81,13 +82,15 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     # action that materializes the round (CollectMetrics is evaluated
     # while the partitions stream into the checkpoint), so each round is
     # ONE driver action instead of two — the per-round scheduling
-    # latency was the measured floor of this operator (r7).
+    # latency was the measured floor of this operator (r7). The wait on
+    # the metric is bounded; a metric not posted in time costs the round
+    # one aggregate over its checkpoint instead.
+    label_sum = F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
+
     def _ckpt_with_sum(df: DataFrame):
         obs = Observation()
-        ck = df.observe(
-            obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-        ).localCheckpoint(eager=True)
-        return ck, obs.get["s"]
+        ck = df.observe(obs, label_sum).localCheckpoint(eager=True)
+        return ck, observed_value(obs, "s", lambda: ck.agg(label_sum).collect()[0][0])
 
     labels, prev_sum = _ckpt_with_sum(
         vertices.select(F.col("doc_id"), F.col("doc_id").alias("component"))

@@ -82,8 +82,6 @@ _ALLOWED_IN_TABLE = _TABLE_CTX_TAGS | frozenset(
 
 _HEAD_OK = frozenset(["meta", "title", "link", "style", "script", "base", "noscript", "template"])
 
-_WS_RE = re.compile(r"\s+")
-
 _ESCAPE_TEXT = {"&": "&amp;", "<": "&lt;", ">": "&gt;"}
 _ESCAPE_ATTR = {"&": "&amp;", '"': "&quot;", "<": "&lt;", ">": "&gt;"}
 _TEXT_ESC_RE = re.compile(r"[&<>]")
@@ -883,7 +881,7 @@ def get_inner_text(el: Element | None, normalize_spaces: bool = True) -> str:
         raw, norm = el._it_cache
         return norm if normalize_spaces else raw
     raw = el.text_content.strip()
-    norm = _WS_RE.sub(" ", raw)
+    norm = " ".join(raw.split())
     el._it_epoch = epoch
     el._it_cache = (raw, norm)
     return norm if normalize_spaces else raw

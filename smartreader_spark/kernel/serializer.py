@@ -116,8 +116,7 @@ def _direct_text(el: Element) -> str:
             if tag in MEDIA_TAGS or tag == "figure" or tag in TEXT_BLOCK_TAGS:
                 continue
             stack.extend(reversed(n.child_nodes))  # type: ignore[attr-defined]
-    text = "".join(out).strip()
-    return re.sub(r"\s+", " ", text)
+    return " ".join("".join(out).split())
 
 
 def dom_to_output_spans(root: Element) -> list[dict]:

@@ -17,26 +17,41 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from smartreader_spark.observed import observed_value
+
+#: the ledger columns of the extraction output. Reading with an explicit
+#: schema skips the footer-inference job, and an existing output
+#: directory with no files yet reads as an empty ledger.
+LEDGER_SCHEMA = "doc_id string, error string"
 
 
 def remaining_input(input_df: DataFrame, ledger_df: DataFrame | None) -> DataFrame:
-    """Anti-join input against the done-ledger. Spark chooses broadcast for
-    a small ledger under AQE; we hint it when the ledger is provably small."""
+    """Anti-join input against the done-ledger. No distinct: a left-anti
+    join keeps an input row once however many ledger rows match it, so a
+    doc with several output rows (retried after an error) costs nothing
+    and there is no extra shuffle. The planner broadcasts a ledger whose
+    estimated size is under spark.sql.autoBroadcastJoinThreshold; AQE can
+    still switch a larger one to a broadcast at run time."""
     if ledger_df is None:
         return input_df
-    done = ledger_df.select("doc_id").distinct()
-    return input_df.join(done, "doc_id", "left_anti")
+    return input_df.join(ledger_df.select("doc_id"), "doc_id", "left_anti")
 
 
 def load_ledger(
     spark: SparkSession,
     output_path: str,
     done_predicate: "F.Column | None" = None,
+    schema: str = LEDGER_SCHEMA,
 ) -> DataFrame | None:
     """The output table IS the ledger (doc_id projection → column-pruned,
-    predicate-pushed scan).
+    predicate-pushed scan). None only when `output_path` does not exist
+    yet; an unreadable ledger fails the job that scans it (answering
+    "nothing done" would extract every document again and append
+    duplicate rows).
 
     `done_predicate` marks rows a resume should NOT retry; the default
     (`error IS NULL`) retries every errored doc — right for the HTML leg
@@ -44,18 +59,12 @@ def load_ledger(
     pass a wider predicate: the PDF leg uses
     `pdf_ingest.pdf_done_predicate()` (= error IS NULL OR
     is_permanent_error()) so permanently-bad blobs are ledgered as done
-    instead of being re-parsed on every resume."""
-    try:
-        if os.path.exists(output_path):
-            pred = (
-                done_predicate
-                if done_predicate is not None
-                else F.col("error").isNull()
-            )
-            return spark.read.parquet(output_path).filter(pred).select("doc_id")
-    except Exception:
+    instead of being re-parsed on every resume. `schema` is the ledger
+    columns' DDL; the PDF leg's doc_id is a long."""
+    if not os.path.exists(output_path):
         return None
-    return None
+    pred = done_predicate if done_predicate is not None else F.col("error").isNull()
+    return spark.read.schema(schema).parquet(output_path).filter(pred).select("doc_id")
 
 
 def read_extracted(spark: SparkSession, output_path: str) -> DataFrame:
@@ -129,7 +138,7 @@ def run_resumable_extraction(
     output (append-only parquet). Consumers must read through
     `read_extracted` (error-free row wins, then latest run) or filter
     `error IS NULL`; on Iceberg the MERGE-INTO path upserts instead."""
-    from .extract import extract_articles
+    from .extract import EXTRACT_SCHEMA, extract_articles
 
     run_id = run_id or f"run-{time.time_ns()}"
     ledger = load_ledger(spark, output_path)
@@ -149,16 +158,22 @@ def run_resumable_extraction(
     # the (possibly huge) output table is never rescanned, and re-reading
     # the committed files (instead of a cached plan) is immune to the
     # ledger anti-join now seeing this run's own output
-    delta = spark.read.parquet(output_path).filter(F.col("run_id") == run_id)
+    delta = (
+        spark.read.schema(
+            T.StructType(EXTRACT_SCHEMA.fields + [T.StructField("run_id", T.StringType())])
+        )
+        .parquet(output_path)
+        .filter(F.col("run_id") == run_id)
+    )
     lineage = lineage_metrics(delta.drop("run_id")).withColumn("run_id", F.lit(run_id))
     lineage_path = output_path.rstrip("/") + "_lineage"
-    lineage.write.mode("append").parquet(lineage_path)
-
-    run_docs = (
-        spark.read.parquet(lineage_path)
-        .filter(F.col("run_id") == run_id)
-        .agg(F.sum("docs"))
-        .collect()[0][0]
-        or 0
+    # the run's doc count is observed while the lineage is written, not
+    # read back from it
+    obs = Observation()
+    lineage.observe(obs, F.sum("docs").alias("docs")).write.mode("append").parquet(
+        lineage_path
     )
-    return {"run_id": run_id, "output_path": output_path, "run_docs": int(run_docs)}
+    run_docs = observed_value(
+        obs, "docs", lambda: lineage.agg(F.sum("docs")).collect()[0][0]
+    )
+    return {"run_id": run_id, "output_path": output_path, "run_docs": int(run_docs or 0)}

@@ -94,7 +94,10 @@ def run_resumable_pdf_ingest(
     from .checkpoint import load_ledger, remaining_input
 
     run_id = run_id or f"pdfrun-{time.time_ns()}"
-    ledger = load_ledger(spark, output_path, done_predicate=pdf_done_predicate())
+    ledger = load_ledger(
+        spark, output_path, done_predicate=pdf_done_predicate(),
+        schema="doc_id long, error string",
+    )
     todo = remaining_input(input_df, ledger)
     out = pdf_to_span_table(todo, num_partitions=num_partitions)
     out.withColumn("run_id", F.lit(run_id)).write.mode("append").partitionBy(

@@ -96,6 +96,26 @@ def test_components_observed_convergence_is_stable(spark):
     assert 1 < r1 <= 10  # pointer jumping: ~log2(63), never 63
 
 
+def test_components_convergence_sum_falls_back_when_metrics_never_arrive(
+    spark, monkeypatch
+):
+    # a round whose observed label sum is never posted must not hang:
+    # the bounded wait runs the sum as an aggregate, same labels, same
+    # rounds
+    import smartreader_spark.functions.components as C
+    from smartreader_spark import observed
+    from test_checkpoint import NeverPosted
+
+    n = 16
+    edges = [(i, i + 1) for i in range(n - 1)]
+    _components(spark, n, edges)
+    rounds = C.LAST_ROUNDS
+    monkeypatch.setattr(C, "Observation", NeverPosted)
+    monkeypatch.setattr(observed, "OBSERVED_WAIT_S", 0.1)
+    assert _components(spark, n, edges) == {i: 0 for i in range(n)}
+    assert C.LAST_ROUNDS == rounds
+
+
 def test_dedup_components_labels_every_document(spark):
     from smartreader_spark.functions.components import dedup_components
 

@@ -7,8 +7,11 @@ TextUtilityTests.cs) re-expressed for the Python kernel.
 
 import json
 import os
+import unicodedata
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from smartreader_spark.kernel.dom import (
     get_inner_text,
@@ -33,6 +36,7 @@ from smartreader_spark.kernel.serializer import (
     input_spans_to_html,
 )
 from smartreader_spark.kernel.textkit import (
+    _count_letters,
     chars_per_minute,
     convert_to_plaintext,
     text_similarity,
@@ -97,6 +101,25 @@ def test_chars_per_minute():
     assert chars_per_minute("en-US") == 987
     assert chars_per_minute("zz") == 960
     assert chars_per_minute(None) == 960
+
+
+def _count_letters_twin(text):
+    """The reference's loop: one UTF-16 code unit per char, except ' ' and
+    punctuation weigh 0 and an astral char (a surrogate pair) weighs 2."""
+    n = 0
+    for ch in text:
+        if ord(ch) > 0xFFFF:
+            n += 2
+        elif ch != " " and not unicodedata.category(ch).startswith("P"):
+            n += 1
+    return n
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.text(alphabet=st.characters(codec=None, exclude_categories=()), max_size=200))
+@example("a\U0001F31F b, c\u2026 \u201cq\u201d \U0001039F \ud800x\u00a0\t")
+def test_count_letters_matches_reference_loop(text):
+    assert _count_letters(text) == _count_letters_twin(text)
 
 
 # ---- title / metadata -----------------------------------------------------
