@@ -41,17 +41,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from smartreader_spark.functions.dedup import (
-    _load_documents,
-    _sf_simhash_pairs,
-    _spread_docs,
-)
+from smartreader_spark.functions.dedup import _load_documents, _sf_simhash_pairs
+from smartreader_spark.functions.similarity import _spread
 from smartreader_spark.observed import observed_value
 
 MAX_ITER = 25
 
 # instrumentation: rounds the last connected_components call needed to
-# converge (read by tools/scale_step_components.py — the scale claim is
+# converge (read by `tools/scale_step.py components` — the scale claim is
 # that this stays O(log n) while the input grows)
 LAST_ROUNDS = 0
 
@@ -187,9 +184,7 @@ def dedup_family_keep_best(spark: SparkSession, sf_dir: str,
     members. Reference parity: SmartReader is single-document; this
     serves SURVEY §2's training-data pipeline tier with
     dedup_components."""
-    docs = _spread_docs(
-        _load_documents(spark, sf_dir).select("doc_id", "n_chars")
-    )
+    docs = _spread(_load_documents(spark, sf_dir).select("doc_id", "n_chars"))
     pairs = _sf_simhash_pairs(spark, sf_dir, max_hamming=max_hamming).select(
         "doc_a", "doc_b"
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..memo import SessionMemo
+from .similarity import _spread
 
 NGRAM_N = 3
 #: b×r LSH banding (VERDICT r5 #3): 8 bands of r=4 concatenated
@@ -37,17 +38,6 @@ MINHASH_ROWS = 4
 
 def _load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _spread_docs(docs: DataFrame) -> DataFrame:
-    """r7: the sf documents table is one parquet file / one row group, so
-    its scan feeds at most ~2 tasks (guide §2.5 unsplittable input);
-    repartition right after the read before token-explode-heavy work.
-    Applied at the sf loader call sites only — DataFrame-level
-    *_for_docs entry points leave the caller's partitioning alone."""
-    from .similarity import _spread
-
-    return _spread(docs)
 
 
 def _norm_text(col):
@@ -205,7 +195,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str,
     (measured: 239.9 s at sf1.0 on 32 cores). So the grouping key is
     salted: side A carries salt = vec_id mod S, side B is exploded over
     all S salts, splitting every bucket into S independent slices."""
-    from .similarity import _dim_of, _spread, _srp_bucket, cosine
+    from .similarity import _dim_of, _srp_bucket, cosine
 
     def _emb():
         return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -413,7 +403,7 @@ def _sf_simhash_pairs(spark: SparkSession, sf_dir: str,
                       max_hamming: int = 3,
                       max_bucket_size: int | None = SIMHASH_MAX_BUCKET) -> DataFrame:
     def build():
-        docs = _spread_docs(_load_documents(spark, sf_dir).select("doc_id", "text"))
+        docs = _spread(_load_documents(spark, sf_dir).select("doc_id", "text"))
         return simhash_pairs_for_docs(
             docs, max_hamming=max_hamming, max_bucket_size=max_bucket_size
         ).localCheckpoint(eager=True)
@@ -519,7 +509,7 @@ def simhash_oversized_buckets(spark: SparkSession, sf_dir: str,
     """Audit companion to `simhash_near_dup_pairs`: the (band, bandbits,
     bucket_n) buckets the skew valve dropped — record it alongside the
     dedup run's lineage so the recall trade is observable, not silent."""
-    docs = _spread_docs(_load_documents(spark, sf_dir).select("doc_id", "text"))
+    docs = _spread(_load_documents(spark, sf_dir).select("doc_id", "text"))
     return oversized_buckets_for_docs(docs, max_bucket_size=max_bucket_size)
 
 
@@ -539,7 +529,7 @@ def oversized_buckets_for_docs(docs: DataFrame,
 
 
 def _simhash_wide(spark: SparkSession, sf_dir: str, n_bits: int = 60) -> DataFrame:
-    docs = _spread_docs(_load_documents(spark, sf_dir).select("doc_id", "text"))
+    docs = _spread(_load_documents(spark, sf_dir).select("doc_id", "text"))
     return simhash_wide_signatures(docs, n_bits=n_bits)
 
 
@@ -579,7 +569,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash per document: for bit i, sign = Σ_tokens (bit_i(md5
     prefix) ? 1 : −1); bit set when sign > 0. Pure expressions: the md5
     prefix converts via conv(hex,16,10), bits via shiftright/bitwise-and."""
-    docs = _spread_docs(_load_documents(spark, sf_dir).select("doc_id", "text"))
+    docs = _spread(_load_documents(spark, sf_dir).select("doc_id", "text"))
     toks = docs.select(
         "doc_id", F.explode(F.array_distinct(_tokens(F.col("text")))).alias("tok")
     ).withColumn("h", F.conv(F.substring(F.md5("tok"), 1, 4), 16, 10).cast("long"))

@@ -92,7 +92,12 @@ def _spread(df: DataFrame) -> DataFrame:
     """Spread a small-file scan over the cluster before map-heavy work
     (scale-adaptive: defaultParallelism tracks the cluster size; on a
     100 TB many-file input the extra exchange is metadata-cheap relative
-    to the compute it unblocks, and at sf sizes it moves ~MBs)."""
+    to the compute it unblocks, and at sf sizes it moves ~MBs).
+
+    Applied right after an sf loader's read (the sf tables are one parquet
+    file / one row group, so the scan feeds at most ~2 tasks); the
+    DataFrame-level entry points (the *_for_docs functions) leave the
+    caller's partitioning alone."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 

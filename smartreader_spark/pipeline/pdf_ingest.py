@@ -16,19 +16,12 @@ resume ledger then retries them, pipeline/checkpoint.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import types as T
 
-SPAN_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("kind", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("offset", T.IntegerType()),
-        ]
-    )
-)
+from smartreader_spark.observed import observed_value
+
+from .extract import SPAN_TYPE, spread_repartition
 
 PDF_SPANS_SCHEMA = T.StructType(
     [
@@ -100,11 +93,15 @@ def run_resumable_pdf_ingest(
     )
     todo = remaining_input(input_df, ledger)
     out = pdf_to_span_table(todo, num_partitions=num_partitions)
-    out.withColumn("run_id", F.lit(run_id)).write.mode("append").partitionBy(
-        "run_id"
-    ).parquet(output_path)
-    run_docs = (
-        spark.read.parquet(output_path).filter(F.col("run_id") == run_id).count()
+    # the run's doc count is observed while its rows are written, not read
+    # back from the output
+    obs = Observation()
+    out.withColumn("run_id", F.lit(run_id)).observe(
+        obs, F.count("*").alias("docs")
+    ).write.mode("append").partitionBy("run_id").parquet(output_path)
+    run_docs = observed_value(
+        obs, "docs",
+        lambda: spark.read.parquet(output_path).filter(F.col("run_id") == run_id).count(),
     )
     return {"run_id": run_id, "output_path": output_path, "run_docs": int(run_docs)}
 
@@ -138,8 +135,6 @@ def pdf_to_span_table(df: DataFrame, *, num_partitions: int | None = None) -> Da
     """(doc_id, pdf) → (doc_id, spans, n_pdf_bytes, error) rows in the
     interleaved-span input shape. `df` needs columns doc_id:long and
     pdf:binary; everything else is pruned before the shuffle."""
-    from .extract import spread_repartition
-
     pruned = df.select("doc_id", "pdf")
     if num_partitions:
         pruned = spread_repartition(pruned, num_partitions)

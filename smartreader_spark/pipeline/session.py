@@ -6,30 +6,24 @@ import os
 
 from pyspark.sql import SparkSession
 
-# THE Arrow batch-size surface (env SMARTREADER_ARROW_BATCH): every
-# session factory in the repo (here, bench.py, tests) derives its
-# spark.sql.execution.arrow.maxRecordsPerBatch from this one knob.
-# 8 is measured-best on this box (BASELINE.md r2 sweep: 4→8 at 24
-# workers cut best wide walls 16.7s→8.2s; 16 regressed tail latency on
-# MB-sized pages). The record-count cap approximates a BYTE cap only
-# when batch doc sizes are homogeneous — which is exactly what
-# extract.salted_size_bucket_repartition provides (each partition holds
-# docs of one size bucket), so tune the two together: coarse buckets +
-# this cap ⇒ bounded, even Arrow transfer per worker.
-ARROW_MAX_RECORDS = int(os.environ.get("SMARTREADER_ARROW_BATCH", "8"))
+# Arrow record cap of the sessions `make_session` builds. 8 is the r2
+# sweep's best for MB-sized pages at 24 workers on 32 cores (BASELINE.md:
+# 4→8 cut best wide walls 16.7s→8.2s; 16 regressed tail latency). A record
+# cap approximates a byte cap only when a batch's documents are of similar
+# size, which extract.salted_size_bucket_repartition provides (each
+# partition holds docs of one size bucket). bench.py and perfbench/layers.py
+# import this value; the test sessions set no cap of their own.
+ARROW_MAX_RECORDS = 8
 
 
 def make_session(
     master: str | None = None,
     app_name: str = "smartreader-spark",
     shuffle_partitions: int | None = None,
-    arrow_max_records: int | None = None,
 ) -> SparkSession:
     """Local/test session. On a real cluster these land in spark-submit
     conf; the Arrow batch cap bounds Python-worker memory when documents
     are MB-sized (median fixture ≈115 KB → a 256-doc batch ≈30 MB)."""
-    if arrow_max_records is None:
-        arrow_max_records = ARROW_MAX_RECORDS
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
@@ -39,7 +33,7 @@ def make_session(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_max_records))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
         .config("spark.sql.files.maxPartitionBytes", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "12g"))
         # Arrow feeding of MB-sized documents churns the old gen; G1's
