@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..memo import SessionMemo
-from .similarity import _spread
+from .similarity import _dim_of, _load, _spread, _srp_bucket
+from .textqa import _norm
 
 NGRAM_N = 3
 #: b×r LSH banding (VERDICT r5 #3): 8 bands of r=4 concatenated
@@ -40,12 +41,8 @@ def _load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _norm_text(col):
-    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
-
-
 def _tokens(col):
-    return F.split(_norm_text(col), " ")
+    return F.split(_norm(col), " ")
 
 
 def _shingle_stream(docs: DataFrame) -> DataFrame:
@@ -164,17 +161,15 @@ def _pair_cosine_arrow_fn(dim: int, precut: float):
 
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str,
                              threshold: float = 0.4,
-                             n_planes: int = 4,
-                             exact: bool = False) -> DataFrame:
+                             n_planes: int = 4) -> DataFrame:
     """APPROXIMATE embedding-cosine near-duplicate pairs: only pairs whose
     embeddings share an SRP (sign-random-projection) bucket are candidates
     — an above-threshold pair split by a sign flip on any plane is NOT
     returned (the standard LSH recall/cost trade; fewer planes → higher
-    recall, more candidates). Pass ``exact=True`` for the all-pairs exact
-    semantics — correct at any threshold but O(n²): a small-corpus /
-    recall-audit tool, not a 100-TB path.
+    recall, more candidates). The all-pairs exact twin, O(n²), lives in
+    tests/test_functions.py as the recall reference.
 
-    Scale shape of the default:
+    Scale shape:
 
     1. candidate generation — SRP bucket id (same deterministic
        md5-derived hyperplanes as similarity._srp_bucket, plane weights
@@ -195,64 +190,42 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str,
     (measured: 239.9 s at sf1.0 on 32 cores). So the grouping key is
     salted: side A carries salt = vec_id mod S, side B is exploded over
     all S salts, splitting every bucket into S independent slices."""
-    from .similarity import _dim_of, _srp_bucket, cosine
+    schema = "vec_a bigint, vec_b bigint, cosine double"
+    dim = _dim_of(spark, sf_dir)
+    if dim is None:  # empty table
+        return spark.createDataFrame([], schema)
+    n_salt = 8  # cogroup fan-out: 2^n_planes buckets × 8 salts
 
-    def _emb():
-        return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias(
-                "embedding"
-            ),
+    # each cogroup side gets its OWN scan subtree: a self-cogroup
+    # from one shared plan trips an analyzer dedup defect where the
+    # FlatMapCoGroupsInArrow node keeps the LEFT side's expression
+    # ids in its right-attribute list, and column pruning then
+    # strips the right child down to the grouping keys (observed:
+    # right table arrived as [bucket, salt] under count()).
+    # Independent reads have distinct ids from the start; the extra
+    # 20k-row bucket computation is noise.
+    def _emb_bucketed():
+        return _spread(_load(spark, sf_dir)).withColumn(
+            "bucket", _srp_bucket(F.col("embedding"), n_planes, dim)
         )
 
-    if exact:
-        emb = _emb()
-        a = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
-        b = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-        pairs = a.join(b, F.col("vec_a") < F.col("vec_b")).withColumn(
-            "cosine", F.round(cosine(F.col("ea"), F.col("eb")), 6)
-        )
-    else:
-        dim = _dim_of(spark, sf_dir)
-        if dim is None:  # empty table
-            return spark.createDataFrame(
-                [], "vec_a bigint, vec_b bigint, cosine double"
-            )
-        n_salt = 8  # cogroup fan-out: 2^n_planes buckets × 8 salts
-
-        # each cogroup side gets its OWN scan subtree: a self-cogroup
-        # from one shared plan trips an analyzer dedup defect where the
-        # FlatMapCoGroupsInArrow node keeps the LEFT side's expression
-        # ids in its right-attribute list, and column pruning then
-        # strips the right child down to the grouping keys (observed:
-        # right table arrived as [bucket, salt] under count()).
-        # Independent reads have distinct ids from the start; the extra
-        # 20k-row bucket computation is noise.
-        def _emb_bucketed():
-            return _spread(_emb()).withColumn(
-                "bucket", _srp_bucket(F.col("embedding"), n_planes, dim=dim)
-            )
-
-        a = _emb_bucketed().select(
-            "bucket",
-            F.pmod(F.col("vec_id"), F.lit(n_salt)).cast("int").alias("salt"),
-            "vec_id",
-            "embedding",
-        )
-        b = _emb_bucketed().select(
-            "bucket",
-            F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))).alias("salt"),
-            "vec_id",
-            "embedding",
-        )
-        pairs = (
-            a.groupBy("bucket", "salt")
-            .cogroup(b.groupBy("bucket", "salt"))
-            .applyInArrow(
-                _pair_cosine_arrow_fn(dim, threshold - 2e-6),
-                "vec_a bigint, vec_b bigint, cosine double",
-            )
-        )
+    a = _emb_bucketed().select(
+        "bucket",
+        F.pmod(F.col("vec_id"), F.lit(n_salt)).cast("int").alias("salt"),
+        "vec_id",
+        "embedding",
+    )
+    b = _emb_bucketed().select(
+        "bucket",
+        F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))).alias("salt"),
+        "vec_id",
+        "embedding",
+    )
+    pairs = (
+        a.groupBy("bucket", "salt")
+        .cogroup(b.groupBy("bucket", "salt"))
+        .applyInArrow(_pair_cosine_arrow_fn(dim, threshold - 2e-6), schema)
+    )
     return (
         pairs.filter(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", "cosine")
@@ -266,7 +239,7 @@ def exact_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation at any scale."""
     docs = _load_documents(spark, sf_dir).select("doc_id", "text")
     return (
-        docs.withColumn("fp", F.md5(_norm_text(F.col("text"))))
+        docs.withColumn("fp", F.md5(_norm(F.col("text"))))
         .groupBy("fp")
         .agg(
             F.count("*").alias("n_docs"),
@@ -534,10 +507,12 @@ def _simhash_wide(spark: SparkSession, sf_dir: str, n_bits: int = 60) -> DataFra
 
 
 def simhash_wide_signatures(docs: DataFrame, n_bits: int = 60) -> DataFrame:
-    """n-bit SimHash per document (same construction as
-    simhash_signatures, wider hash prefix: ceil(n/4) md5 hex chars).
-    `docs` needs (doc_id, text). `n_bits` is at most 60: a wider md5
-    prefix (16 hex chars) overflows BIGINT for half of all tokens."""
+    """n-bit SimHash per document: for bit i, sign = Σ_tokens (bit_i(md5
+    prefix) ? 1 : −1); bit set when sign > 0. Pure expressions: the
+    ceil(n/4)-hex-char md5 prefix converts via conv(hex,16,10), bits via
+    shiftright/bitwise-and. `docs` needs (doc_id, text). `n_bits` is at
+    most 60: a wider md5 prefix (16 hex chars) overflows BIGINT for half
+    of all tokens."""
     if not 1 <= n_bits <= 60:
         raise ValueError(f"simhash n_bits must be in 1..60, got {n_bits}")
     n_hex = (n_bits + 3) // 4
@@ -566,24 +541,10 @@ def simhash_wide_signatures(docs: DataFrame, n_bits: int = 60) -> DataFrame:
 
 
 def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash per document: for bit i, sign = Σ_tokens (bit_i(md5
-    prefix) ? 1 : −1); bit set when sign > 0. Pure expressions: the md5
-    prefix converts via conv(hex,16,10), bits via shiftright/bitwise-and."""
-    docs = _spread(_load_documents(spark, sf_dir).select("doc_id", "text"))
-    toks = docs.select(
-        "doc_id", F.explode(F.array_distinct(_tokens(F.col("text")))).alias("tok")
-    ).withColumn("h", F.conv(F.substring(F.md5("tok"), 1, 4), 16, 10).cast("long"))
-
-    # branch-free + expr-string construction: sign(Σ±1) > 0 ⟺
-    # 2*Σbit_i > n_tokens (see simhash_wide_signatures) — identical
-    # integer signatures, smaller generated aggregate, ~1 py4j call per
-    # expression instead of ~6.
-    agg = toks.groupBy("doc_id").agg(
-        F.expr("count(*) AS nt"),
-        *[F.expr(f"sum(shiftright(h, {i}) & 1) AS b{i}") for i in range(16)],
+    """16-bit SimHash per document, as INT: `simhash_wide_signatures`
+    with n_bits=16 (a 4-hex-char md5 prefix)."""
+    return (
+        _simhash_wide(spark, sf_dir, n_bits=16)
+        .select("doc_id", F.col("simhash").cast("int").alias("simhash"))
+        .orderBy("doc_id")
     )
-    bits = " + ".join(f"if(b{i} * 2 > nt, {1 << i}, 0)" for i in range(16))
-    sim = agg.select(
-        "doc_id", F.expr(f"CAST(({bits}) AS INT) AS simhash")
-    ).orderBy("doc_id")
-    return sim

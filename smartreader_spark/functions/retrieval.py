@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .textqa import _norm
+
 BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TOPK = 5
@@ -46,10 +48,6 @@ BM25_QUERIES = [
 
 def _load(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _norm(col):
-    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
 def bm25_search(spark: SparkSession, sf_dir: str,

@@ -13,9 +13,23 @@
   shuffle, zero join); queries probe their `nprobe` nearest cells and
   score exactly within the probed inverted lists via one broadcast
   equi-join on the cell id.
+* ann_pq — product quantization with asymmetric distance computation:
+  per-subspace codebooks and per-query lookup tables are driver state
+  inlined as literals, so encoding and scoring are map-side expressions.
+* semantic_dedup — SemDeDup: the ivf_topk codebook assigns cells, and
+  near-duplicates are scored only within a cell.
 
 No Python UDFs; the dot products run inside codegen'd higher-order
 functions. Scores are rounded to 6 decimals for cross-engine comparison.
+
+Inputs without a codebook. ivf_topk, semantic_dedup and ann_pq collect
+their codebook (or PQ training sample) from a fixed vec_id range. On an
+empty `embeddings` table every operator returns its typed empty result,
+as does a top-k operator whose query range holds no rows; on a non-empty
+table whose sample comes back short, the operator raises
+ValueError naming the vec_id range it needs (`_empty_or_raise`). The
+check runs only after a short sample, so the normal path submits no
+extra Spark job.
 """
 
 from __future__ import annotations
@@ -27,6 +41,9 @@ DEFAULT_K = 5
 DEFAULT_QUERIES = 8  # vec_id < 8 are the query set (deterministic)
 IVF_CELLS = 16      # coarse-quantizer codebook size for ivf_topk
 IVF_NPROBE = 4      # cells probed per query
+
+_TOPK_SCHEMA = "query_id bigint, vec_id bigint, score double, rank int"
+_SEMDEDUP_SCHEMA = "vec_id bigint, cell int, dup_of bigint, is_kept boolean"
 
 
 def _load(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,6 +105,16 @@ def _dim_of(spark: SparkSession, sf_dir: str):
     return int(row[0]["d"]) if row else None
 
 
+def _empty_or_raise(spark: SparkSession, sf_dir: str, schema: str,
+                    need: str) -> DataFrame:
+    """Called once a driver-side codebook sample came back short: an
+    empty `embeddings` table gives the typed empty result `schema`; any
+    other table lacks the rows `need` describes, so raise."""
+    if _dim_of(spark, sf_dir) is None:
+        return spark.createDataFrame([], schema)
+    raise ValueError(f"{need}; {sf_dir}/embeddings.parquet lacks them")
+
+
 def _spread(df: DataFrame) -> DataFrame:
     """Spread a small-file scan over the cluster before map-heavy work
     (scale-adaptive: defaultParallelism tracks the cluster size; on a
@@ -128,10 +155,6 @@ def _norm_py(vals) -> float:
     return math.sqrt(acc)
 
 
-def cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def brute_force_topk(spark: SparkSession, sf_dir: str,
                      k: int = DEFAULT_K, n_queries: int = DEFAULT_QUERIES) -> DataFrame:
     """Exact top-k cosine neighbors for the first `n_queries` vectors.
@@ -169,45 +192,26 @@ def brute_force_topk(spark: SparkSession, sf_dir: str,
     )
 
 
-def _cell_scores_sql(centroids, emb_name="embedding", norm_name="nrm"):
-    """One-SQL-expression twin of `_cell_scores` for a precomputed
-    row-norm column `norm_name`: scores[i] = round(dot(emb, CB[i]) /
-    (row_norm · ||CB[i]||), 6) with the identical zip_with/aggregate
-    fold and the identical (row_norm · centroid_norm) product order as
-    `cosine` — the codebook folds to ONE array<array<double>> literal
-    and the centroid norms (driver-computed, `_norm_py`, bit-identical)
-    to one literal vector, so plan construction is a single expr parse
-    instead of thousands of py4j calls, and the row norm is evaluated
-    once per row instead of once per centroid."""
+def _cell_scores_sql(centroids):
+    """array<struct<s,nc>> of the rounded cosine of the `embedding`
+    column (row norm precomputed in `nrm`) against every codebook
+    centroid: scores[i] = round(dot(embedding, CB[i]) / (nrm ·
+    ||CB[i]||), 6), the zip_with/aggregate fold with the row norm first
+    in the product. nc = -cell, so lexicographic struct max / sort break
+    score ties toward the SMALLEST cell id (mirrored by `ORDER BY s
+    DESC, cell ASC` in the SQL oracle). The codebook folds to ONE
+    array<array<double>> literal and the centroid norms (driver-computed,
+    `_norm_py`, bit-identical) to one literal vector, so plan
+    construction is a single expr parse instead of thousands of py4j
+    calls, and the row norm is evaluated once per row."""
     cb = _lit_mat_sql(centroids)
     nrms = _lit_vec_sql([_norm_py(c) for c in centroids])
     n = len(centroids)
     return F.expr(
         f"transform(sequence(0, {n - 1}), i -> named_struct("
-        f"'s', round(aggregate(zip_with({emb_name}, {cb}[i], (x, y) -> x * y), "
-        f"0.0D, (acc, v) -> acc + v) / ({norm_name} * {nrms}[i]), 6), "
+        f"'s', round(aggregate(zip_with(embedding, {cb}[i], (x, y) -> x * y), "
+        f"0.0D, (acc, v) -> acc + v) / (nrm * {nrms}[i]), 6), "
         f"'nc', -i))"
-    )
-
-
-def _cell_scores(emb_col, centroids):
-    """array<struct<s,nc>> of the rounded cosine of `emb_col` against
-    every codebook centroid; nc = -cell so lexicographic struct max /
-    sort break score ties toward the SMALLEST cell id (mirrored by
-    `ORDER BY s DESC, cell ASC` in the SQL oracle)."""
-    return F.array(
-        *[
-            F.struct(
-                F.round(
-                    cosine(
-                        emb_col, F.array(*[F.lit(float(x)) for x in c])
-                    ),
-                    6,
-                ).alias("s"),
-                F.lit(-i).alias("nc"),
-            )
-            for i, c in enumerate(centroids)
-        ]
     )
 
 
@@ -247,31 +251,32 @@ def ivf_topk(spark: SparkSession, sf_dir: str,
         .orderBy("vec_id")
         .collect()
     ]
-
-    fast = bool(centroids)
-    if fast:
-        # r7: spread the single-file scan; ONE interpreted row norm per
-        # row (not one per centroid); codebook + centroid norms fold to
-        # SQL literals — identical cosine values (helper block above).
-        # The probe side branches off the PRE-spread scan so its vec_id
-        # filter pushes into the scan — otherwise the broadcast subtree
-        # re-ran the full 20k-row scoring pass to emit 8 query rows
-        # (measured: the scored stage dropped 3.5 s → join-only cost)
-        probe_src = emb.filter(F.col("vec_id") < n_queries).withColumn(
-            "nrm", _norm(F.col("embedding"))
+    if not centroids:
+        return _empty_or_raise(
+            spark, sf_dir, _TOPK_SCHEMA,
+            f"ivf_topk needs codebook rows with vec_id in "
+            f"[{n_queries}, {n_queries + n_cells})",
         )
-        emb = _spread(emb).withColumn("nrm", _norm(F.col("embedding")))
-        scores = _cell_scores_sql(centroids)
-    else:
-        probe_src = emb.filter(F.col("vec_id") < n_queries)
-        scores = _cell_scores(F.col("embedding"), centroids)
+
+    # r7: spread the single-file scan; ONE interpreted row norm per
+    # row (not one per centroid); codebook + centroid norms fold to
+    # SQL literals — identical cosine values (helper block above).
+    # The probe side branches off the PRE-spread scan so its vec_id
+    # filter pushes into the scan — otherwise the broadcast subtree
+    # re-ran the full 20k-row scoring pass to emit 8 query rows
+    # (measured: the scored stage dropped 3.5 s → join-only cost)
+    probe_src = emb.filter(F.col("vec_id") < n_queries).withColumn(
+        "nrm", _norm(F.col("embedding"))
+    )
+    emb = _spread(emb).withColumn("nrm", _norm(F.col("embedding")))
+    scores = _cell_scores_sql(centroids)
     assigned = emb.withColumn(
         "cell", (-F.array_max(scores)["nc"]).cast("int")
     )
     # top-nprobe cells per query: sort the per-cell score structs
     # descending and slice — (s, nc) descending puts score ties on the
     # smallest cell first
-    probe_cols = [
+    probes = probe_src.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q"),
         F.explode(
@@ -280,18 +285,11 @@ def ivf_topk(spark: SparkSession, sf_dir: str,
                 lambda s: (-s["nc"]).cast("int"),
             )
         ).alias("cell"),
-    ]
-    if fast:
-        probe_cols.append(F.col("nrm").alias("qn"))
-    probes = probe_src.select(*probe_cols)
-    if fast:
-        score = F.round(
-            _dot(F.col("q"), F.col("embedding"))
-            / (F.col("qn") * F.col("nrm")),
-            6,
-        )
-    else:
-        score = F.round(cosine(F.col("q"), F.col("embedding")), 6)
+        F.col("nrm").alias("qn"),
+    )
+    score = F.round(
+        _dot(F.col("q"), F.col("embedding")) / (F.col("qn") * F.col("nrm")), 6
+    )
     scored = (
         assigned.join(F.broadcast(probes), ["cell"])
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -328,7 +326,7 @@ def ann_pq(spark: SparkSession, sf_dir: str,
     "doesn't".
 
     Determinism: code assignment takes argmax over 6-decimal-rounded
-    subvector dots (the _cell_scores discipline, tie → smallest
+    subvector dots (the _cell_scores_sql discipline, tie → smallest
     centroid); the ADC lookup tables are quantized to integer
     micro-units driver-side with exact-binary half-up rounding
     (Decimal over the true double — the same value DuckDB's round()
@@ -362,6 +360,14 @@ def ann_pq(spark: SparkSession, sf_dir: str,
         .orderBy("vec_id")
         .collect()
     ]
+    if len(train) < n_cent:
+        return _empty_or_raise(
+            spark, sf_dir, _TOPK_SCHEMA,
+            f"ann_pq needs {n_cent} training rows with vec_id in "
+            f"[{PQ_TRAIN_OFFSET}, {PQ_TRAIN_OFFSET + n_cent})",
+        )
+    if not queries:
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     dim = len(train[0])
     d0 = dim // m_sub
     # sub-codebook: centroid (m, j) = subspace-m slice of training vec j
@@ -471,27 +477,24 @@ def semantic_dedup(spark: SparkSession, sf_dir: str,
     (a projection), so the pair score is a single zip_with dot — not a
     per-pair norm recomputation.
     """
-    from pyspark.sql.window import Window  # noqa: F401  (parity w/ siblings)
-
     emb = _load(spark, sf_dir).select("vec_id", "embedding")
     centroids = [
         r["embedding"]
         for r in emb.filter(F.col("vec_id") < n_cells).orderBy("vec_id").collect()
     ]
-    if centroids:
-        # r7: spread the scan; ONE row norm feeds both the cell scores
-        # and the unit normalization; codebook folds to SQL literals —
-        # identical values (helper block above)
-        emb = _spread(emb).withColumn("nrm", _norm(F.col("embedding")))
-        scores = _cell_scores_sql(centroids)
-        assigned = emb.withColumn(
-            "cell", (-F.array_max(scores)["nc"]).cast("int")
+    if not centroids:
+        return _empty_or_raise(
+            spark, sf_dir, _SEMDEDUP_SCHEMA,
+            f"semantic_dedup needs codebook rows with vec_id in [0, {n_cells})",
         )
-    else:
-        scores = _cell_scores(F.col("embedding"), centroids)
-        assigned = emb.withColumn(
-            "cell", (-F.array_max(scores)["nc"]).cast("int")
-        ).withColumn("nrm", _norm(F.col("embedding")))
+
+    # r7: spread the scan; ONE row norm feeds both the cell scores
+    # and the unit normalization; codebook folds to SQL literals —
+    # identical values (helper block above)
+    emb = _spread(emb).withColumn("nrm", _norm(F.col("embedding")))
+    assigned = emb.withColumn(
+        "cell", (-F.array_max(_cell_scores_sql(centroids))["nc"]).cast("int")
+    )
     unit = assigned.select(
         "vec_id",
         "cell",
@@ -525,11 +528,12 @@ def semantic_dedup(spark: SparkSession, sf_dir: str,
 
 
 def _srp_weights(n_planes: int, dim: int):
-    """Driver-side plane weights — the exact values the in-plan formula
-    produces: int(md5(f"{p}|{i}")[:4], 16) is what conv(substring(md5(…),
-    1,4),16,10)::double yields, /32768.0 and -1.0 are exact in binary
-    (power-of-two divisor; (k-32768)/32768 is representable), so the
-    literal weight is bit-identical to the expression-computed one."""
+    """Driver-side plane weights: weight(p, i) = int(md5(f"{p}|{i}")[:4],
+    16) / 32768 - 1, in [-1, 1). The DuckDB oracle computes the same
+    value in-plan (`_srp_bucket_sql` in __spark_entry__.py:
+    ('0x' || substr(md5(p|i), 1, 4))::INT / 32768.0 - 1.0). /32768.0 and
+    -1.0 are exact in binary (power-of-two divisor; (k-32768)/32768 is
+    representable), so the literal weight is bit-identical to it."""
     import hashlib
 
     return [
@@ -543,57 +547,23 @@ def _srp_weights(n_planes: int, dim: int):
     ]
 
 
-def _srp_bucket(col, n_planes: int = 8, dim=None):
+def _srp_bucket(col, n_planes: int, dim: int):
     """Sign-random-projection bucket id: plane p = deterministic pseudo-
-    random unit-free vector derived from md5(p||i) (same formula is
-    reproducible in SQL); bucket bit p = sign of dot(plane_p, v).
-
-    Without `dim`, the per-plane weight index runs over the row's own
-    embedding length (F.size) so plan construction needs no driver-side
-    action to learn the dimension. With `dim` (r7), the weights are
-    precomputed driver-side (`_srp_weights` — md5 of plan constants, NOT
-    of data) and the plane dots unroll into codegen arithmetic: same
-    bucket bits, no per-element md5/conv at runtime."""
-    if dim:
-        ws = _srp_weights(n_planes, dim)
-        bucket = F.lit(0)
-        for p in range(n_planes):
-            pd = F.aggregate(
-                F.zip_with(
-                    col, F.expr(_lit_vec_sql(ws[p])), lambda x, w: x * w
-                ),
-                F.lit(0.0).cast("double"),
-                lambda acc, v: acc + v,
-            )
-            bucket = bucket + F.when(pd > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        return bucket
-
-    # weight(p, i) = (conv(md5(p|i)[:4],16,10) / 32768) - 1  ∈ [-1, 1)
-    def plane_dot(p):
-        return F.aggregate(
-            F.zip_with(
-                col,
-                F.sequence(F.lit(0), F.size(col) - 1),
-                lambda x, i: x
-                * (
-                    F.conv(
-                        F.substring(
-                            F.md5(F.concat(F.lit(str(p) + "|"), i.cast("string"))), 1, 4
-                        ),
-                        16,
-                        10,
-                    ).cast("double")
-                    / F.lit(32768.0)
-                    - F.lit(1.0)
-                ),
-            ),
+    random unit-free vector derived from md5(p||i) (`_srp_weights`, md5
+    of plan constants, NOT of data — the same formula is reproducible in
+    SQL); bucket bit p = sign of dot(plane_p, v). The weights fold to
+    driver-side literals, so the plane dots are codegen arithmetic with
+    no per-element md5/conv at runtime. `dim` is the embedding length
+    (`_dim_of`)."""
+    ws = _srp_weights(n_planes, dim)
+    bucket = F.lit(0)
+    for p in range(n_planes):
+        pd = F.aggregate(
+            F.zip_with(col, F.expr(_lit_vec_sql(ws[p])), lambda x, w: x * w),
             F.lit(0.0).cast("double"),
             lambda acc, v: acc + v,
         )
-
-    bucket = F.lit(0)
-    for p in range(n_planes):
-        bucket = bucket + F.when(plane_dot(p) > 0, F.lit(1 << p)).otherwise(F.lit(0))
+        bucket = bucket + F.when(pd > 0, F.lit(1 << p)).otherwise(F.lit(0))
     return bucket
 
 
@@ -609,32 +579,23 @@ def lsh_bucketed_topk(spark: SparkSession, sf_dir: str,
     # The query side branches off the PRE-spread scan so its filter
     # pushes into the scan (the ivf broadcast-subtree lesson)
     base = _load(spark, sf_dir).select("vec_id", "embedding")
-    emb = _spread(base)
     dim = _dim_of(spark, sf_dir)
-    emb_b = emb.withColumn(
-        "bucket", _srp_bucket(F.col("embedding"), n_planes, dim=dim)
+    if dim is None:  # empty table
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    emb_b = (
+        _spread(base)
+        .withColumn("bucket", _srp_bucket(F.col("embedding"), n_planes, dim))
+        .withColumn("nrm", _norm(F.col("embedding")))
     )
-    if dim:
-        emb_b = emb_b.withColumn("nrm", _norm(F.col("embedding")))
-        qsrc = base.filter(F.col("vec_id") < n_queries)
-        queries = qsrc.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q"),
-            _srp_bucket(F.col("embedding"), n_planes, dim=dim).alias("qbucket"),
-            _norm(F.col("embedding")).alias("qn"),
-        )
-        score = F.round(
-            _dot(F.col("q"), F.col("embedding"))
-            / (F.col("qn") * F.col("nrm")),
-            6,
-        )
-    else:
-        queries = emb_b.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q"),
-            F.col("bucket").alias("qbucket"),
-        )
-        score = F.round(cosine(F.col("q"), F.col("embedding")), 6)
+    queries = base.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q"),
+        _srp_bucket(F.col("embedding"), n_planes, dim).alias("qbucket"),
+        _norm(F.col("embedding")).alias("qn"),
+    )
+    score = F.round(
+        _dot(F.col("q"), F.col("embedding")) / (F.col("qn") * F.col("nrm")), 6
+    )
     scored = (
         emb_b.join(
             F.broadcast(queries),

@@ -26,6 +26,9 @@ def _load(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _norm(col):
+    """The one text-normalization rule (trim, lower-case, collapse
+    whitespace runs to one space): tokenizers split on it, and it decides
+    what counts as identical text for exact dedup, batch and streaming."""
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 

@@ -10,9 +10,11 @@ from pyspark.sql import SparkSession
 # sweep's best for MB-sized pages at 24 workers on 32 cores (BASELINE.md:
 # 4→8 cut best wide walls 16.7s→8.2s; 16 regressed tail latency). A record
 # cap approximates a byte cap only when a batch's documents are of similar
-# size, which extract.salted_size_bucket_repartition provides (each
-# partition holds docs of one size bucket). bench.py and perfbench/layers.py
-# import this value; the test sessions set no cap of their own.
+# size, and nothing upstream ensures that:
+# extract.salted_size_bucket_repartition hash-partitions a (size bucket ×
+# salt) key, so one partition mixes docs of many size buckets. bench.py and
+# perfbench/layers.py import this value; the test sessions set no cap of
+# their own.
 ARROW_MAX_RECORDS = 8
 
 

@@ -45,7 +45,7 @@ from ..functions.dedup import (
     oversized_buckets_for_docs,
     simhash_pairs_for_docs,
 )
-from ..functions.textqa import STOPWORDS
+from ..functions.textqa import STOPWORDS, _norm
 from ..memo import SessionMemo
 from ..sqltext import sql_string
 from .corpus import wrap_plain_documents
@@ -89,10 +89,6 @@ def doc_text_expr():
             lambda s: s["t"],
         ),
     )
-
-
-def _norm(col):
-    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
 def unified_doc_table(spark: SparkSession, sf_dir: str,

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.textqa import _norm
+
 DEDUP_OUT_SCHEMA = T.StructType(
     [
         T.StructField("fp", T.StringType(), False),
@@ -93,7 +95,7 @@ def stream_dedup_exact(docs_stream: DataFrame) -> DataFrame:
     on it to get the deduplicated stream. The fingerprint matches the
     batch operator (functions/dedup.exact_dedup_groups) so a batch
     backfill and the streaming gate agree."""
-    fp = F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "))
+    fp = F.md5(_norm(F.col("text")))
     keyed = docs_stream.withColumn("fp", fp)
     return (
         keyed.groupBy("fp")

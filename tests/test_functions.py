@@ -300,10 +300,34 @@ def test_simhash_wide_rejects_out_of_range_bits(spark, n_bits):
         simhash_wide_signatures(docs, n_bits=n_bits)
 
 
+def _cosine(a, b):
+    from smartreader_spark.functions.similarity import _dot, _norm
+
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _embedding_pairs_exact_twin(spark, sf_dir, threshold):
+    """All-pairs exact twin of embedding_near_dup_pairs: every pair is a
+    candidate, so it is correct at any threshold but O(n²) — the recall
+    reference for the SRP-bucketed operator, not a production path."""
+    from smartreader_spark.functions.similarity import _load
+
+    emb = _load(spark, sf_dir)
+    a = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
+    b = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
+    return (
+        a.join(b, F.col("vec_a") < F.col("vec_b"))
+        .withColumn("cosine", F.round(_cosine(F.col("ea"), F.col("eb")), 6))
+        .filter(F.col("cosine") >= threshold)
+        .select("vec_a", "vec_b", "cosine")
+        .orderBy("vec_a", "vec_b")
+    )
+
+
 def test_embedding_exact_mode_is_recall_superset(spark):
-    """exact=True returns ALL above-threshold pairs (O(n²) audit tool);
-    the default SRP-bucketed mode must be a subset of it at the same
-    threshold, with identical cosines on the shared pairs."""
+    """The exact twin returns ALL above-threshold pairs; the SRP-bucketed
+    operator must be a subset of it at the same threshold, with identical
+    cosines on the shared pairs."""
     from smartreader_spark.functions.dedup import embedding_near_dup_pairs
 
     approx = {
@@ -312,7 +336,7 @@ def test_embedding_exact_mode_is_recall_superset(spark):
     }
     exact = {
         (r.vec_a, r.vec_b): r.cosine
-        for r in embedding_near_dup_pairs(spark, SF, threshold=0.3, exact=True).collect()
+        for r in _embedding_pairs_exact_twin(spark, SF, threshold=0.3).collect()
     }
     assert set(approx) <= set(exact)
     assert all(exact[k] == v for k, v in approx.items())
@@ -320,7 +344,7 @@ def test_embedding_exact_mode_is_recall_superset(spark):
 
 
 def _embedding_pairs_jvm_twin(spark, sf_dir, threshold, n_planes=4):
-    """Pure-expression twin of embedding_near_dup_pairs' default path:
+    """Pure-expression twin of embedding_near_dup_pairs:
     the same SRP candidates, scored by a salted bucket self-join with
     per-vector norms computed once and the per-pair dot as the
     interpreted zip_with/aggregate fold. (Unrolling that 64-term dot
@@ -331,6 +355,7 @@ def _embedding_pairs_jvm_twin(spark, sf_dir, threshold, n_planes=4):
     from smartreader_spark.functions.similarity import (
         _dim_of,
         _dot,
+        _load,
         _norm,
         _spread,
         _srp_bucket,
@@ -339,12 +364,8 @@ def _embedding_pairs_jvm_twin(spark, sf_dir, threshold, n_planes=4):
     dim = _dim_of(spark, sf_dir)
     n_salt = 32  # slices per bucket (B-side replication)
     n_part = max(2 * spark.sparkContext.defaultParallelism, 16)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    emb = _spread(emb).withColumn(
-        "bucket", _srp_bucket(F.col("embedding"), n_planes, dim=dim)
+    emb = _spread(_load(spark, sf_dir)).withColumn(
+        "bucket", _srp_bucket(F.col("embedding"), n_planes, dim)
     ).withColumn("nrm", _norm(F.col("embedding")))
     a = emb.select(
         "bucket",
@@ -388,17 +409,67 @@ def test_embedding_pairs_arrow_matches_jvm(spark):
         assert ra.cosine.hex() == rj.cosine.hex()
 
 
-def test_embedding_pairs_empty_table(spark, tmp_path):
+def _embedding_ops():
+    from smartreader_spark.functions import similarity as S
     from smartreader_spark.functions.dedup import embedding_near_dup_pairs
 
+    return {
+        "brute_force_topk": S.brute_force_topk,
+        "lsh_bucketed_topk": S.lsh_bucketed_topk,
+        "ivf_topk": S.ivf_topk,
+        "ann_pq": S.ann_pq,
+        "semantic_dedup": S.semantic_dedup,
+        "embedding_near_dup_pairs": embedding_near_dup_pairs,
+    }
+
+
+EMBEDDING_OPS = list(_embedding_ops())
+# the operators that collect a codebook / PQ training sample by vec_id
+CODEBOOK_OPS = ["ivf_topk", "ann_pq", "semantic_dedup"]
+
+
+@pytest.fixture(scope="module")
+def embedding_tables(spark, tmp_path_factory):
+    """An empty `embeddings` table; the sf table with every vec_id shifted
+    by 64, past every query, codebook and training range; and shifted by
+    8, past the query range only."""
+    root = tmp_path_factory.mktemp("embeddings")
     spark.createDataFrame([], "vec_id bigint, embedding array<float>").write.parquet(
-        f"{tmp_path}/embeddings.parquet"
+        f"{root}/empty/embeddings.parquet"
     )
-    out = embedding_near_dup_pairs(spark, str(tmp_path))
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    for name, shift in (("shifted", 64), ("no_queries", 8)):
+        emb.withColumn("vec_id", F.col("vec_id") + shift).write.parquet(
+            f"{root}/{name}/embeddings.parquet"
+        )
+    return {n: f"{root}/{n}" for n in ("empty", "shifted", "no_queries")}
+
+
+@pytest.mark.parametrize("name", EMBEDDING_OPS)
+def test_embedding_op_empty_table(spark, embedding_tables, name):
+    """An empty table gives the operator's typed empty result: no rows,
+    and the column names and types of the result on real input
+    (nullability aside: the empty frame is built from a DDL string)."""
+    op = _embedding_ops()[name]
+    out = op(spark, embedding_tables["empty"])
     assert out.collect() == []
-    assert out.schema.simpleString() == (
-        "struct<vec_a:bigint,vec_b:bigint,cosine:double>"
-    )
+    assert out.schema.simpleString() == op(spark, SF).schema.simpleString()
+
+
+@pytest.mark.parametrize("name", CODEBOOK_OPS)
+def test_embedding_op_missing_codebook_raises(spark, embedding_tables, name):
+    """A non-empty table without the vec_id range the operator samples
+    its codebook from is an input error, named with that range."""
+    with pytest.raises(ValueError, match=r"vec_id in \[\d+, \d+\)"):
+        _embedding_ops()[name](spark, embedding_tables["shifted"])
+
+
+@pytest.mark.parametrize("name", ["brute_force_topk", "lsh_bucketed_topk",
+                                  "ivf_topk", "ann_pq"])
+def test_embedding_topk_without_queries_is_empty(spark, embedding_tables, name):
+    """No vector in the query range: every top-k operator returns no
+    rows, with its codebook or training range still present."""
+    assert _embedding_ops()[name](spark, embedding_tables["no_queries"]).collect() == []
 
 
 # ---------------------------------------------------------------------------
