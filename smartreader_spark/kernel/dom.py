@@ -18,6 +18,14 @@ The node API mirrors the surface the reference uses on AngleSharp
 :492-497, ``GetNextNode`` :508-529), re-expressed as plain Python objects.
 Everything is iterative (no recursion) so 1 MB+ deeply nested pages cannot
 blow the interpreter stack inside an executor.
+
+Each element caches its ``text_content``, its ``get_inner_text`` pair and,
+once ``elements_by_tag`` is asked, a tag index of its subtree. The caches
+are ancestor-scoped: a mutation drops them on the changed node's ancestor
+chain only, since no other subtree's text or elements changed. Removing a
+text-carrying node and inserting one drop the text caches; inserting an
+element or retagging one drops the tag indexes. A removal keeps them:
+index queries skip the elements that are no longer below the root.
 """
 
 from __future__ import annotations
@@ -96,15 +104,28 @@ def _esc_attr(s: str) -> str:
     return _ATTR_ESC_RE.sub(lambda m: _ESCAPE_ATTR[m.group(0)], s)
 
 
-# Global DOM mutation epoch: bumped on any tree/text mutation, used to
-# invalidate per-element text_content caches. Conservative (one mutation
-# anywhere invalidates everything) but correct, and it collapses the
-# O(depth^3) blowup of nested text-density scans to O(depth^2).
-_EPOCH = [0]
+def _carries_text(node: "Node") -> bool:
+    """A text node, or an element with children (childless elements like
+    img/br/hr never carry text)."""
+    return node.node_type == 3 or (node.node_type == 1 and bool(node.child_nodes))  # type: ignore[attr-defined]
 
 
-def _bump_epoch() -> None:
-    _EPOCH[0] += 1
+def _drop_caches(el: "Element | None", text: bool = True, index: bool = True) -> None:
+    """Drop the text caches and/or tag indexes of `el` and its ancestors:
+    the nodes whose text or subtree a mutation below them changed. The
+    per-element caches collapse the O(depth^3) blowup of nested
+    text-density scans to O(depth^2)."""
+    while el is not None:
+        if text:
+            el._tc = None
+            el._it = None
+        if index:
+            el._index = None
+        el = el.parent
+
+
+def _changed_by_insert(parent: "Element", node: "Node") -> None:
+    _drop_caches(parent, text=_carries_text(node), index=node.node_type == 1)
 
 
 class Node:
@@ -127,22 +148,20 @@ class Node:
         if p is not None:
             p.child_nodes.remove(self)
             self.parent = None
-            # text caches only go stale if the removed subtree could have
-            # contributed text: a text node, or an element with children
-            # (childless elements like img/br/hr never carry text)
-            if self.node_type == 3 or (self.node_type == 1 and self.child_nodes):  # type: ignore[attr-defined]
-                _EPOCH[0] += 1
+            # tag indexes stay: their queries skip detached elements
+            if _carries_text(self):
+                _drop_caches(p, index=False)
 
     def replace_with(self, other: "Node") -> None:
         p = self.parent
         if p is None:
             return
+        other.detach()  # first: `other` may be an earlier sibling
         idx = p.child_nodes.index(self)
-        other.detach()
         p.child_nodes[idx] = other
         other.parent = p
         self.parent = None
-        _EPOCH[0] += 1
+        _drop_caches(p)
 
     def detach(self) -> None:
         if self.parent is not None:
@@ -169,17 +188,25 @@ class Node:
 
     @property
     def next_element_sibling(self) -> "Element | None":
-        n = self.next_sibling
-        while n is not None and n.node_type != Node.ELEMENT:
-            n = n.next_sibling
-        return n  # type: ignore[return-value]
+        p = self.parent
+        if p is None:
+            return None
+        sibs = p.child_nodes
+        for i in range(sibs.index(self) + 1, len(sibs)):
+            if sibs[i].node_type == 1:
+                return sibs[i]  # type: ignore[return-value]
+        return None
 
     @property
     def previous_element_sibling(self) -> "Element | None":
-        n = self.previous_sibling
-        while n is not None and n.node_type != Node.ELEMENT:
-            n = n.previous_sibling
-        return n  # type: ignore[return-value]
+        p = self.parent
+        if p is None:
+            return None
+        sibs = p.child_nodes
+        for i in range(sibs.index(self) - 1, -1, -1):
+            if sibs[i].node_type == 1:
+                return sibs[i]  # type: ignore[return-value]
+        return None
 
     @property
     def text_content(self) -> str:
@@ -212,8 +239,7 @@ class Comment(Node):
 
 
 class Element(Node):
-    __slots__ = ("tag", "attrs", "child_nodes", "_score", "_tc_epoch", "_tc_cache",
-                 "_it_epoch", "_it_cache")
+    __slots__ = ("tag", "attrs", "child_nodes", "_score", "_tc", "_it", "_index")
     node_type = Node.ELEMENT
 
     def __init__(self, tag: str, attrs: dict[str, str] | None = None) -> None:
@@ -225,10 +251,11 @@ class Element(Node):
         # reference which round-trips floats through a DOM attribute
         # (SmartReader.cs:881-905); semantics preserved, storage improved.
         self._score: float | None = None
-        self._tc_epoch: int = -1
-        self._tc_cache: str = ""
-        self._it_epoch: int = -1
-        self._it_cache: tuple[str, str] = ("", "")
+        # caches, None when stale (see the module docstring): text_content,
+        # get_inner_text's (stripped, collapsed) pair, the subtree tag index
+        self._tc: str | None = None
+        self._it: tuple[str, str] | None = None
+        self._index: dict[str, list[tuple[int, Element]]] | None = None
 
     # -- attributes ---------------------------------------------------
     def get_attribute(self, name: str) -> str | None:
@@ -279,7 +306,7 @@ class Element(Node):
         node.detach()
         node.parent = self
         self.child_nodes.append(node)
-        _EPOCH[0] += 1
+        _changed_by_insert(self, node)
         return node
 
     def insert_before(self, node: Node, ref: Node | None) -> Node:
@@ -289,15 +316,15 @@ class Element(Node):
         idx = self.child_nodes.index(ref)
         node.parent = self
         self.child_nodes.insert(idx, node)
-        _EPOCH[0] += 1
+        _changed_by_insert(self, node)
         return node
 
     # -- text ---------------------------------------------------------
     @property
     def text_content(self) -> str:
-        epoch = _EPOCH[0]
-        if self._tc_epoch == epoch:
-            return self._tc_cache
+        text = self._tc
+        if text is not None:
+            return text
         out: list[str] = []
         stack: list[Node] = list(reversed(self.child_nodes))
         while stack:
@@ -306,21 +333,24 @@ class Element(Node):
             if t == Node.TEXT:
                 out.append(n.data)  # type: ignore[attr-defined]
             elif t == Node.ELEMENT:
-                if n._tc_epoch == epoch:  # type: ignore[attr-defined]
-                    out.append(n._tc_cache)  # type: ignore[attr-defined]
+                cached = n._tc  # type: ignore[attr-defined]
+                if cached is not None:
+                    out.append(cached)
                 else:
                     stack.extend(reversed(n.child_nodes))  # type: ignore[attr-defined]
-        text = "".join(out)
-        self._tc_epoch = epoch
-        self._tc_cache = text
+        text = self._tc = "".join(out)
         return text
 
     @text_content.setter
     def text_content(self, value: str) -> None:
-        for c in self.child_nodes:
+        """Replace every child with one text node (no node when `value` is
+        empty, so ``el.text_content = ""`` empties `el`)."""
+        kids = self.child_nodes
+        for c in kids:
             c.parent = None
         self.child_nodes = []
-        _EPOCH[0] += 1
+        if kids:
+            _drop_caches(self, index=False)
         if value:
             self.append_child(TextNode(value))
 
@@ -359,6 +389,49 @@ class Element(Node):
                 if kids:
                     extend(reversed(kids))
         return out
+
+    def elements_by_tag(self, *tags: str) -> list["Element"]:
+        """``get_elements_by_tag_name`` (same snapshot, same document order)
+        served from a tag index of this subtree, for roots that several
+        whole-subtree passes query in turn. One walk builds the index, in
+        document order (so foster-parented nodes, whose creation order is
+        not their document order, land where a walk finds them); inserting
+        or retagging an element below this root drops it. Removals keep
+        it: an element an earlier removal detached is skipped here."""
+        index = self._index
+        if index is None:
+            index = self._index = self._build_index()
+        if len(tags) == 1:
+            found = index.get(tags[0], ())
+        else:
+            found = sorted(e for t in tags for e in index.get(t, ()))
+        out: list[Element] = []
+        for _, el in found:
+            p = el.parent
+            while p is not None and p is not self:
+                p = p.parent
+            if p is not None:
+                out.append(el)
+        return out
+
+    def _build_index(self) -> dict[str, list[tuple[int, "Element"]]]:
+        index: dict[str, list[tuple[int, Element]]] = {}
+        stack: list[Node] = list(reversed(self.child_nodes))
+        pos = 0
+        while stack:
+            n = stack.pop()
+            if n.node_type == 1:
+                entry = (pos, n)
+                found = index.get(n.tag)  # type: ignore[attr-defined]
+                if found is None:
+                    index[n.tag] = [entry]  # type: ignore[attr-defined]
+                else:
+                    found.append(entry)  # type: ignore[arg-type]
+                pos += 1
+                kids = n.child_nodes  # type: ignore[attr-defined]
+                if kids:
+                    stack.extend(reversed(kids))
+        return index
 
     def descendant_count(self) -> int:
         n = 0
@@ -872,26 +945,44 @@ def parse_fragment(html: str, container_tag: str = "div") -> Element:
 
 def get_inner_text(el: Element | None, normalize_spaces: bool = True) -> str:
     """NodeUtility.cs:405-412 — textContent.Trim(), optionally collapsing
-    all whitespace runs to single spaces. Epoch-cached (scoring and
-    cleaning revisit the same nodes many times between mutations)."""
+    all whitespace runs to single spaces. Cached on the element (scoring
+    and cleaning revisit the same nodes many times between mutations)."""
     if el is None:
         return ""
-    epoch = _EPOCH[0]
-    if el._it_epoch == epoch:
-        raw, norm = el._it_cache
-        return norm if normalize_spaces else raw
-    raw = el.text_content.strip()
-    norm = " ".join(raw.split())
-    el._it_epoch = epoch
-    el._it_cache = (raw, norm)
-    return norm if normalize_spaces else raw
+    cached = el._it
+    if cached is None:
+        raw = el.text_content.strip()
+        cached = el._it = (raw, " ".join(raw.split()))
+    return cached[1] if normalize_spaces else cached[0]
+
+
+def has_text(el: Element) -> bool:
+    """``bool(el.text_content.strip())`` without building the text: stops at
+    the first text node (or cached subtree text) that is not all space."""
+    stack: list[Node] = [el]
+    while stack:
+        n = stack.pop()
+        if n.node_type == Node.TEXT:
+            data = n.data  # type: ignore[attr-defined]
+            if data and not data.isspace():
+                return True
+        elif n.node_type == Node.ELEMENT:
+            cached = n._tc  # type: ignore[attr-defined]
+            if cached is None:
+                stack.extend(n.child_nodes)  # type: ignore[attr-defined]
+            elif cached and not cached.isspace():
+                return True
+    return False
 
 
 def set_node_tag(el: Element, new_tag: str) -> Element:
     """NodeUtility.cs:52-68 — in-place retag (we can mutate, AngleSharp
     cannot; reference creates a new element and moves children/attrs —
     observable result identical)."""
-    el.tag = new_tag.lower()
+    new_tag = new_tag.lower()
+    if el.tag != new_tag:
+        el.tag = new_tag
+        _drop_caches(el.parent, text=False)
     return el
 
 

@@ -31,6 +31,7 @@ from .dom import (
 )
 from .metadata import get_article_metadata, get_jsonld, try_parse_datetime
 from .nodeutil import (
+    TEXTISH_TAGS,
     clean_matched_nodes,
     clean_styles,
     get_all_nodes_with_tag,
@@ -267,18 +268,19 @@ class Extractor:
     # ------------------------------------------------------------------
     def prep_document(self) -> None:
         """SmartReader.cs:654-665."""
-        for style in self.doc.get_elements_by_tag_name("style"):
+        for style in self.doc.elements_by_tag("style"):
             style.remove()
         body = self.doc.body
         if body is not None:
             self.replace_brs(body)
-        for font in self.doc.get_elements_by_tag_name("font"):
+        for font in self.doc.elements_by_tag("font"):
             set_node_tag(font, "span")
 
     def replace_brs(self, elem: Element) -> None:
-        """SmartReader.cs:674-731."""
-        for br in elem.get_elements_by_tag_name("br"):
-            if br.parent is None:
+        """SmartReader.cs:674-731. `elem` is the document's body: its <br>s
+        come from the document's tag index."""
+        for br in self.doc.elements_by_tag("br"):
+            if br.parent is None or not br.has_ancestor(elem):
                 continue
             nxt = br.next_sibling
             replaced = False
@@ -335,7 +337,7 @@ class Extractor:
             if self.options.custom_operations_start:
                 self._rebuild_snapshot = doc.document_element.outer_html
         unwrap_noscript_images(doc)
-        remove_scripts(doc.document_element)
+        remove_scripts(doc)
         saved = self.doc
         self.doc = doc
         try:
@@ -656,12 +658,7 @@ class Extractor:
             if text_length < opts.char_threshold:
                 parse_successful = False
                 # restore the body (fresh rebuild) and retry with fewer flags
-                from .dom import _bump_epoch
-
-                for c in list(page.child_nodes):
-                    c.parent = None
-                page.child_nodes = []
-                _bump_epoch()
+                page.text_content = ""
                 restored = self._rebuild_body()
                 if restored is not None:
                     for c in list(restored.child_nodes):
@@ -739,11 +736,11 @@ class Extractor:
         self.clean_conditionally(article_content, "ul")
         self.clean_conditionally(article_content, "div")
 
-        for h1 in article_content.get_elements_by_tag_name("h1"):
+        for h1 in article_content.elements_by_tag("h1"):
             set_node_tag(h1, "h2")
 
         # drop empty paragraphs (SmartReader.cs:802-810)
-        for paragraph in reversed(article_content.get_elements_by_tag_name("p")):
+        for paragraph in reversed(article_content.elements_by_tag("p")):
             if paragraph.parent is None:
                 continue
             content_el_count = len(
@@ -754,7 +751,7 @@ class Extractor:
                 self.metrics["nodes_stripped"] += 1
 
         # <br> before <p> (SmartReader.cs:812-817)
-        for br in article_content.get_elements_by_tag_name("br"):
+        for br in article_content.elements_by_tag("br"):
             if br.parent is None:
                 continue
             nxt = next_element(br.next_sibling)
@@ -762,7 +759,7 @@ class Extractor:
                 br.remove()
 
         # single-cell tables (SmartReader.cs:820-833)
-        for table_el in article_content.get_elements_by_tag_name("table"):
+        for table_el in article_content.elements_by_tag("table"):
             if table_el.parent is None:
                 continue
             tbody = (
@@ -787,7 +784,7 @@ class Extractor:
         """Clean() — SmartReader.cs:1631-1663."""
         is_embed = tag in ("object", "embed", "iframe")
         videos = self.options.regexes.videos
-        for element in reversed(e.get_elements_by_tag_name(tag)):
+        for element in reversed(e.elements_by_tag(tag)):
             if element.parent is None:
                 continue
             if is_embed:
@@ -800,7 +797,7 @@ class Extractor:
 
     def clean_headers(self, e: Element) -> None:
         """SmartReader.cs:2156-2169."""
-        for node in reversed(get_all_nodes_with_tag(e, ("h1", "h2"))):
+        for node in reversed(e.elements_by_tag("h1", "h2")):
             if node.parent is None:
                 continue
             if self.get_class_weight(node) < 0:
@@ -809,7 +806,7 @@ class Extractor:
 
     def mark_data_tables(self, root: Element) -> None:
         """SmartReader.cs:1737-1808."""
-        for table in root.get_elements_by_tag_name("table"):
+        for table in root.elements_by_tag("table"):
             if table.get_attribute("role") == "presentation":
                 table.set_attribute("datatable", "false")
                 continue
@@ -844,7 +841,7 @@ class Extractor:
 
     def fix_lazy_images(self, root: Element) -> None:
         """SmartReader.cs:1813-1906."""
-        for elem in get_all_nodes_with_tag(root, ("img", "picture", "figure")):
+        for elem in root.elements_by_tag("img", "picture", "figure"):
             src = elem.get_attribute("src")
             if src is not None:
                 parts = rx.B64_DATA_URL.match(src)
@@ -890,13 +887,14 @@ class Extractor:
                         img.set_attribute(copy_to, value)
                         elem.append_child(img)
 
-    def get_text_density(self, e: Element, tags: tuple) -> float:
-        """SmartReader.cs:1911-1927."""
+    def get_text_density(self, e: Element, children: list[Element]) -> float:
+        """SmartReader.cs:1911-1927, over `e`'s descendants of the tags asked
+        (collected by the caller's subtree walk)."""
         text_length = len(get_inner_text(e, normalize_spaces=True))
         if text_length == 0:
             return 0.0
         children_length = 0
-        for child in get_all_nodes_with_tag(e, tags):
+        for child in children:
             children_length += len(get_inner_text(child, normalize_spaces=True))
         return children_length / text_length
 
@@ -904,10 +902,8 @@ class Extractor:
         """SmartReader.cs:1933-2151."""
         if not self.flag_active(FLAG_CLEAN_CONDITIONALLY):
             return
-        from .nodeutil import TEXTISH_TAGS
-
         videos = self.options.regexes.videos
-        for node in reversed(e.get_elements_by_tag_name(tag)):
+        for node in reversed(e.elements_by_tag(tag)):
             if node.parent is None:
                 continue
             if self._should_remove_conditionally(node, tag, videos):
@@ -915,50 +911,64 @@ class Extractor:
                 self.metrics["nodes_stripped"] += 1
 
     def _should_remove_conditionally(self, node: Element, tag: str, videos) -> bool:
-        is_list = tag in ("ul", "ol")
-        if not is_list:
-            list_length = 0
-            for lst in get_all_nodes_with_tag(node, ("ul", "ol")):
-                list_length += len(get_inner_text(lst))
-            total = len(get_inner_text(node))
-            if total > 0:
-                # C# integer division quirk (SmartReader.cs:1956):
-                # listLength / textLen > 0.9 with int operands
-                is_list = (list_length // total) > 0.9
-
+        # every check is pure, so the ancestor checks run before the one
+        # subtree walk that collects what the descendant checks read
         if tag == "table" and is_data_table(node):
             return False
         if has_ancestor_tag(node, "table", -1, is_data_table):
             return False
         if has_ancestor_tag(node, "code"):
             return False
-        if any(is_data_table(t) for t in node.get_elements_by_tag_name("table")):
-            return False
 
-        weight = self.get_class_weight(node)
-        if weight < 0:
-            return True
-
-        if get_char_count(node, ",") < 10:
-            p = 0.0
-            img = 0.0
-            li = -100.0
-            inp = 0.0
-            embeds: list[Element] = []
-            for el in node.iter_elements():
-                t = el.tag
+        p = 0.0
+        img = 0.0
+        li = -100.0
+        inp = 0.0
+        lists: list[Element] = []
+        links: list[Element] = []
+        headings: list[Element] = []
+        textish: list[Element] = []
+        embeds: list[Element] = []
+        for el in node.iter_elements():
+            t = el.tag
+            if t in TEXTISH_TAGS:
+                textish.append(el)
                 if t == "p":
                     p += 1
                 elif t == "img":
                     img += 1
                 elif t == "li":
                     li += 1
-                elif t == "input":
-                    inp += 1
-                elif t in ("object", "embed", "iframe"):
-                    embeds.append(el)
+                elif t == "ul" or t == "ol":
+                    lists.append(el)
+                elif t == "table" and is_data_table(el):
+                    return False
+            elif t == "a":
+                links.append(el)
+            elif t in _H1_H6:
+                headings.append(el)
+            elif t == "input":
+                inp += 1
+            elif t in ("object", "embed", "iframe"):
+                embeds.append(el)
 
-            heading_density = self.get_text_density(node, _H1_H6)
+        is_list = tag in ("ul", "ol")
+        if not is_list:
+            total = len(get_inner_text(node))
+            if total > 0:
+                list_length = 0
+                for lst in lists:
+                    list_length += len(get_inner_text(lst))
+                # C# integer division quirk (SmartReader.cs:1956):
+                # listLength / textLen > 0.9 with int operands
+                is_list = (list_length // total) > 0.9
+
+        weight = self.get_class_weight(node)
+        if weight < 0:
+            return True
+
+        if get_char_count(node, ",") < 10:
+            heading_density = self.get_text_density(node, headings)
 
             embed_count = 0
             for emb in embeds:
@@ -972,11 +982,9 @@ class Extractor:
             if rx.AD_WORDS.match(inner_text) or rx.LOADING_WORDS.match(inner_text):
                 return True
 
-            link_density = get_link_density(node)
+            link_density = get_link_density(node, links)
             content_length = len(inner_text)
-            from .nodeutil import TEXTISH_TAGS
-
-            text_density = self.get_text_density(node, tuple(TEXTISH_TAGS))
+            text_density = self.get_text_density(node, textish)
             is_figure_child = has_ancestor_tag(node, "figure")
             ldm = self.options.link_density_modifier
 
@@ -1003,8 +1011,8 @@ class Extractor:
                 for child in node.children:
                     if len(child.children) > 1:
                         return have_to_remove
-                li_count = len(node.get_elements_by_tag_name("li"))
-                if img == li_count:
+                # li counted up from -100: li + 100 is the <li> count
+                if img == li + 100:
                     return False
 
             return have_to_remove
@@ -1115,11 +1123,10 @@ class Extractor:
     def is_probably_readerable(self) -> bool:
         opts = self.options
         regexes = opts.regexes
-        root = self.doc.document_element
-        nodes = get_all_nodes_with_tag(root, ("p", "pre", "article"))
+        nodes = self.doc.elements_by_tag("p", "pre", "article")
         # div > br parents, insertion-ordered unique
         br_parents: dict[int, Element] = {}
-        for br in root.get_elements_by_tag_name("br"):
+        for br in self.doc.elements_by_tag("br"):
             par = br.parent
             if par is not None and par.tag == "div":
                 br_parents.setdefault(id(par), par)
@@ -1169,7 +1176,7 @@ class Extractor:
 
         unwrap_noscript_images(self.doc, self.metrics)
         jsonld = {} if opts.disable_jsonld else get_jsonld(self.doc)
-        self.metrics["nodes_stripped"] += remove_scripts(self.doc.document_element)
+        self.metrics["nodes_stripped"] += remove_scripts(self.doc)
         self.prep_document()
 
         metadata = get_article_metadata(self.doc, self.uri, self.language, jsonld)

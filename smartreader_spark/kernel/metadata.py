@@ -85,7 +85,7 @@ def get_article_title(doc: Document) -> str:
         if word_count(cur_title) < 3:
             cur_title = _TITLE_STRIP_FIRST_RE.sub("", orig_title)
     elif ": " in cur_title:
-        headings = doc.document_element.get_elements_by_tag_name("h1", "h2")
+        headings = doc.elements_by_tag("h1", "h2")
         trimmed = cur_title.strip()
         match = any(h.text_content.strip() == trimmed for h in headings)
         if not match:
@@ -95,7 +95,7 @@ def get_article_title(doc: Document) -> str:
                 idx = orig_title.find(":")
                 cur_title = orig_title[idx + 1:]
     elif len(cur_title) > 150 or len(cur_title) < 15:
-        h_ones = doc.get_elements_by_tag_name("h1")
+        h_ones = doc.elements_by_tag("h1")
         if len(h_ones) == 1:
             cur_title = get_inner_text(h_ones[0])
 
@@ -114,7 +114,7 @@ def get_article_title(doc: Document) -> str:
 def get_jsonld(doc: Document) -> dict[str, str]:
     """Readability.cs:344-502 — first ld+json script that yields metadata."""
     meta: dict[str, str] = {}
-    for script in doc.document_element.get_elements_by_tag_name("script"):
+    for script in doc.elements_by_tag("script"):
         if meta:
             break
         if script.get_attribute("type") != "application/ld+json":
@@ -305,7 +305,7 @@ def get_article_metadata(
     publication_date (datetime|None), alternative_language_uris (dict)."""
     values = dict(jsonld)
 
-    for element in doc.get_elements_by_tag_name("meta"):
+    for element in doc.elements_by_tag("meta"):
         element_name = element.get_attribute("name")
         element_property = element.get_attribute("property")
         item_prop = element.get_attribute("itemprop")
@@ -372,12 +372,12 @@ def get_article_metadata(
     html_el = doc.document_element
     lang_val = language or html_el.get_attribute("lang") or html_el.get_attribute("xml:lang")
     if not lang_val:
-        for m in doc.get_elements_by_tag_name("meta"):
+        for m in doc.elements_by_tag("meta"):
             if (m.get_attribute("http-equiv") or "").lower() == "content-language":
                 lang_val = m.get_attribute("content")
                 break
     if not lang_val:
-        for m in doc.get_elements_by_tag_name("meta"):
+        for m in doc.elements_by_tag("meta"):
             if m.get_attribute("name") == "lang":
                 lang_val = m.get_attribute("value")
                 break
@@ -385,7 +385,7 @@ def get_article_metadata(
 
     # alternative language uris (Readability.cs:684-703)
     alt_langs: dict[str, str] = {}
-    for link in doc.get_elements_by_tag_name("link"):
+    for link in doc.elements_by_tag("link"):
         if link.get_attribute("rel") == "alternate":
             href = link.get_attribute("href")
             href_value = to_absolute_uri(page_uri, href) if href is not None else None
@@ -424,7 +424,7 @@ def get_article_metadata(
                 break
 
     if publication_date is None:
-        for time_el in doc.get_elements_by_tag_name("time"):
+        for time_el in doc.elements_by_tag("time"):
             if time_el.get_attribute("pubdate"):
                 dt = try_parse_datetime(time_el.get_attribute("datetime"))
                 if dt is not None:

@@ -16,6 +16,7 @@ from .dom import (
     TextNode,
     get_inner_text,
     get_next_node,
+    has_text,
     parse_fragment,
     remove_and_get_next,
     safe_set_attribute,
@@ -35,6 +36,10 @@ PRESENTATIONAL_ATTRIBUTES = (
 
 # NodeUtility.cs:24
 DEPRECATED_SIZE_ATTRIBUTE_ELEMS = frozenset(["table", "th", "td", "hr", "pre"])
+
+# what clean_styles strips from other elements and from the ones above
+_STRIPPED = frozenset(PRESENTATIONAL_ATTRIBUTES)
+_SIZED_STRIPPED = _STRIPPED | {"width", "height"}
 
 # NodeUtility.cs:28-35 (canvas/iframe/svg/video intentionally excluded)
 PHRASING_ELEMS = frozenset(
@@ -116,7 +121,7 @@ def is_single_image(el: Element | None) -> bool:
 def unwrap_noscript_images(doc: Document, metrics: dict | None = None) -> None:
     """NodeUtility.cs:225-304."""
     # 1. drop placeholder imgs with no src-ish attribute at all
-    for img in doc.get_elements_by_tag_name("img"):
+    for img in doc.elements_by_tag("img"):
         keep = False
         for name, value in img.attrs.items():
             if name in ("src", "srcset", "data-src", "data-srcset"):
@@ -131,7 +136,7 @@ def unwrap_noscript_images(doc: Document, metrics: dict | None = None) -> None:
                 metrics["nodes_stripped"] = metrics.get("nodes_stripped", 0) + 1
 
     # 2. unwrap single-image noscripts following a single-image sibling
-    for noscript in doc.get_elements_by_tag_name("noscript"):
+    for noscript in doc.elements_by_tag("noscript"):
         if noscript.parent is None:
             continue
         # noscript content: our parser parses it as markup already, but the
@@ -171,7 +176,7 @@ def unwrap_noscript_images(doc: Document, metrics: dict | None = None) -> None:
 def remove_scripts(root: Element) -> int:
     """NodeUtility.cs:310-313 — drop script + noscript."""
     n = 0
-    for el in root.get_elements_by_tag_name("script", "noscript"):
+    for el in root.elements_by_tag("script", "noscript"):
         if el.parent is not None:
             el.remove()
             n += 1
@@ -209,7 +214,7 @@ def is_element_without_content(el: Element) -> bool:
     reference's two descendant collections — same truth table)."""
     if el.node_type != Node.ELEMENT:
         return False
-    if el.text_content.strip():
+    if has_text(el):
         return False
     kids = el.children
     if not kids:
@@ -269,21 +274,25 @@ def clean_styles(el: Element | None) -> None:
         cur = stack.pop()
         if cur.tag == "svg":
             continue
-        for attr in PRESENTATIONAL_ATTRIBUTES:
-            cur.remove_attribute(attr)
-        if cur.tag in DEPRECATED_SIZE_ATTRIBUTE_ELEMS:
-            cur.remove_attribute("width")
-            cur.remove_attribute("height")
+        attrs = cur.attrs
+        if attrs:
+            strip = (_SIZED_STRIPPED if cur.tag in DEPRECATED_SIZE_ATTRIBUTE_ELEMS
+                     else _STRIPPED)
+            for name in [k for k in attrs if k in strip]:
+                del attrs[name]
         stack.extend(cur.children)
 
 
-def get_link_density(el: Element) -> float:
-    """NodeUtility.cs:473-490."""
+def get_link_density(el: Element, links: list[Element] | None = None) -> float:
+    """NodeUtility.cs:473-490. `links`: el's <a> descendants, when the
+    caller's own subtree walk already collected them."""
     text_length = len(get_inner_text(el))
     if text_length == 0:
         return 0.0
+    if links is None:
+        links = el.get_elements_by_tag_name("a")
     link_length = 0.0
-    for link in el.get_elements_by_tag_name("a"):
+    for link in links:
         href = link.get_attribute("href")
         coefficient = 0.3 if (href and HASH_URL.match(href)) else 1.0
         link_length += len(get_inner_text(link)) * coefficient

@@ -15,7 +15,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from smartreader_spark.kernel import dom, serializer
-from smartreader_spark.kernel.dom import _EPOCH, Node
+from smartreader_spark.kernel.dom import Node
 from smartreader_spark.kernel.reader import extract_html
 
 from test_dom_fuzz import _TREE_CHUNKS
@@ -33,18 +33,15 @@ def test_isspace_is_regex_whitespace_on_every_code_point():
 
 
 def _regex_get_inner_text(el, normalize_spaces=True):
-    """get_inner_text as it was, collapsing with the regex."""
+    """get_inner_text as it was, collapsing with the regex (same element
+    cache: the pair stays until a mutation below the element drops it)."""
     if el is None:
         return ""
-    epoch = _EPOCH[0]
-    if el._it_epoch == epoch:
-        raw, norm = el._it_cache
-        return norm if normalize_spaces else raw
-    raw = el.text_content.strip()
-    norm = _WS_RE.sub(" ", raw)
-    el._it_epoch = epoch
-    el._it_cache = (raw, norm)
-    return norm if normalize_spaces else raw
+    cached = el._it
+    if cached is None:
+        raw = el.text_content.strip()
+        cached = el._it = (raw, _WS_RE.sub(" ", raw))
+    return cached[1] if normalize_spaces else cached[0]
 
 
 def _regex_direct_text(el):
