@@ -49,7 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from smartreader_spark.functions.textqa import _norm
+from smartreader_spark.functions.textqa import _norm, load_documents
 from smartreader_spark.memo import SessionMemo
 
 # the end-of-word sentinel of the original algorithm: lets the model
@@ -68,7 +68,7 @@ MAX_WORD_CHARS = 64
 
 
 def _word_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_documents(spark, sf_dir)
     tok = F.explode(F.split(_norm(F.col("text")), " ")).alias("word")
     return (
         docs.select(tok)
@@ -196,7 +196,7 @@ def bpe_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, words = _train(spark, sf_dir)
     seg_sizes = words.select("word", F.size("seg").alias("n_subwords_w"))
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_documents(spark, sf_dir)
     toks = (
         docs.select(
             "doc_id", F.explode(F.split(_norm(F.col("text")), " ")).alias("word")

@@ -41,8 +41,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from smartreader_spark.functions.dedup import _load_documents, _sf_simhash_pairs
+from smartreader_spark.functions.dedup import _sf_simhash_pairs
 from smartreader_spark.functions.similarity import _spread
+from smartreader_spark.functions.textqa import load_documents
 from smartreader_spark.observed import observed_value
 
 MAX_ITER = 25
@@ -149,7 +150,7 @@ def dedup_components(spark: SparkSession, sf_dir: str,
     family, chains and all."""
     # r7: the pair graph comes from the session-shared miner memo
     # (identical to dedup_simhash_pairs' output — see _PAIRS_CACHE)
-    docs = _load_documents(spark, sf_dir).select("doc_id")
+    docs = load_documents(spark, sf_dir).select("doc_id")
     pairs = _sf_simhash_pairs(spark, sf_dir, max_hamming=max_hamming).select(
         "doc_a", "doc_b"
     )
@@ -184,7 +185,7 @@ def dedup_family_keep_best(spark: SparkSession, sf_dir: str,
     members. Reference parity: SmartReader is single-document; this
     serves SURVEY §2's training-data pipeline tier with
     dedup_components."""
-    docs = _spread(_load_documents(spark, sf_dir).select("doc_id", "n_chars"))
+    docs = _spread(load_documents(spark, sf_dir).select("doc_id", "n_chars"))
     pairs = _sf_simhash_pairs(spark, sf_dir, max_hamming=max_hamming).select(
         "doc_a", "doc_b"
     )

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..memo import SessionMemo
-from .textqa import _load, _norm
+from .textqa import _norm, load_documents
 
 # non-overlapping token-chunk width for passage dedup
 CHUNK_TOKENS = 8
@@ -101,7 +101,7 @@ def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .similarity import _spread
 
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     # r7: spread the single-file scan before the gram explode (guide §2.5)
     base = _spread(docs.select("doc_id", F.col("text"))).select(
         "doc_id", _toks(F.col("text")).alias("toks")
@@ -157,7 +157,7 @@ def dedup_chunks_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals, the duplicated fraction, and keep_doc (frac <= 0.5)."""
     from .similarity import _spread
 
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = _toks(F.col("text"))
     n = F.size(toks)
     n_chunks = F.floor(n / CHUNK_TOKENS).cast("int")
@@ -201,7 +201,7 @@ def source_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     source, drawn by a salted md5 of the doc id (stable across runs and
     engines, uniform across the id space — the per-domain cap step of a
     CC-style curation pipeline)."""
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     key = F.md5(
         F.concat_ws("|", F.lit(CAP_SALT), F.col("doc_id").cast("string"))
     )
@@ -237,7 +237,7 @@ def source_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     off that table (config-like state, as the IVF codebook); the draw
     and the comparison are pure map-side expressions. No corpus shuffle
     at all — at 100 TB this is a scan with a broadcast lookup."""
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     counts = docs.groupBy("source").agg(F.count("*").alias("n_source"))
     n_min = counts.agg(F.min("n_source")).first()[0]
     u = (
@@ -292,7 +292,7 @@ def sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     running long per partition. SEQ_TOKENS is a power of two so the
     offset/B division is an exact double scaling and floor() carries no
     last-ulp hazard cross-engine."""
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     n_tok = F.greatest(F.size(_toks(F.col("text"))), F.lit(1)).cast("long")
     base = docs.select(
         "doc_id", "source", n_tok.alias("n_tokens"), _pack_key().alias("pack_key")
@@ -401,7 +401,7 @@ def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, and the contaminated flag."""
     from .similarity import _spread
 
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     grams = _spread(docs.select("doc_id", "text")).select(
         "doc_id",
         F.explode(_word_grams(_toks(F.col("text")), DECON_NGRAM)).alias("g"),
@@ -502,7 +502,7 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage-by-stage survivor counts for the curation pipeline (the
     observability twin of curation_pipeline — the number a 100-TB run
     watches to catch a gate eating the corpus). One row per stage."""
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     g = _gates(spark, sf_dir)
     capped = g["cap"].select("doc_id")
     rep_pass = (
@@ -549,7 +549,7 @@ def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference has no training-split analog (single-document
     engine); this serves SURVEY §2's training-data tier.
     """
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     u = (
         F.conv(
             F.substring(
@@ -612,7 +612,7 @@ def dsir_importance(spark: SparkSession, sf_dir: str,
     """
     from .similarity import _spread
 
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = _toks(F.col("text"))
     # r7: the tokenize + md5-per-gram pass was executed TWICE (once for
     # the model counts, once for the scoring join). Collapse the feature

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..memo import SessionMemo
 from .similarity import _dim_of, _load, _spread, _srp_bucket
-from .textqa import _norm
+from .textqa import _norm, load_documents
 
 NGRAM_N = 3
 #: b×r LSH banding (VERDICT r5 #3): 8 bands of r=4 concatenated
@@ -35,10 +35,6 @@ NGRAM_N = 3
 #: explode factor grows 4→8, not 4→32.
 MINHASH_BANDS = 8
 MINHASH_ROWS = 4
-
-
-def _load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def _tokens(col):
@@ -237,7 +233,7 @@ def exact_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicate groups: md5(normalized text) → group size + keeper.
     Shuffle key = 32-char digest; map-side combine makes this one cheap
     aggregation at any scale."""
-    docs = _load_documents(spark, sf_dir).select("doc_id", "text")
+    docs = load_documents(spark, sf_dir).select("doc_id", "text")
     return (
         docs.withColumn("fp", F.md5(_norm(F.col("text"))))
         .groupBy("fp")
@@ -275,7 +271,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
     blowup, one narrow exchange, and the shingle stream skips its
     distinct (min over a multiset ≡ min over its set)."""
     if sh is None:
-        docs = _load_documents(spark, sf_dir).select("doc_id", "text")
+        docs = load_documents(spark, sf_dir).select("doc_id", "text")
         sh = _shingle_stream(docs)
     hs = sh.select(
         "doc_id",
@@ -335,7 +331,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str,
     and fed to both the LSH candidate generation and the verify joins —
     the token stream is shuffled once, not recomputed per stage."""
     if sh is None:
-        docs = _load_documents(spark, sf_dir).select("doc_id", "text")
+        docs = load_documents(spark, sf_dir).select("doc_id", "text")
         sh = _shingle_table(docs).cache()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     if cand is None:
@@ -376,7 +372,7 @@ def _sf_simhash_pairs(spark: SparkSession, sf_dir: str,
                       max_hamming: int = 3,
                       max_bucket_size: int | None = SIMHASH_MAX_BUCKET) -> DataFrame:
     def build():
-        docs = _spread(_load_documents(spark, sf_dir).select("doc_id", "text"))
+        docs = _spread(load_documents(spark, sf_dir).select("doc_id", "text"))
         return simhash_pairs_for_docs(
             docs, max_hamming=max_hamming, max_bucket_size=max_bucket_size
         ).localCheckpoint(eager=True)
@@ -482,7 +478,7 @@ def simhash_oversized_buckets(spark: SparkSession, sf_dir: str,
     """Audit companion to `simhash_near_dup_pairs`: the (band, bandbits,
     bucket_n) buckets the skew valve dropped — record it alongside the
     dedup run's lineage so the recall trade is observable, not silent."""
-    docs = _spread(_load_documents(spark, sf_dir).select("doc_id", "text"))
+    docs = _spread(load_documents(spark, sf_dir).select("doc_id", "text"))
     return oversized_buckets_for_docs(docs, max_bucket_size=max_bucket_size)
 
 
@@ -502,7 +498,7 @@ def oversized_buckets_for_docs(docs: DataFrame,
 
 
 def _simhash_wide(spark: SparkSession, sf_dir: str, n_bits: int = 60) -> DataFrame:
-    docs = _spread(_load_documents(spark, sf_dir).select("doc_id", "text"))
+    docs = _spread(load_documents(spark, sf_dir).select("doc_id", "text"))
     return simhash_wide_signatures(docs, n_bits=n_bits)
 
 

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .textqa import _load
+from .textqa import load_documents
 
 # RE2-safe (and Java-regex-identical) detector patterns. Order of the
 # redaction chain is part of the contract: EMAIL first (it contains
@@ -85,7 +85,7 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document PII counts and the digest/length of the redacted
     text (digest instead of the full redaction keeps the result narrow;
     the digest still value-proves every replaced byte)."""
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     n_emails, n_ipv4, n_phones, redacted = scrub_cols(injected_text_col())
     return docs.select(
         "doc_id",

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .textqa import _norm
+from .textqa import _norm, load_documents
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -46,10 +46,6 @@ BM25_QUERIES = [
 ]
 
 
-def _load(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def bm25_search(spark: SparkSession, sf_dir: str,
                 k: int = BM25_TOPK) -> DataFrame:
     """Top-k BM25 hits per query: (query_id, doc_id, score,
@@ -57,7 +53,7 @@ def bm25_search(spark: SparkSession, sf_dir: str,
     descending then doc_id ascending."""
     from .similarity import _spread
 
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = F.split(_norm(F.col("text")), " ")
     # r7 (guide §2.3 "shuffle fewer bytes"): every consumer of the tf
     # table is INNER-joined against the literal query-term set — scored

@@ -36,14 +36,34 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    DataType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 DEFAULT_K = 5
 DEFAULT_QUERIES = 8  # vec_id < 8 are the query set (deterministic)
 IVF_CELLS = 16      # coarse-quantizer codebook size for ivf_topk
 IVF_NPROBE = 4      # cells probed per query
 
-_TOPK_SCHEMA = "query_id bigint, vec_id bigint, score double, rank int"
-_SEMDEDUP_SCHEMA = "vec_id bigint, cell int, dup_of bigint, is_kept boolean"
+# Typed empty results, with the nullability the operators' real results
+# carry: row_number() ranks and the is_kept test are never null, and
+# ann_pq's query ids come from driver-side literals.
+def _schema(*cols: tuple[str, DataType, bool]) -> StructType:
+    return StructType([StructField(name, t, nullable) for name, t, nullable in cols])
+
+
+_TOPK_SCHEMA = _schema(("query_id", LongType(), True), ("vec_id", LongType(), True),
+                       ("score", DoubleType(), True), ("rank", IntegerType(), False))
+_ANN_PQ_SCHEMA = _schema(("query_id", LongType(), False), ("vec_id", LongType(), True),
+                         ("score", DoubleType(), True), ("rank", IntegerType(), False))
+_SEMDEDUP_SCHEMA = _schema(("vec_id", LongType(), True), ("cell", IntegerType(), True),
+                           ("dup_of", LongType(), True), ("is_kept", BooleanType(), False))
 
 
 def _load(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -105,7 +125,7 @@ def _dim_of(spark: SparkSession, sf_dir: str):
     return int(row[0]["d"]) if row else None
 
 
-def _empty_or_raise(spark: SparkSession, sf_dir: str, schema: str,
+def _empty_or_raise(spark: SparkSession, sf_dir: str, schema: StructType,
                     need: str) -> DataFrame:
     """Called once a driver-side codebook sample came back short: an
     empty `embeddings` table gives the typed empty result `schema`; any
@@ -362,12 +382,12 @@ def ann_pq(spark: SparkSession, sf_dir: str,
     ]
     if len(train) < n_cent:
         return _empty_or_raise(
-            spark, sf_dir, _TOPK_SCHEMA,
+            spark, sf_dir, _ANN_PQ_SCHEMA,
             f"ann_pq needs {n_cent} training rows with vec_id in "
             f"[{PQ_TRAIN_OFFSET}, {PQ_TRAIN_OFFSET + n_cent})",
         )
     if not queries:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return spark.createDataFrame([], _ANN_PQ_SCHEMA)
     dim = len(train[0])
     d0 = dim // m_sub
     # sub-codebook: centroid (m, j) = subspace-m slice of training vec j

@@ -23,11 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .textqa import load_documents
+
 PCTS = (0.25, 0.50, 0.75, 0.95)
 
 
 def source_length_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_documents(spark, sf_dir)
     arr = ", ".join(f"{p}D" for p in PCTS)
     pct = F.expr(f"percentile(n_chars, array({arr}))")
     agg = docs.groupBy("source").agg(

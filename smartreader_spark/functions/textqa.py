@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 from ..kernel.langid import STOPWORDS  # noqa: F401  (re-export)
 
 
-def _load(spark: SparkSession, sf_dir: str) -> DataFrame:
+def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sf `documents` table: the one loader every corpus operator uses."""
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
@@ -35,7 +36,7 @@ def _norm(col):
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace tokens + a subword estimate (ceil(chars/4), the usual
     BPE rule of thumb) — one narrow projection, no shuffle."""
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     return docs.select(
         "doc_id",
         F.size(F.split(_norm(F.col("text")), " ")).alias("n_tokens"),
@@ -55,7 +56,7 @@ def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     family BPE vocabularies are trained over). Pure regexp_extract_all —
     JVM-side, no shuffle; the same pattern is RE2-compatible so the
     DuckDB oracle states it verbatim."""
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     pieces = F.regexp_extract_all(F.col("text"), F.lit(BPE_PRETOKEN_PATTERN), 0)
     return docs.select(
         "doc_id",
@@ -68,7 +69,7 @@ def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length + punctuation + stopword-ratio quality heuristics (the same
     signal family the extraction kernel uses for link/text density)."""
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = F.split(_norm(F.col("text")), " ")
     n_toks = F.size(toks)
     en_sw = F.array([F.lit(w) for w in STOPWORDS["en"]])
@@ -91,7 +92,7 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def language_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-overlap language guess: argmax over per-language hit
     counts; 'und' (undetermined) when no lexicon hits at all."""
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     # hoist the normalize+split into its own projection: the 13
     # per-language counters below all reference it, and higher-order
     # functions sit outside codegen subexpression elimination — without
@@ -122,7 +123,7 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined fingerprints: full normalized digest + a coarse
     positional digest (first/middle/last 64 chars) approximating a rolling
     hash, both md5 for cross-engine verifiability."""
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     norm = _norm(F.col("text"))
     n = F.length(norm)
     head = F.substring(norm, 1, 64)
@@ -172,7 +173,7 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str,
     """
     from .similarity import _spread
 
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = F.split(_norm(F.col("text")), " ")
     # r7: spread the single-file scan before the token explode (guide
     # §2.5) — both the vocab build and the scoring join re-read this
@@ -271,7 +272,7 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str,
     """
     from .similarity import _spread
 
-    docs = _load(spark, sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = F.split(_norm(F.col("text")), " ")
     # r7: spread the single-file scan before the bigram explode
     base = _spread(docs.select("doc_id", "text")).select(

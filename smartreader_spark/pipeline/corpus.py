@@ -14,6 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.textqa import load_documents
 from .extract import INPUT_SCHEMA
 
 FIXTURE_PAGES = "/root/reference/src/SmartReaderTests/test-pages"
@@ -59,7 +60,7 @@ def wrap_plain_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     interleaved docs (kind='html') — built-ins only, so the scan + wrap
     stays JVM-side. Mirrored byte-for-byte by
     tools/build_expected.py::extract_testdata_rows."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_documents(spark, sf_dir)
     html = F.concat(
         F.lit("<html><head><title>doc "),
         F.col("doc_id").cast("string"),

@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """Local mimic of the driver's correctness gate: run each queries() entry
 on Spark and its oracle_sql() on DuckDB at sf0.01, compare row count +
-column names + order-insensitive values.
+column names + order-insensitive values. A query whose result is empty on
+both engines is clean but compared nothing; it is labelled OK-EMPTY and
+counted under the clean total.
 
 Usage: python tools/oracle_check.py [query ...]
 """
@@ -91,13 +93,18 @@ def main() -> None:
                         detail.append(f"row{i} {c}: {a.at[i, c]!r} vs {b.at[i, c]!r}")
             results.append((name, "VALUE-MISMATCH", f"{int(diff_mask.sum())} rows differ; " + "; ".join(detail[:4])))
         else:
-            results.append((name, "OK", f"{len(a)} rows, {spark_secs:.1f}s"))
+            # 0 rows on both engines compares nothing: labelled apart,
+            # still clean
+            status = "OK" if len(a) else "OK-EMPTY"
+            results.append((name, status, f"{len(a)} rows, {spark_secs:.1f}s"))
 
     print(f"\n{'query':28s} {'status':16s} detail")
     for name, status, detail in results:
         print(f"{name:28s} {status:16s} {detail}")
-    bad = [r for r in results if r[1] not in ("OK", "ROWS-ONLY")]
+    bad = [r for r in results if r[1] not in ("OK", "OK-EMPTY", "ROWS-ONLY")]
+    empty = sum(r[1] == "OK-EMPTY" for r in results)
     print(f"\n{len(results) - len(bad)}/{len(results)} clean")
+    print(f"{empty} of them OK-EMPTY (0 rows on both engines: nothing compared)")
     spark.stop()
     sys.exit(1 if bad else 0)
 

@@ -132,9 +132,9 @@ def run_unigram(spark, d):
 
 
 def unigram_vocab(spark, d):
-    from smartreader_spark.functions.textqa import _load, _norm
+    from smartreader_spark.functions.textqa import _norm, load_documents
 
-    toks = _load(spark, d).select(F.explode(F.split(_norm(F.col("text")), " ")).alias("t"))
+    toks = load_documents(spark, d).select(F.explode(F.split(_norm(F.col("text")), " ")).alias("t"))
     return _agg(toks.where(F.col("t") != ""), vocab=F.countDistinct("t"))
 
 
