@@ -255,7 +255,7 @@ class Element(Node):
         # get_inner_text's (stripped, collapsed) pair, the subtree tag index
         self._tc: str | None = None
         self._it: tuple[str, str] | None = None
-        self._index: dict[str, list[tuple[int, Element]]] | None = None
+        self._index: dict[str, list[Element]] | None = None
 
     # -- attributes ---------------------------------------------------
     def get_attribute(self, name: str) -> str | None:
@@ -404,9 +404,10 @@ class Element(Node):
         if len(tags) == 1:
             found = index.get(tags[0], ())
         else:
-            found = sorted(e for t in tags for e in index.get(t, ()))
+            want = set(tags)
+            found = [e for e in index["*"] if e.tag in want]
         out: list[Element] = []
-        for _, el in found:
+        for el in found:
             p = el.parent
             while p is not None and p is not self:
                 p = p.parent
@@ -414,20 +415,21 @@ class Element(Node):
                 out.append(el)
         return out
 
-    def _build_index(self) -> dict[str, list[tuple[int, "Element"]]]:
-        index: dict[str, list[tuple[int, Element]]] = {}
+    def _build_index(self) -> dict[str, list["Element"]]:
+        """tag -> descendants with that tag, and "*" -> every descendant,
+        each in document order."""
+        every: list[Element] = []
+        index: dict[str, list[Element]] = {"*": every}
         stack: list[Node] = list(reversed(self.child_nodes))
-        pos = 0
         while stack:
             n = stack.pop()
             if n.node_type == 1:
-                entry = (pos, n)
+                every.append(n)  # type: ignore[arg-type]
                 found = index.get(n.tag)  # type: ignore[attr-defined]
                 if found is None:
-                    index[n.tag] = [entry]  # type: ignore[attr-defined]
+                    index[n.tag] = [n]  # type: ignore[attr-defined, list-item]
                 else:
-                    found.append(entry)  # type: ignore[arg-type]
-                pos += 1
+                    found.append(n)  # type: ignore[arg-type]
                 kids = n.child_nodes  # type: ignore[attr-defined]
                 if kids:
                     stack.extend(reversed(kids))

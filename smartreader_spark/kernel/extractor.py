@@ -743,10 +743,11 @@ class Extractor:
         for paragraph in reversed(article_content.elements_by_tag("p")):
             if paragraph.parent is None:
                 continue
-            content_el_count = len(
+            # the (usually cached) text test first: most paragraphs have
+            # text, and then their subtree need not be walked
+            if not get_inner_text(paragraph, normalize_spaces=False) and not (
                 get_all_nodes_with_tag(paragraph, ("img", "embed", "object", "iframe"))
-            )
-            if content_el_count == 0 and not get_inner_text(paragraph, normalize_spaces=False):
+            ):
                 paragraph.remove()
                 self.metrics["nodes_stripped"] += 1
 
