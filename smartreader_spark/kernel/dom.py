@@ -178,15 +178,6 @@ class Node:
         return sibs[i + 1] if i + 1 < len(sibs) else None
 
     @property
-    def previous_sibling(self) -> "Node | None":
-        p = self.parent
-        if p is None:
-            return None
-        sibs = p.child_nodes
-        i = sibs.index(self)
-        return sibs[i - 1] if i > 0 else None
-
-    @property
     def next_element_sibling(self) -> "Element | None":
         p = self.parent
         if p is None:

@@ -37,7 +37,7 @@ from test_dom_fuzz import _TREE_CHUNKS  # noqa: E402
 from smartreader_spark.kernel.reader import extract_html  # noqa: E402
 
 GOLDEN = os.path.join(HERE, "kernel_golden.json")
-WEB_PAGES = 80
+WEB_PAGES = 80  # the web_pages page count (perfbench/workloads.py), fixed here
 SOUPS = 400
 
 

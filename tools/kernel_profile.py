@@ -45,6 +45,7 @@ sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 import pyarrow.parquet as pq
 from layers import kernel_metrics
 from pages import generate_pages
+from workloads import WEB_PAGES
 
 from smartreader_spark.kernel import dom, reader
 
@@ -67,9 +68,6 @@ def spans_pages(path: str) -> list[str]:
         "".join(s["text"] or "" for s in sorted(doc or [], key=lambda s: s["offset"]))
         for doc in spans
     ]
-
-
-WEB_PAGES = 80  # perfbench/workloads.py: the web_pages page count
 
 
 @contextlib.contextmanager
