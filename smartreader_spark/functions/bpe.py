@@ -49,7 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from smartreader_spark.functions.textqa import _norm, load_documents
+from smartreader_spark.functions.textqa import load_documents, tokens
 from smartreader_spark.memo import SessionMemo
 
 # the end-of-word sentinel of the original algorithm: lets the model
@@ -69,7 +69,7 @@ MAX_WORD_CHARS = 64
 
 def _word_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_documents(spark, sf_dir)
-    tok = F.explode(F.split(_norm(F.col("text")), " ")).alias("word")
+    tok = F.explode(tokens(F.col("text"))).alias("word")
     return (
         docs.select(tok)
         # chr(31) is the oracle's symbol delimiter — excluded from the
@@ -199,7 +199,7 @@ def bpe_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_documents(spark, sf_dir)
     toks = (
         docs.select(
-            "doc_id", F.explode(F.split(_norm(F.col("text")), " ")).alias("word")
+            "doc_id", F.explode(tokens(F.col("text"))).alias("word")
         )
         .where(
             (F.col("word") != "")

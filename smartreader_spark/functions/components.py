@@ -42,8 +42,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from smartreader_spark.functions.dedup import _sf_simhash_pairs
-from smartreader_spark.functions.similarity import _spread
 from smartreader_spark.functions.textqa import load_documents
+from smartreader_spark.layout import spread
 from smartreader_spark.observed import observed_value
 
 MAX_ITER = 25
@@ -185,7 +185,7 @@ def dedup_family_keep_best(spark: SparkSession, sf_dir: str,
     members. Reference parity: SmartReader is single-document; this
     serves SURVEY §2's training-data pipeline tier with
     dedup_components."""
-    docs = _spread(load_documents(spark, sf_dir).select("doc_id", "n_chars"))
+    docs = spread(load_documents(spark, sf_dir).select("doc_id", "n_chars"))
     pairs = _sf_simhash_pairs(spark, sf_dir, max_hamming=max_hamming).select(
         "doc_a", "doc_b"
     )

@@ -37,8 +37,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..layout import spread
 from ..memo import SessionMemo
-from .textqa import _norm, load_documents
+from .textqa import load_documents, tokens
 
 # non-overlapping token-chunk width for passage dedup
 CHUNK_TOKENS = 8
@@ -69,10 +70,6 @@ DSIR_BUCKETS = 64
 DSIR_TARGET_SOURCE = "src0"
 
 
-def _toks(col):
-    return F.split(_norm(col), " ")
-
-
 def _word_grams(toks, k: int):
     """Adjacent word k-grams as an array column (empty when the doc has
     fewer than k tokens). Built from k aligned slices zipped with
@@ -99,12 +96,11 @@ def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Docs too short for a given gram size contribute 0.0 fractions.
     """
-    from .similarity import _spread
 
     docs = load_documents(spark, sf_dir)
     # r7: spread the single-file scan before the gram explode (guide §2.5)
-    base = _spread(docs.select("doc_id", F.col("text"))).select(
-        "doc_id", _toks(F.col("text")).alias("toks")
+    base = spread(docs.select("doc_id", F.col("text"))).select(
+        "doc_id", tokens(F.col("text")).alias("toks")
     )
     toks = F.col("toks")
     tagged = F.concat(
@@ -133,7 +129,7 @@ def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_bi = F.coalesce(F.col("dup2") / F.col("tot2"), F.lit(0.0))
     dup_tri = F.coalesce(F.col("dup3") / F.col("tot3"), F.lit(0.0))
     return (
-        docs.select("doc_id", F.size(_toks(F.col("text"))).alias("n_tokens"))
+        docs.select("doc_id", F.size(tokens(F.col("text"))).alias("n_tokens"))
         .join(per, "doc_id", "left")
         .select(
             "doc_id",
@@ -155,10 +151,9 @@ def dedup_chunks_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole corpus (within-doc repeats count — a self-plagiarizing doc is
     as much a dedup target as a syndicated one). Emits per-doc chunk
     totals, the duplicated fraction, and keep_doc (frac <= 0.5)."""
-    from .similarity import _spread
 
     docs = load_documents(spark, sf_dir)
-    toks = _toks(F.col("text"))
+    toks = tokens(F.col("text"))
     n = F.size(toks)
     n_chunks = F.floor(n / CHUNK_TOKENS).cast("int")
     hashes = F.when(
@@ -171,7 +166,7 @@ def dedup_chunks_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).otherwise(F.array().cast("array<string>"))
     # r7: spread the single-file scan before the chunk-hash explode
-    ex = _spread(docs.select("doc_id", "text")).select(
+    ex = spread(docs.select("doc_id", "text")).select(
         "doc_id", F.explode(hashes).alias("h")
     )
     occ = ex.withColumn("c", F.count("*").over(Window.partitionBy("h")))
@@ -293,7 +288,7 @@ def sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset/B division is an exact double scaling and floor() carries no
     last-ulp hazard cross-engine."""
     docs = load_documents(spark, sf_dir)
-    n_tok = F.greatest(F.size(_toks(F.col("text"))), F.lit(1)).cast("long")
+    n_tok = F.greatest(F.size(tokens(F.col("text"))), F.lit(1)).cast("long")
     base = docs.select(
         "doc_id", "source", n_tok.alias("n_tokens"), _pack_key().alias("pack_key")
     )
@@ -399,12 +394,11 @@ def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-doc overlap count on doc_id (doc-local key). Emits one row
     per non-benchmark doc: gram occurrences, how many hit the benchmark
     set, and the contaminated flag."""
-    from .similarity import _spread
 
     docs = load_documents(spark, sf_dir)
-    grams = _spread(docs.select("doc_id", "text")).select(
+    grams = spread(docs.select("doc_id", "text")).select(
         "doc_id",
-        F.explode(_word_grams(_toks(F.col("text")), DECON_NGRAM)).alias("g"),
+        F.explode(_word_grams(tokens(F.col("text")), DECON_NGRAM)).alias("g"),
     ).select("doc_id", F.md5(F.col("g")).alias("h"))
     bench = (
         grams.filter(F.col("doc_id") % DECON_BENCH_MOD == 0)
@@ -610,10 +604,9 @@ def dsir_importance(spark: SparkSession, sf_dir: str,
     feature stream against a ≤ n_buckets-row table → automatic
     broadcast. No shuffle wider than the (doc_id) rollup.
     """
-    from .similarity import _spread
 
     docs = load_documents(spark, sf_dir)
-    toks = _toks(F.col("text"))
+    toks = tokens(F.col("text"))
     # r7: the tokenize + md5-per-gram pass was executed TWICE (once for
     # the model counts, once for the scoring join). Collapse the feature
     # stream to per-(doc, source, bucket) occurrence counts — ≤ 64 rows
@@ -622,7 +615,7 @@ def dsir_importance(spark: SparkSession, sf_dir: str,
     # integer c×micro products (identical totals). The single-file scan
     # is spread over the cluster first (guide §2.5).
     base = (
-        _spread(docs.select("doc_id", "source", F.col("text")))
+        spread(docs.select("doc_id", "source", F.col("text")))
         .select("doc_id", "source", toks.alias("toks"))
         .select(
             "doc_id",

@@ -20,9 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..layout import spread
 from ..memo import SessionMemo
-from .similarity import _dim_of, _load, _spread, _srp_bucket
-from .textqa import _norm, load_documents
+from .similarity import _dim_of, _load, _srp_bucket
+from .textqa import _norm, load_documents, tokens
 
 NGRAM_N = 3
 #: b×r LSH banding (VERDICT r5 #3): 8 bands of r=4 concatenated
@@ -35,10 +36,6 @@ NGRAM_N = 3
 #: explode factor grows 4→8, not 4→32.
 MINHASH_BANDS = 8
 MINHASH_ROWS = 4
-
-
-def _tokens(col):
-    return F.split(_norm(col), " ")
 
 
 def _shingle_stream(docs: DataFrame) -> DataFrame:
@@ -58,7 +55,7 @@ def _shingle_stream(docs: DataFrame) -> DataFrame:
     for pos ≤ n−3; docs with < N tokens keep the whole token list as
     one shingle."""
     par = docs.sparkSession.sparkContext.defaultParallelism
-    base = docs.select("doc_id", _tokens(F.col("text")).alias("toks")).repartition(
+    base = docs.select("doc_id", tokens(F.col("text")).alias("toks")).repartition(
         par, "doc_id"
     )
     n = F.size("toks")
@@ -201,7 +198,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str,
     # Independent reads have distinct ids from the start; the extra
     # 20k-row bucket computation is noise.
     def _emb_bucketed():
-        return _spread(_load(spark, sf_dir)).withColumn(
+        return spread(_load(spark, sf_dir)).withColumn(
             "bucket", _srp_bucket(F.col("embedding"), n_planes, dim)
         )
 
@@ -372,7 +369,7 @@ def _sf_simhash_pairs(spark: SparkSession, sf_dir: str,
                       max_hamming: int = 3,
                       max_bucket_size: int | None = SIMHASH_MAX_BUCKET) -> DataFrame:
     def build():
-        docs = _spread(load_documents(spark, sf_dir).select("doc_id", "text"))
+        docs = spread(load_documents(spark, sf_dir).select("doc_id", "text"))
         return simhash_pairs_for_docs(
             docs, max_hamming=max_hamming, max_bucket_size=max_bucket_size
         ).localCheckpoint(eager=True)
@@ -478,7 +475,7 @@ def simhash_oversized_buckets(spark: SparkSession, sf_dir: str,
     """Audit companion to `simhash_near_dup_pairs`: the (band, bandbits,
     bucket_n) buckets the skew valve dropped — record it alongside the
     dedup run's lineage so the recall trade is observable, not silent."""
-    docs = _spread(load_documents(spark, sf_dir).select("doc_id", "text"))
+    docs = spread(load_documents(spark, sf_dir).select("doc_id", "text"))
     return oversized_buckets_for_docs(docs, max_bucket_size=max_bucket_size)
 
 
@@ -498,7 +495,7 @@ def oversized_buckets_for_docs(docs: DataFrame,
 
 
 def _simhash_wide(spark: SparkSession, sf_dir: str, n_bits: int = 60) -> DataFrame:
-    docs = _spread(load_documents(spark, sf_dir).select("doc_id", "text"))
+    docs = spread(load_documents(spark, sf_dir).select("doc_id", "text"))
     return simhash_wide_signatures(docs, n_bits=n_bits)
 
 
@@ -513,7 +510,7 @@ def simhash_wide_signatures(docs: DataFrame, n_bits: int = 60) -> DataFrame:
         raise ValueError(f"simhash n_bits must be in 1..60, got {n_bits}")
     n_hex = (n_bits + 3) // 4
     toks = docs.select(
-        "doc_id", F.explode(F.array_distinct(_tokens(F.col("text")))).alias("tok")
+        "doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok")
     ).withColumn("h", F.conv(F.substring(F.md5("tok"), 1, n_hex), 16, 10).cast("long"))
 
     # branch-free aggregate (r7 continuation): sum(±1) > 0 over tokens is

@@ -5,7 +5,7 @@ The extraction engine's span model carries media as references
 (`media_ref`); a training-data pipeline additionally needs the bytes and
 per-modality features. This module implements the Spark-side plumbing —
 schemas, batch iterators, partitioning contract — for decode /
-feature-extract / resize / frame-sample stages as Arrow-batched
+feature-extract / frame-sample stages as Arrow-batched
 ``mapInPandas`` operators.
 
 The actual codecs (PIL/ffmpeg/librosa) are NOT available in this
@@ -17,8 +17,8 @@ environment, so the decode step is pluggable:
   from the bytes' digest — the default for tests/benches so the full
   distributed path (schema, batching, shuffle) runs for real.
 
-Everything around the codec — media table schema, batch shape, salting by
-payload size — is production-real.
+Everything around the codec — media table schema, batch shape, the
+round-robin spread before decoding — is production-real.
 """
 
 from __future__ import annotations
@@ -28,6 +28,8 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from smartreader_spark.layout import spread
 
 # one row per media object extracted from a document's spans
 MEDIA_SCHEMA = T.StructType(
@@ -99,11 +101,11 @@ def _fake_image_decode(payload: bytes | None, ref: str) -> tuple:
 
 def image_features(media: DataFrame, decoder: str = "fake",
                    num_partitions: int | None = None) -> DataFrame:
-    """Decode + feature-extract images. Arrow-batched; salting mirrors the
-    extraction stage (payload bytes are the skew dimension)."""
+    """Decode + feature-extract images. Arrow-batched; the optional spread
+    mirrors the extraction stage (payload bytes are the skew dimension)."""
     imgs = media.filter(F.col("kind").isin("img", "picture", "figure", "media"))
     if num_partitions:
-        imgs = imgs.repartition(num_partitions)
+        imgs = spread(imgs, num_partitions)
 
     def batch_fn(batches):
         import pandas as pd
@@ -127,40 +129,6 @@ def image_features(media: DataFrame, decoder: str = "fake",
             )
 
     return imgs.mapInPandas(batch_fn, IMAGE_FEATURES_SCHEMA)
-
-
-def resize_images(media: DataFrame, target: int = 256, decoder: str = "fake") -> DataFrame:
-    """Resize stage: returns (doc_id, media_ref, payload) with resized
-    bytes. With the fake decoder the 'resized' payload is a deterministic
-    digest-stamped placeholder of bounded size (real shape: decode →
-    resize → re-encode inside the batch)."""
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("media_ref", T.StringType(), False),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("error", T.StringType()),
-        ]
-    )
-
-    def batch_fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            recs = []
-            for doc_id, ref, payload in zip(pdf["doc_id"], pdf["media_ref"], pdf["payload"]):
-                try:
-                    if decoder == "stub":
-                        raise NotImplementedError("image resize requires PIL")
-                    basis = payload if payload is not None else ref.encode("utf-8")
-                    digest = hashlib.sha256(basis).digest()
-                    fake = (b"RESIZED:%dx%d:" % (target, target)) + digest
-                    recs.append((doc_id, ref, fake, None))
-                except NotImplementedError as e:
-                    recs.append((doc_id, ref, None, str(e)))
-            yield pd.DataFrame(recs, columns=["doc_id", "media_ref", "payload", "error"])
-
-    return media.mapInPandas(batch_fn, out_schema)
 
 
 def sample_video_frames(media: DataFrame, every_ms: int = 1000,

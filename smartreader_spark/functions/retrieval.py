@@ -30,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .textqa import _norm, load_documents
+from ..layout import spread
+from .textqa import load_documents, tokens
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -51,10 +52,9 @@ def bm25_search(spark: SparkSession, sf_dir: str,
     """Top-k BM25 hits per query: (query_id, doc_id, score,
     n_terms_matched, rank), rank ordered by the integer micro score
     descending then doc_id ascending."""
-    from .similarity import _spread
 
     docs = load_documents(spark, sf_dir)
-    toks = F.split(_norm(F.col("text")), " ")
+    toks = tokens(F.col("text"))
     # r7 (guide §2.3 "shuffle fewer bytes"): every consumer of the tf
     # table is INNER-joined against the literal query-term set — scored
     # through the broadcast qt table, and df through qt's own inner join
@@ -70,7 +70,7 @@ def bm25_search(spark: SparkSession, sf_dir: str,
     # off the same materialized pass of an inverted-index build, which
     # every BM25 indexer pays exactly once)
     base_tok = (
-        _spread(docs.select("doc_id", "text"))
+        spread(docs.select("doc_id", "text"))
         .select("doc_id", toks.alias("toks"))
         .cache()
     )

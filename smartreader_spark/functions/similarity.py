@@ -46,6 +46,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..layout import spread
+
 DEFAULT_K = 5
 DEFAULT_QUERIES = 8  # vec_id < 8 are the query set (deterministic)
 IVF_CELLS = 16      # coarse-quantizer codebook size for ivf_topk
@@ -95,9 +97,9 @@ def _norm(a):
 #
 # 1. The sf parquet inputs are ONE file / one row group, so every
 #    corpus-side map stage ran on ≤2 of 32 cores (guide §2.5's
-#    "unsplittable input" case). `_spread` repartitions right after the
-#    read; the count derives from the session's parallelism, never a
-#    local constant.
+#    "unsplittable input" case). `layout.spread` repartitions right
+#    after the read; the count derives from the session's parallelism,
+#    never a local constant.
 # 2. Building literal-heavy expressions through the Python Column API
 #    costs one py4j round-trip PER OPERATOR (~10-17 s of driver time for
 #    a 16×64 codebook). `_lit_vec_sql`/`_lit_mat_sql` emit the whole
@@ -133,19 +135,6 @@ def _empty_or_raise(spark: SparkSession, sf_dir: str, schema: StructType,
     if _dim_of(spark, sf_dir) is None:
         return spark.createDataFrame([], schema)
     raise ValueError(f"{need}; {sf_dir}/embeddings.parquet lacks them")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread a small-file scan over the cluster before map-heavy work
-    (scale-adaptive: defaultParallelism tracks the cluster size; on a
-    100 TB many-file input the extra exchange is metadata-cheap relative
-    to the compute it unblocks, and at sf sizes it moves ~MBs).
-
-    Applied right after an sf loader's read (the sf tables are one parquet
-    file / one row group, so the scan feeds at most ~2 tasks); the
-    DataFrame-level entry points (the *_for_docs functions) leave the
-    caller's partitioning alone."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _dlit_sql(v) -> str:
@@ -189,7 +178,7 @@ def brute_force_topk(spark: SparkSession, sf_dir: str,
     # exchange re-ran the whole corpus-side pass to produce 8 rows —
     # measured as the dominant cost of the sibling ivf query).
     base = _load(spark, sf_dir).select("vec_id", "embedding")
-    emb = _spread(base).withColumn("nrm", _norm(F.col("embedding")))
+    emb = spread(base).withColumn("nrm", _norm(F.col("embedding")))
     queries = base.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q"),
@@ -288,7 +277,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str,
     probe_src = emb.filter(F.col("vec_id") < n_queries).withColumn(
         "nrm", _norm(F.col("embedding"))
     )
-    emb = _spread(emb).withColumn("nrm", _norm(F.col("embedding")))
+    emb = spread(emb).withColumn("nrm", _norm(F.col("embedding")))
     scores = _cell_scores_sql(centroids)
     assigned = emb.withColumn(
         "cell", (-F.array_max(scores)["nc"]).cast("int")
@@ -431,7 +420,7 @@ def ann_pq(spark: SparkSession, sf_dir: str,
         f"{cb_sql}[m][j], (x, y) -> x * y), 0.0D, (acc, v) -> acc + v), 6), "
         f"'nj', -j))).nj AS INT))"
     )
-    coded = _spread(emb).select("vec_id", codes_expr.alias("codes"))
+    coded = spread(emb).select("vec_id", codes_expr.alias("codes"))
     # ADC: score(q, x) = Σ_m lut[q][m][code_m(x)] — pure map-side
     # element_at lookups against literal int arrays (one expr string:
     # exact integer sums, order-free)
@@ -511,7 +500,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str,
     # r7: spread the scan; ONE row norm feeds both the cell scores
     # and the unit normalization; codebook folds to SQL literals —
     # identical values (helper block above)
-    emb = _spread(emb).withColumn("nrm", _norm(F.col("embedding")))
+    emb = spread(emb).withColumn("nrm", _norm(F.col("embedding")))
     assigned = emb.withColumn(
         "cell", (-F.array_max(_cell_scores_sql(centroids))["nc"]).cast("int")
     )
@@ -603,7 +592,7 @@ def lsh_bucketed_topk(spark: SparkSession, sf_dir: str,
     if dim is None:  # empty table
         return spark.createDataFrame([], _TOPK_SCHEMA)
     emb_b = (
-        _spread(base)
+        spread(base)
         .withColumn("bucket", _srp_bucket(F.col("embedding"), n_planes, dim))
         .withColumn("nrm", _norm(F.col("embedding")))
     )

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 # pipeline's quality gate and both DuckDB oracle generators all consume
 # the same dict): ~25 words × 13 languages, two non-Latin scripts
 from ..kernel.langid import STOPWORDS  # noqa: F401  (re-export)
+from ..layout import spread
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -33,13 +34,18 @@ def _norm(col):
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
+def tokens(col):
+    """The one token rule: `_norm`'d text split on its single spaces."""
+    return F.split(_norm(col), " ")
+
+
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace tokens + a subword estimate (ceil(chars/4), the usual
     BPE rule of thumb) — one narrow projection, no shuffle."""
     docs = load_documents(spark, sf_dir)
     return docs.select(
         "doc_id",
-        F.size(F.split(_norm(F.col("text")), " ")).alias("n_tokens"),
+        F.size(tokens(F.col("text"))).alias("n_tokens"),
         F.length(F.col("text")).alias("n_chars"),
         F.ceil(F.length(F.col("text")) / 4).cast("long").alias("n_subwords_est"),
     ).orderBy("doc_id")
@@ -70,7 +76,7 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length + punctuation + stopword-ratio quality heuristics (the same
     signal family the extraction kernel uses for link/text density)."""
     docs = load_documents(spark, sf_dir)
-    toks = F.split(_norm(F.col("text")), " ")
+    toks = tokens(F.col("text"))
     n_toks = F.size(toks)
     en_sw = F.array([F.lit(w) for w in STOPWORDS["en"]])
     stop_hits = F.size(F.filter(toks, lambda t: F.array_contains(en_sw, t)))
@@ -99,7 +105,7 @@ def language_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the named column the split would be recomputed per language
     # (CollapseProject keeps a non-cheap alias used many times)
     base = docs.select(
-        "doc_id", F.split(_norm(F.col("text")), " ").alias("toks")
+        "doc_id", tokens(F.col("text")).alias("toks")
     )
     toks = F.col("toks")
     cols = []
@@ -171,13 +177,12 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str,
     (N, V) are two scalars off one tiny agg — driver-side like the IVF
     codebook, never per-row.
     """
-    from .similarity import _spread
 
     docs = load_documents(spark, sf_dir)
-    toks = F.split(_norm(F.col("text")), " ")
+    toks = tokens(F.col("text"))
     # r7: spread the single-file scan before the token explode (guide
     # §2.5) — both the vocab build and the scoring join re-read this
-    tok_df = _spread(docs.select("doc_id", "text")).select(
+    tok_df = spread(docs.select("doc_id", "text")).select(
         "doc_id", F.explode(toks).alias("token")
     ).where(F.col("token") != "")
     # materialize the vocab once (vocab-sized, corpus-independent): the
@@ -270,12 +275,11 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str,
     second corpus pass). Scoring re-derives the bigram stream map-side
     and joins the dictionary on (w1,w2) and the context table on w1.
     """
-    from .similarity import _spread
 
     docs = load_documents(spark, sf_dir)
-    toks = F.split(_norm(F.col("text")), " ")
+    toks = tokens(F.col("text"))
     # r7: spread the single-file scan before the bigram explode
-    base = _spread(docs.select("doc_id", "text")).select(
+    base = spread(docs.select("doc_id", "text")).select(
         "doc_id", toks.alias("toks")
     )
     n = F.size("toks")

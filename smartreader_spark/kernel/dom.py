@@ -289,10 +289,6 @@ class Element(Node):
                 return c
         return None
 
-    @property
-    def child_element_count(self) -> int:
-        return sum(1 for c in self.child_nodes if c.node_type == Node.ELEMENT)
-
     def append_child(self, node: Node) -> Node:
         node.detach()
         node.parent = self
@@ -426,12 +422,6 @@ class Element(Node):
                     stack.extend(reversed(kids))
         return index
 
-    def descendant_count(self) -> int:
-        n = 0
-        for _ in self.iter_elements():
-            n += 1
-        return n
-
     def has_ancestor(self, el: "Element") -> bool:
         p = self.parent
         while p is not None:
@@ -529,9 +519,6 @@ class Document(Element):
             if e.tag == "title":
                 return e.text_content
         return ""
-
-    def create_element(self, tag: str) -> Element:
-        return Element(tag.lower())
 
 
 _XML_NAME_START = re.compile(r"[A-Za-z_:]")
@@ -977,16 +964,6 @@ def set_node_tag(el: Element, new_tag: str) -> Element:
         el.tag = new_tag
         _drop_caches(el.parent, text=False)
     return el
-
-
-def next_node(node: Node | None) -> Node | None:
-    """NodeUtility.cs:~615-625 NextNode: skip whitespace-only text nodes."""
-    n = node
-    while n is not None and n.node_type != Node.ELEMENT and (
-        n.node_type != Node.TEXT or not n.data.strip()  # type: ignore[attr-defined]
-    ):
-        n = n.next_sibling
-    return n
 
 
 def next_element(node: Node | None) -> Element | None:

@@ -183,17 +183,6 @@ def remove_scripts(root: Element) -> int:
     return n
 
 
-def remove_comments(root: Element) -> None:
-    """NodeUtility.cs:318-321."""
-    stack: list[Node] = list(root.child_nodes)
-    while stack:
-        n = stack.pop()
-        if n.node_type == Node.COMMENT:
-            n.remove()
-        elif n.node_type == Node.ELEMENT:
-            stack.extend(n.child_nodes)  # type: ignore[attr-defined]
-
-
 _HAS_CONTENT_RE = re.compile(r"\S$")
 
 

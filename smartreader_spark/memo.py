@@ -30,12 +30,18 @@ from pyspark.sql import DataFrame, SparkSession
 log = logging.getLogger(__name__)
 
 
+def hadoop_path(spark: SparkSession, path: str) -> tuple:
+    """(Hadoop FileSystem, Path) for `path` in any scheme the session can
+    read: a bare local path, ``file://``, ``hdfs://``, ``s3a://``, ...
+    (`os.path` understands only the first)."""
+    root = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), root
+
+
 def _fingerprint(spark: SparkSession, path: str) -> tuple:
     """Sorted (relative path, length, mtime) of every file under `path`
     (empty when `path` does not exist — the build then fails as usual)."""
-    jvm = spark.sparkContext._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, root = hadoop_path(spark, path)
     if not fs.exists(root):
         return ()
     prefix = len(fs.makeQualified(root).toString())

@@ -1,4 +1,4 @@
-"""Spark DataFrame tier: scan → salt → mapInPandas(kernel) → write.
+"""Spark DataFrame tier: scan → spread → mapInPandas(kernel) → write.
 
 Design notes for 100 TB / 10^12-document scale:
 
@@ -6,15 +6,16 @@ Design notes for 100 TB / 10^12-document scale:
 * One Arrow batch of span-arrays at a time streams through the Python
   worker (iterator→iterator mapInPandas) — a partition is never
   materialized in Python memory.
-* Skew is handled *before* the UDF: document byte size is computed with
-  built-in expressions (aggregate over span text lengths — JVM-side,
-  codegen), bucketed by log2, and the repartition key is
-  (size_bucket, hash(doc_id) % salt) so a handful of 10 MB pages cannot
-  straggle one task while 195-byte pages starve the rest.
+* Skew is handled *before* the UDF: the documents are spread
+  round-robin over the requested partition count (`layout.spread`), so
+  consecutive 10 MB pages land on different tasks and every task gets
+  the same number of documents; with many documents per partition the
+  byte totals even out.
 * Resumability: a done-ledger table keyed by doc_id; restart = left-anti
   join input against the ledger (broadcast when small) and append.
-* Arrow batch size is bounded by records AND indirectly by the size
-  bucketing (homogeneous batches), so executor-python memory is stable.
+* Arrow batch size is bounded by records only (session.ARROW_MAX_RECORDS):
+  a batch's bytes are at most the record cap × the largest document, as
+  nothing upstream groups documents of similar size.
 """
 
 from .extract import (  # noqa: F401
@@ -22,6 +23,4 @@ from .extract import (  # noqa: F401
     INPUT_SCHEMA,
     SPAN_TYPE,
     extract_articles,
-    salted_size_bucket_repartition,
-    spread_repartition,
 )

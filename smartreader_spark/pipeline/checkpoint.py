@@ -14,13 +14,13 @@ is diagnosable and a resumed run auditable.
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from smartreader_spark.memo import hadoop_path
 from smartreader_spark.observed import observed_value
 
 #: the ledger columns of the extraction output. Reading with an explicit
@@ -49,7 +49,8 @@ def load_ledger(
 ) -> DataFrame | None:
     """The output table IS the ledger (doc_id projection → column-pruned,
     predicate-pushed scan). None only when `output_path` does not exist
-    yet; an unreadable ledger fails the job that scans it (answering
+    yet (asked through Hadoop's FileSystem, so a ``file://``, ``hdfs://``
+    or ``s3a://`` output is found too); an unreadable ledger fails the job that scans it (answering
     "nothing done" would extract every document again and append
     duplicate rows).
 
@@ -61,7 +62,8 @@ def load_ledger(
     is_permanent_error()) so permanently-bad blobs are ledgered as done
     instead of being re-parsed on every resume. `schema` is the ledger
     columns' DDL; the PDF leg's doc_id is a long."""
-    if not os.path.exists(output_path):
+    fs, path = hadoop_path(spark, output_path)
+    if not fs.exists(path):
         return None
     pred = done_predicate if done_predicate is not None else F.col("error").isNull()
     return spark.read.schema(schema).parquet(output_path).filter(pred).select("doc_id")

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from smartreader_spark.layout import spread
+
 SPAN_TYPE = T.ArrayType(
     T.StructType(
         [
@@ -66,65 +68,6 @@ EXTRACT_SCHEMA = T.StructType(
 )
 
 _OUT_COLS = [f.name for f in EXTRACT_SCHEMA.fields]
-
-
-def doc_bytes_expr() -> "F.Column":
-    """Approximate document size from span text lengths — pure built-in
-    expressions (whole-stage codegen, no Python)."""
-    return F.aggregate(
-        "spans", F.lit(0).cast("long"), lambda acc, s: acc + F.length(s["text"])
-    )
-
-
-def spread_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Skew-spreading repartition for the extraction stage — round-robin.
-
-    Chosen after measuring the alternatives (see also
-    salted_size_bucket_repartition below, kept as the explicit size-aware
-    strategy):
-
-    1. *Balance*: round-robin gives exact per-partition row counts and
-       interleaves input order, so consecutive giant pages land on
-       different partitions; with hundreds of documents per partition the
-       byte totals equalize (law of large numbers).
-    2. *Memory shaping*: the Arrow record cap
-       (spark.sql.execution.arrow.maxRecordsPerBatch, session default 4-16)
-       bounds the byte size of any batch reaching Python to
-       ~cap × max-doc-size, so one burst of giant pages cannot OOM a
-       worker.
-    3. *Straggler bound*: at cluster scale pass num_partitions ≈ 3-4× the
-       total task slots; the scheduler's work stealing then absorbs any
-       residual byte imbalance (a partition is at most a few seconds of
-       work, so the slowest tail is bounded by one partition's wall).
-
-    Measured rejects (round 1, BASELINE.md): a coarse (size_bucket, salt)
-    composite key with ~100 distinct values hash-collided into few
-    partitions (one task got 2× the bytes → 2× wall); an in-partition
-    descending-size sort delayed first-batch delivery to every Python
-    worker and cost more than it saved."""
-    return df.repartition(num_partitions)
-
-
-def salted_size_bucket_repartition(
-    df: DataFrame, num_partitions: int, salt: int | None = None
-) -> DataFrame:
-    """The north-star's literal skew strategy: hash-repartition on a
-    (size_bucket, salt) composite key so giant documents spread across
-    partitions regardless of input order.
-
-    The salt cardinality scales with the partition count (default
-    16 × num_partitions) so the composite key space is ≫ num_partitions
-    and the coarse-key collision lumpiness measured in round 1 (~100 keys
-    → 2× byte skew) disappears; the salt itself is pmod(hash(doc_id)) —
-    deterministic, no RNG. One shuffle, same as round-robin; no sort.
-
-    Kept as an explicit strategy because it also *co-locates* size classes
-    (useful when a downstream stage wants per-batch docs of similar cost);
-    for pure balance the round-robin default measures equal or better."""
-    salt = salt if salt is not None else 16 * num_partitions
-    size_bucket = F.floor(F.log2(doc_bytes_expr() + F.lit(1)))
-    key = size_bucket * F.lit(salt) + F.pmod(F.hash("doc_id"), F.lit(salt))
-    return df.repartition(num_partitions, key)
 
 
 def reassemble_html_expr():
@@ -212,23 +155,18 @@ def extract_articles(
     base_uri: str = "https://localhost/",
     options: dict | None = None,
     num_partitions: int | None = None,
-    skew_strategy: str = "round_robin",
 ) -> DataFrame:
     """The headline operator: (doc_id, spans) → extracted article rows.
 
     Column-prunes to exactly (doc_id, spans) first so the upstream scan
-    reads only what the kernel needs, spreads skew across partitions
-    (``skew_strategy``: "round_robin" default, or "size_bucket" for the
-    salted size-bucket key — see spread_repartition /
-    salted_size_bucket_repartition for the measured trade), reassembles
-    the HTML JVM-side, and maps the kernel over flat (doc_id, html)
-    Arrow batches.
+    reads only what the kernel needs, spreads the documents over
+    `num_partitions` partitions when given (`layout.spread`, round-robin:
+    consecutive giant pages land on different tasks), reassembles the
+    HTML JVM-side, and maps the kernel over flat (doc_id, html) Arrow
+    batches.
     """
     pruned = df.select("doc_id", "spans")
     if num_partitions:
-        if skew_strategy == "size_bucket":
-            pruned = salted_size_bucket_repartition(pruned, num_partitions)
-        else:
-            pruned = spread_repartition(pruned, num_partitions)
+        pruned = spread(pruned, num_partitions)
     flat = pruned.select("doc_id", reassemble_html_expr().alias("html"))
     return flat.mapInPandas(_make_extract_batch(options, base_uri), EXTRACT_SCHEMA)

@@ -8,8 +8,8 @@ Iceberg/parquet table and every downstream operator — extraction
 metrics, dedup, textqa, similarity — runs on them unchanged.
 
 Execution shape mirrors pipeline/extract.py: prune → round-robin
-repartition (PDFs skew like HTML pages; see spread_repartition's
-rationale) → mapInPandas with Arrow-batched binary columns. Per-document
+spread (PDFs skew like HTML pages; see smartreader_spark/layout.py) →
+mapInPandas with Arrow-batched binary columns. Per-document
 failures land in the `error` column instead of failing the task (the
 resume ledger then retries them, pipeline/checkpoint.py).
 """
@@ -19,9 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import types as T
 
+from smartreader_spark.layout import spread
 from smartreader_spark.observed import observed_value
 
-from .extract import SPAN_TYPE, spread_repartition
+from .extract import SPAN_TYPE
 
 PDF_SPANS_SCHEMA = T.StructType(
     [
@@ -137,5 +138,5 @@ def pdf_to_span_table(df: DataFrame, *, num_partitions: int | None = None) -> Da
     pdf:binary; everything else is pruned before the shuffle."""
     pruned = df.select("doc_id", "pdf")
     if num_partitions:
-        pruned = spread_repartition(pruned, num_partitions)
+        pruned = spread(pruned, num_partitions)
     return pruned.mapInPandas(_pdf_batch, PDF_SPANS_SCHEMA)

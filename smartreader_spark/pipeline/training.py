@@ -45,7 +45,7 @@ from ..functions.dedup import (
     oversized_buckets_for_docs,
     simhash_pairs_for_docs,
 )
-from ..functions.textqa import STOPWORDS, _norm
+from ..functions.textqa import STOPWORDS, _norm, tokens
 from ..memo import SessionMemo
 from ..sqltext import sql_string
 from .corpus import wrap_plain_documents
@@ -167,7 +167,7 @@ def quality_token_stage(uniq: DataFrame) -> DataFrame:
     # codegen subexpression elimination — without this the split would
     # be recomputed per language (CollapseProject keeps a non-cheap
     # alias that is referenced many times)
-    uniq = uniq.withColumn("_toks", F.split(_norm(F.col("text")), " "))
+    uniq = uniq.withColumn("_toks", tokens(F.col("text")))
     toks = F.col("_toks")
     n_toks = F.size(toks)
 

@@ -1,3 +1,3 @@
 """Source/sink layer: Iceberg-first with parquet fallback."""
 
-from .io import read_documents, write_articles, write_ledgered  # noqa: F401
+from .io import write_articles, write_ledgered  # noqa: F401

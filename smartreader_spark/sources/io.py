@@ -24,19 +24,6 @@ def _iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def read_documents(spark: SparkSession, source: str,
-                   columns: tuple = ("doc_id", "spans")) -> DataFrame:
-    """Scan the interleaved-span document table with immediate column
-    pruning (the projection reaches the scan: check ReadSchema in
-    .explain). `source` = iceberg table name (contains no '/') or a
-    parquet path."""
-    if "/" not in source and _iceberg_available(spark):
-        df = spark.read.format("iceberg").load(source)
-    else:
-        df = spark.read.parquet(source)
-    return df.select(*columns)
-
-
 def write_articles(df: DataFrame, target: str, mode: str = "append") -> None:
     """Append extraction output. On Iceberg: snapshot-isolated append
     (safe concurrent with readers); on parquet: directory append.

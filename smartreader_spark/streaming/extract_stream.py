@@ -6,14 +6,12 @@ none") and the north_rule is batch, but the engine's operators compose
 directly with Structured Streaming because the extraction stage is a
 stateless per-row map: the SAME `extract_articles` plan fragment runs
 under a streaming scan. No watermark is needed for extraction itself
-(stateless); the metrics rollup example shows the stateful pattern with a
-processing-time window.
+(stateless); `window_stream.py` shows the stateful, watermarked pattern.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..pipeline.extract import INPUT_SCHEMA, extract_articles
 
@@ -101,19 +99,3 @@ def stream_extract_bounded(spark: SparkSession, source_dir: str,
         .parquet(source_dir)
     )
     return run_bounded_to_df(extract_articles(stream, options=options), spark)
-
-
-def streaming_metrics_rollup(articles_stream: DataFrame,
-                             window: str = "1 minute"):
-    """Stateful example: windowed extraction metrics with a processing-time
-    window (event time would come from an ingest timestamp column)."""
-    with_ts = articles_stream.withColumn("_ts", F.current_timestamp())
-    return (
-        with_ts.withWatermark("_ts", "2 minutes")
-        .groupBy(F.window("_ts", window))
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum(F.when(F.col("is_readable"), 1).otherwise(0)).alias("readable"),
-            F.sum("metrics.chars_retained").alias("chars_retained"),
-        )
-    )

@@ -1,7 +1,8 @@
 """Checkpoint/resume over a small synthetic spans table (no fixture
 corpus needed): the ledger anti-join, per-run lineage, the run's doc
 count observed on the lineage write, the job count of one resumed run,
-and the ledger's behaviour on empty and unreadable output directories."""
+and the ledger's behaviour on empty and unreadable output directories
+and on an output named by its ``file://`` URI."""
 
 import os
 
@@ -72,17 +73,22 @@ def _lineage_docs(spark, out, run_id):
     )
 
 
-def test_resume_extracts_only_the_remainder(spark, spans, tmp_path):
-    out = str(tmp_path / "out")
+@pytest.mark.parametrize("form", ["path", "uri"])
+def test_resume_extracts_only_the_remainder(spark, spans, tmp_path, form):
+    """`form` is how the output is named: a bare local path, or the
+    ``file://`` URI of the same directory (a URI output must be found as
+    the ledger too, or the resume extracts and appends every doc again)."""
+    out = str(tmp_path / "out") if form == "path" else (tmp_path / "out").as_uri()
     assert _prior(spark, spans, out)["run_docs"] == N_PRIOR
 
     sc = spark.sparkContext
-    sc.setJobGroup("resume-under-test", "one resumed run")
+    group = f"resume-under-test-{form}"
+    sc.setJobGroup(group, "one resumed run")
     try:
         r = run_resumable_extraction(spark, spans, out, run_id="resume")
     finally:
         sc.setJobGroup("after-resume", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("resume-under-test")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
 
     written = spark.read.parquet(out)
     assert written.filter(F.col("run_id") == "resume").count() == N_DOCS - N_PRIOR

@@ -357,14 +357,14 @@ def _embedding_pairs_jvm_twin(spark, sf_dir, threshold, n_planes=4):
         _dot,
         _load,
         _norm,
-        _spread,
         _srp_bucket,
     )
+    from smartreader_spark.layout import spread
 
     dim = _dim_of(spark, sf_dir)
     n_salt = 32  # slices per bucket (B-side replication)
     n_part = max(2 * spark.sparkContext.defaultParallelism, 16)
-    emb = _spread(_load(spark, sf_dir)).withColumn(
+    emb = spread(_load(spark, sf_dir)).withColumn(
         "bucket", _srp_bucket(F.col("embedding"), n_planes, dim)
     ).withColumn("nrm", _norm(F.col("embedding")))
     a = emb.select(

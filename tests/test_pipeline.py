@@ -1,13 +1,16 @@
-"""Spark-tier tests: extraction operator, salting, checkpoint/resume,
+"""Spark-tier tests: extraction operator, spread balance, checkpoint/resume,
 span reassembly. Uses a shared local[4] session (module scope)."""
 
 import os
 import shutil
+import sys
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from smartreader_spark.kernel.serializer import html_to_input_spans
+from smartreader_spark.layout import spread
 from smartreader_spark.pipeline.checkpoint import (
     lineage_metrics,
     load_ledger,
@@ -20,11 +23,16 @@ from smartreader_spark.pipeline.corpus import (
     scale_corpus,
 )
 from smartreader_spark.pipeline.extract import (
+    INPUT_SCHEMA,
     extract_articles,
     reassemble_html_expr,
-    salted_size_bucket_repartition,
-    spread_repartition,
 )
+
+sys.path.append(
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+)
+from pages import generate_pages  # noqa: E402  (perfbench/, read-only)
+from workloads import WEB_PAGES  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -101,15 +109,24 @@ def _partition_bytes(df):
     )
 
 
-def test_spread_repartition_balances_bytes(spark, corpus):
-    scaled = scale_corpus(corpus, 4)
-    for strategy in (spread_repartition, salted_size_bucket_repartition):
-        sizes = _partition_bytes(strategy(scaled, 8))
-        assert len(sizes) > 1, strategy.__name__
-        byte_counts = [r["bytes"] for r in sizes]
-        mean = sum(byte_counts) / len(byte_counts)
-        # skew bound: no partition may exceed 1.5x the mean bytes
-        assert max(byte_counts) <= mean * 1.5, (strategy.__name__, byte_counts)
+def _web_pages(spark):
+    """The benchmark's `web_pages` input for seed 7 (80 pages whose sizes
+    follow the reference test pages' log-normal law), as a spans table."""
+    rows = [(p.doc_id, html_to_input_spans(p.html)) for p in generate_pages(7, WEB_PAGES)]
+    return spark.createDataFrame(rows, INPUT_SCHEMA)
+
+
+@pytest.mark.parametrize("source", ["corpus", "web_pages"])
+def test_spread_balances_bytes(spark, request, source):
+    """×4 re-keyed copies spread over 8 partitions: ≥40 documents per
+    partition, enough for round-robin to even out the bytes."""
+    docs = request.getfixturevalue("corpus") if source == "corpus" else _web_pages(spark)
+    sizes = _partition_bytes(spread(scale_corpus(docs, 4), 8))
+    assert len(sizes) > 1
+    byte_counts = [r["bytes"] for r in sizes]
+    mean = sum(byte_counts) / len(byte_counts)
+    # skew bound: no partition may exceed 1.5x the mean bytes
+    assert max(byte_counts) <= mean * 1.5, byte_counts
 
 
 def test_resume_skips_done_docs(spark, corpus):

@@ -1,13 +1,17 @@
 #!/usr/bin/env python
 """Dump the physical plan of every driver query to PLANS.md with the
 scale-relevant properties called out (pushed filters, read schema,
-join strategies, exchanges, Python nodes, codegen coverage).
+join strategies, exchanges, Python nodes, codegen coverage), and print
+one ``name sha256`` line per query: the digest of its executed plan
+with run-specific tokens masked (`plan_digest`), so two commits' plans
+compare with one `diff` of the printed lines.
 
 Usage: python tools/plan_audit.py   (writes PLANS.md at repo root)
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import sys
@@ -49,6 +53,22 @@ def _distinct(plan: str, pattern: str) -> int:
     this the composed pipeline reads as '80 MapInPandas' where the
     physical execution builds the cache with exactly 2."""
     return len({m.strip() for m in re.findall(pattern, plan)})
+
+
+def plan_digest(plan: str) -> str:
+    """sha256 of `plan` with what differs between two runs of the same
+    plan masked: expression ids (``#123``), ``plan_id=``, PySpark's
+    lambda-variable counters (``x_125`` → ``x_K``), the checkout's root
+    path, and the numbers of AQE query stages and whole-stage-codegen
+    stages (``ShuffleQueryStage 15``, ``*(8)``), which follow the order
+    in which concurrent stages finish."""
+    plan = plan.replace(REPO, "<repo>")
+    plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"\b(lambda \w+?)_\d+\b", r"\1_K", plan)
+    plan = re.sub(r"(QueryStage) \d+", r"\1 K", plan)
+    plan = re.sub(r"\*\(\d+\)", "*(K)", plan)
+    return hashlib.sha256(plan.encode("utf-8")).hexdigest()
 
 
 def audit(plan: str) -> dict:
@@ -104,6 +124,7 @@ def main() -> None:
         df.collect()  # execute so AQE finalizes (real join picks, codegen)
         plan = df._jdf.queryExecution().executedPlan().toString()
         a = audit(plan)
+        print(f"{name} {plan_digest(plan)}", flush=True)
         lines.append(
             f"| {name} | {a['exchanges']} | "
             f"{a['broadcast_joins']}/{a['sortmerge_joins']}/{a['shuffledhash_joins']} | "
