@@ -96,7 +96,6 @@ def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Docs too short for a given gram size contribute 0.0 fractions.
     """
-
     docs = load_documents(spark, sf_dir)
     # r7: spread the single-file scan before the gram explode (guide §2.5)
     base = spread(docs.select("doc_id", F.col("text"))).select(
@@ -151,7 +150,6 @@ def dedup_chunks_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole corpus (within-doc repeats count — a self-plagiarizing doc is
     as much a dedup target as a syndicated one). Emits per-doc chunk
     totals, the duplicated fraction, and keep_doc (frac <= 0.5)."""
-
     docs = load_documents(spark, sf_dir)
     toks = tokens(F.col("text"))
     n = F.size(toks)
@@ -394,7 +392,6 @@ def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-doc overlap count on doc_id (doc-local key). Emits one row
     per non-benchmark doc: gram occurrences, how many hit the benchmark
     set, and the contaminated flag."""
-
     docs = load_documents(spark, sf_dir)
     grams = spread(docs.select("doc_id", "text")).select(
         "doc_id",
@@ -604,7 +601,6 @@ def dsir_importance(spark: SparkSession, sf_dir: str,
     feature stream against a ≤ n_buckets-row table → automatic
     broadcast. No shuffle wider than the (doc_id) rollup.
     """
-
     docs = load_documents(spark, sf_dir)
     toks = tokens(F.col("text"))
     # r7: the tokenize + md5-per-gram pass was executed TWICE (once for

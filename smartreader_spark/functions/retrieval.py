@@ -52,7 +52,6 @@ def bm25_search(spark: SparkSession, sf_dir: str,
     """Top-k BM25 hits per query: (query_id, doc_id, score,
     n_terms_matched, rank), rank ordered by the integer micro score
     descending then doc_id ascending."""
-
     docs = load_documents(spark, sf_dir)
     toks = tokens(F.col("text"))
     # r7 (guide §2.3 "shuffle fewer bytes"): every consumer of the tf

@@ -177,7 +177,6 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str,
     (N, V) are two scalars off one tiny agg — driver-side like the IVF
     codebook, never per-row.
     """
-
     docs = load_documents(spark, sf_dir)
     toks = tokens(F.col("text"))
     # r7: spread the single-file scan before the token explode (guide
@@ -275,7 +274,6 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str,
     second corpus pass). Scoring re-derives the bigram stream map-side
     and joins the dictionary on (w1,w2) and the context table on w1.
     """
-
     docs = load_documents(spark, sf_dir)
     toks = tokens(F.col("text"))
     # r7: spread the single-file scan before the bigram explode

@@ -50,9 +50,9 @@ def load_ledger(
     """The output table IS the ledger (doc_id projection → column-pruned,
     predicate-pushed scan). None only when `output_path` does not exist
     yet (asked through Hadoop's FileSystem, so a ``file://``, ``hdfs://``
-    or ``s3a://`` output is found too); an unreadable ledger fails the job that scans it (answering
-    "nothing done" would extract every document again and append
-    duplicate rows).
+    or ``s3a://`` output is found too); an unreadable ledger fails the
+    job that scans it (answering "nothing done" would extract every
+    document again and append duplicate rows).
 
     `done_predicate` marks rows a resume should NOT retry; the default
     (`error IS NULL`) retries every errored doc — right for the HTML leg

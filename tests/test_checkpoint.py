@@ -1,7 +1,7 @@
 """Checkpoint/resume over a small synthetic spans table (no fixture
 corpus needed): the ledger anti-join, per-run lineage, the run's doc
 count observed on the lineage write, the job count of one resumed run,
-and the ledger's behaviour on empty and unreadable output directories
+and the ledger's behaviour on empty and unreadable output directories,
 and on an output named by its ``file://`` URI."""
 
 import os
