@@ -234,7 +234,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         micro-batch boundaries, so the state store is load-bearing. The
         aggregate asserts exactly ONE is_first per fingerprint across
         the whole stream; DuckDB restates it directly over documents."""
-        import shutil
         import tempfile
 
         from smartreader_spark.streaming.dedup_stream import (
@@ -249,12 +248,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.concat(F.col("doc_id").cast("string"), F.lit("_dup")).alias("doc_id"),
             "text",
         )
-        src = tempfile.mkdtemp(prefix="smartreader_dedup_src_")
-        try:
+        with tempfile.TemporaryDirectory(prefix="smartreader_dedup_src_",
+                                         ignore_cleanup_errors=True) as src:
             docs.unionByName(dups).repartition(8).write.mode("overwrite").parquet(src)
             out = run_dedup(spark, src)
-        finally:
-            shutil.rmtree(src, ignore_errors=True)
         return (
             out.groupBy("fp")
             .agg(

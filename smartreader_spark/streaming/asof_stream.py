@@ -25,13 +25,11 @@ rows are >= batch N's max, so state never has to "look ahead"."""
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .window_stream import EVENTS_SCHEMA, _build_time_ordered_source
+from .replay import EVENTS_SCHEMA, drain, read_files, time_ordered_events
 
 ASOF_OUT_SCHEMA = T.StructType(
     [
@@ -145,25 +143,14 @@ def stream_asof_error(events_stream: DataFrame) -> DataFrame:
     )
 
 
-def stream_asof_error_bounded(spark: SparkSession, sf_dir: str,
-                              max_files_per_trigger: int = 1) -> DataFrame:
+def stream_asof_error_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded time-ordered replay through the stateful as-of gate —
     value-compared by the driver against the SAME DuckDB ASOF JOIN
     oracle as the batch operator (batch/stream parity for custom
     state). The flush sentinel row is excluded by user_id."""
-    from .extract_stream import run_bounded_to_df
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src = _build_time_ordered_source(spark, sf_dir)
-    try:
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
-            .parquet(src)
-        )
-        out = run_bounded_to_df(stream_asof_error(stream), spark)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    with time_ordered_events(spark, sf_dir) as src:
+        out = drain(spark, stream_asof_error(
+            read_files(spark, src, EVENTS_SCHEMA, 1)))
 
     return (
         out.where(F.col("user_id") >= 0)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.textqa import _norm
+from .replay import drain, read_files
 
 DEDUP_OUT_SCHEMA = T.StructType(
     [
@@ -69,24 +70,16 @@ def _dedup_group(key, pdfs, state):
     yield from frames
 
 
-def stream_dedup_bounded(spark, source_dir: str,
-                         max_files_per_trigger: int = 2) -> DataFrame:
+def stream_dedup_bounded(spark, source_dir: str) -> DataFrame:
     """Bounded availableNow replay of a (doc_id, text) parquet directory
     through the STATEFUL dedup gate — the driver-gate twin of
     extract_stream.stream_extract_bounded, proving the
     applyInPandasWithState operator against a value oracle: state spans
-    micro-batches (maxFilesPerTrigger rations the files), and exactly
-    one row per fingerprint comes back is_first across the whole run.
-    Returns the materialized annotated output (fp, doc_id, text,
-    is_first)."""
-    from .extract_stream import run_bounded_to_df
-
-    stream = (
-        spark.readStream.schema("doc_id string, text string")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
-    return run_bounded_to_df(stream_dedup_exact(stream), spark)
+    micro-batches (2 files per trigger), and exactly one row per
+    fingerprint comes back is_first across the whole run. Returns the
+    materialized annotated output (fp, doc_id, text, is_first)."""
+    return drain(spark, stream_dedup_exact(
+        read_files(spark, source_dir, "doc_id string, text string", 2)))
 
 
 def stream_dedup_exact(docs_stream: DataFrame) -> DataFrame:

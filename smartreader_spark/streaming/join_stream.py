@@ -12,10 +12,9 @@ Semantics under the value oracle: INNER equi+interval join — pairs
 (click c, error e) with c.user_id = e.user_id and
 e.ts ∈ [c.ts - 1 h, c.ts], both bounds inclusive. Inner stream-stream
 joins emit eagerly on match (no watermark-close needed for output), so
-with the time-ordered replay of `window_stream._build_time_ordered_
-source` — where nothing is ever late — the emitted set is exactly the
-batch join, independent of how the two sources' micro-batches
-interleave. The flush sentinel still matters: it advances both
+with the time-ordered replay of `replay.time_ordered_events` — where
+nothing is ever late — the emitted set is exactly the batch join,
+independent of how the two sources' micro-batches interleave. The flush sentinel still matters: it advances both
 watermarks so the final state is evicted rather than carried.
 
 Scale shape: state is bounded by (events within the interval width per
@@ -26,16 +25,11 @@ entity-key discipline as the batch event operators.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .window_stream import (
-    EVENTS_SCHEMA,
-    WATERMARK_SPEC,
-    _build_time_ordered_source,
-)
+from .replay import EVENTS_SCHEMA, drain, read_files, time_ordered_events
+from .window_stream import WATERMARK_SPEC
 
 #: interval width: errors up to 1 h BEFORE the click
 INTERVAL_MICROS = 3600 * 1_000_000
@@ -46,7 +40,8 @@ def interval_join_clicks_errors(clicks: DataFrame,
     """The streaming plan fragment: both sides watermarked, equi-join on
     user_id with the event-time range condition. Callers pass two
     STREAMING DataFrames of the events schema (NTZ ts is cast here;
-    session timezone must be pinned UTC)."""
+    session timezone must be UTC, as `replay.time_ordered_events`
+    pins it)."""
     c = (
         clicks.withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", WATERMARK_SPEC)
@@ -76,26 +71,15 @@ def interval_join_clicks_errors(clicks: DataFrame,
     )
 
 
-def stream_interval_join_bounded(spark: SparkSession, sf_dir: str,
-                                 max_files_per_trigger: int = 1) -> DataFrame:
+def stream_interval_join_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded replay of the events table through the stream-stream
     interval join: the two sides are two independent streaming readers
     of the same time-ordered source (their micro-batch interleaving is
     NOT synchronized — the state store is what makes the result exact),
     drained through the exactly-once file sink."""
-    from .extract_stream import run_bounded_to_df
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src = _build_time_ordered_source(spark, sf_dir)
-    try:
-        mk = lambda: (  # noqa: E731
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
-            .parquet(src)
-        )
-        out = run_bounded_to_df(interval_join_clicks_errors(mk(), mk()), spark)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    with time_ordered_events(spark, sf_dir) as src:
+        events = lambda: read_files(spark, src, EVENTS_SCHEMA, 1)  # noqa: E731
+        out = drain(spark, interval_join_clicks_errors(events(), events()))
 
     return (
         out.select(

@@ -18,18 +18,9 @@ real window — with the default no-data micro-batch, every real window
 is emitted exactly once. The sentinel's own (still-open) window is
 excluded by its event_type.
 
-Replay-order discipline (measured, not assumed): the file source
-advances the watermark from each batch's max event time, and a window
-evicted at batch N's commit silently DROPS rows for it arriving in
-batch N+1. A hash-partitioned layout puts near-max timestamps in every
-file, so the very first batch hoists the watermark over the whole
-stream and correctness then hangs on accidental batch slicing. The
-source layout here is `repartitionByRange(ts)` with strictly increasing
-file mtimes (the source lists files in mtime order): ranges are
-disjoint and time-ordered, so every row of batch N+1 is >= batch N's
-max and NOTHING is ever late — exactly-once emission holds for ANY
-file count and any maxFilesPerTrigger, which is also the realistic
-shape of a replayed event log.
+Replay-order discipline: the events are replayed through
+`replay.time_ordered_events`, the layout under which nothing is ever
+late (see replay.py for the measured pitfall it avoids).
 
 Determinism discipline: event-time arithmetic in integer epoch micros
 (tumbling windows are epoch-aligned, so the DuckDB oracle restates the
@@ -43,11 +34,16 @@ dropped by contract (the knob a real deployment tunes).
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .replay import (
+    EVENTS_SCHEMA,
+    FLUSH_TYPE,
+    drain,
+    read_files,
+    time_ordered_events,
+)
 
 #: tumbling window width (6 h) and allowed lateness (1 h)
 WINDOW_MICROS = 6 * 3600 * 1_000_000
@@ -60,23 +56,13 @@ WATERMARK_SPEC = "1 hour"
 #: rule is the identical strict-> of the batch operator
 SESSION_WINDOW_SPEC = "12 hours"
 
-FLUSH_TYPE = "__flush__"
-#: far-future sentinel (2100-01-01T00:00:00) — past every real event,
-#: so the final watermark closes every real window
-FLUSH_TS = "2100-01-01 00:00:00"
-
-EVENTS_SCHEMA = (
-    "event_id long, ts timestamp_ntz, user_id long, "
-    "event_type string, value double, props string"
-)
-
 
 def windowed_event_counts(events_stream: DataFrame) -> DataFrame:
     """The streaming plan fragment: watermark on event time, tumbling
     6 h windows per event_type, integer-exact aggregates. Spark's
-    watermark machinery requires TIMESTAMP (not NTZ) — callers must pin
-    the session timezone to UTC so the cast is the identity wall-clock
-    mapping."""
+    watermark machinery requires TIMESTAMP (not NTZ) — the session
+    timezone must be UTC (`replay.time_ordered_events` pins it) so the
+    cast is the identity wall-clock mapping."""
     cents = F.round(F.col("value") * 100).cast("long")
     return (
         events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -89,77 +75,16 @@ def windowed_event_counts(events_stream: DataFrame) -> DataFrame:
     )
 
 
-def _build_time_ordered_source(spark: SparkSession, sf_dir: str) -> str:
-    """Write the events table as a time-ordered multi-file stream source
-    (range-partitioned on ts, strictly increasing mtimes) plus the
-    far-future flush sentinel as the last-arriving file. Caller removes
-    the returned directory."""
-    import glob
-    import os
-
-    src = tempfile.mkdtemp(prefix="smartreader_eventstream_src_")
-    try:
-        return _fill_time_ordered_source(spark, sf_dir, src, glob, os)
-    except BaseException:
-        shutil.rmtree(src, ignore_errors=True)
-        raise
-
-
-def _fill_time_ordered_source(spark, sf_dir, src, glob, os) -> str:
-    (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .repartitionByRange(4, "ts")
-        .write.mode("append")
-        .parquet(src)
-    )
-    # range partition k holds the k-th time slice and the writer names
-    # it part-0000k — mtime-order the files to match, so the
-    # mtime-ordered stream listing replays the log in time order
-    t0 = os.path.getmtime(src)
-    real = sorted(glob.glob(f"{src}/part-*.parquet"))
-    for i, p in enumerate(real):
-        os.utime(p, (t0 + 2 * i, t0 + 2 * i))
-    spark.createDataFrame(
-        [(-1, FLUSH_TS, -1, FLUSH_TYPE, 0.0, "{}")],
-        "event_id long, ts_s string, user_id long, "
-        "event_type string, value double, props string",
-    ).select(
-        "event_id",
-        F.col("ts_s").cast("timestamp_ntz").alias("ts"),
-        "user_id", "event_type", "value", "props",
-    ).coalesce(1).write.mode("append").parquet(src)
-    for p in glob.glob(f"{src}/part-*.parquet"):
-        if p not in real:
-            os.utime(p, (t0 + 1000, t0 + 1000))
-    return src
-
-
-def _drain(spark: SparkSession, src: str, plan_fn,
-           max_files_per_trigger: int) -> DataFrame:
-    from .extract_stream import run_bounded_to_df
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(src)
-    )
-    return run_bounded_to_df(plan_fn(stream), spark)
-
-
-def stream_event_windows_bounded(spark: SparkSession, sf_dir: str,
-                                 max_files_per_trigger: int = 1) -> DataFrame:
+def stream_event_windows_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded replay of the events table through the WATERMARKED
     windowed aggregation: the batch table is re-laid-out as a multi-file
     stream source plus the flush sentinel, drained with
-    trigger(availableNow=True) through the exactly-once file sink, and
+    an availableNow trigger through the exactly-once file sink, and
     returned as a batch DataFrame of closed windows (epoch-micro bounds,
     sentinel rows excluded)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src = _build_time_ordered_source(spark, sf_dir)
-    try:
-        out = _drain(spark, src, windowed_event_counts, max_files_per_trigger)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    with time_ordered_events(spark, sf_dir) as src:
+        out = drain(spark, windowed_event_counts(
+            read_files(spark, src, EVENTS_SCHEMA, 1)))
 
     micros = lambda c: F.unix_micros(F.col(c))  # noqa: E731
     return (
@@ -201,18 +126,14 @@ def session_event_windows(events_stream: DataFrame) -> DataFrame:
     )
 
 
-def stream_event_sessions_bounded(spark: SparkSession, sf_dir: str,
-                                  max_files_per_trigger: int = 1) -> DataFrame:
+def stream_event_sessions_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded replay through the session-window aggregation; a session
     is emitted exactly once, when the watermark passes its end (last
     event + gap) — the flush sentinel closes every real session. The
     sentinel's own session is keyed by user_id -1 and excluded."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src = _build_time_ordered_source(spark, sf_dir)
-    try:
-        out = _drain(spark, src, session_event_windows, max_files_per_trigger)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    with time_ordered_events(spark, sf_dir) as src:
+        out = drain(spark, session_event_windows(
+            read_files(spark, src, EVENTS_SCHEMA, 1)))
 
     micros = lambda c: F.unix_micros(F.col(c))  # noqa: E731
     return (

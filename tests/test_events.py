@@ -260,37 +260,28 @@ def test_stream_windows_span_batches_with_zero_drops(spark):
     watermark genuinely advances between them) and the state operator
     reports zero rows dropped by watermark — the property the
     time-ordered source layout exists to provide."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    from smartreader_spark.streaming.window_stream import (
-        _build_time_ordered_source,
-        windowed_event_counts,
+    from smartreader_spark.streaming.replay import (
+        EVENTS_SCHEMA,
+        read_files,
+        time_ordered_events,
     )
+    from smartreader_spark.streaming.window_stream import windowed_event_counts
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src = _build_time_ordered_source(spark, SF)
-    sink = _tempfile.mkdtemp(prefix="wsink_")
-    ckpt = _tempfile.mkdtemp(prefix="wckpt_")
+    sink = tempfile.mkdtemp(prefix="wsink_")
+    ckpt = tempfile.mkdtemp(prefix="wckpt_")
     try:
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp_ntz, user_id long, "
-                "event_type string, value double, props string"
+        with time_ordered_events(spark, SF) as src:
+            stream = read_files(spark, src, EVENTS_SCHEMA, 1)
+            q = (
+                windowed_event_counts(stream)
+                .writeStream.format("parquet")
+                .option("path", sink)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
             )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            windowed_event_counts(stream)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+            q.awaitTermination()
         progress = q.recentProgress
         data_batches = [p for p in progress if p["numInputRows"] > 0]
         assert len(data_batches) >= 3  # 4 range files + flush
@@ -308,9 +299,8 @@ def test_stream_windows_span_batches_with_zero_drops(spark):
         ]
         assert len(set(wms)) >= 3
     finally:
-        _shutil.rmtree(src, ignore_errors=True)
-        _shutil.rmtree(sink, ignore_errors=True)
-        _shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(sink, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_stream_windows_match_batch_restatement(spark):
