@@ -34,7 +34,6 @@ from .nodeutil import (
     TEXTISH_TAGS,
     clean_matched_nodes,
     clean_styles,
-    get_all_nodes_with_tag,
     get_char_count,
     get_element_ancestors,
     get_link_density,
@@ -746,7 +745,7 @@ class Extractor:
             # the (usually cached) text test first: most paragraphs have
             # text, and then their subtree need not be walked
             if not get_inner_text(paragraph, normalize_spaces=False) and not (
-                get_all_nodes_with_tag(paragraph, ("img", "embed", "object", "iframe"))
+                paragraph.get_elements_by_tag_name("img", "embed", "object", "iframe")
             ):
                 paragraph.remove()
                 self.metrics["nodes_stripped"] += 1
@@ -881,8 +880,8 @@ class Extractor:
                 if copy_to:
                     if elem.tag in ("img", "picture"):
                         elem.set_attribute(copy_to, value)
-                    elif elem.tag == "figure" and not get_all_nodes_with_tag(
-                        elem, ("img", "picture")
+                    elif elem.tag == "figure" and not elem.get_elements_by_tag_name(
+                        "img", "picture"
                     ):
                         img = Element("img")
                         img.set_attribute(copy_to, value)
@@ -1050,8 +1049,8 @@ class Extractor:
                 else:
                     link.set_attribute("href", to_absolute_uri(uri, href))
 
-        for media in get_all_nodes_with_tag(
-            article_content, ("img", "picture", "figure", "video", "audio", "source")
+        for media in article_content.get_elements_by_tag_name(
+            "img", "picture", "figure", "video", "audio", "source"
         ):
             src = media.get_attribute("src")
             if src is not None:

@@ -372,9 +372,3 @@ def has_ancestor_tag(node: Element, tag: str, max_depth: int = 3, filter_fn=None
         cur = parent
         depth += 1
     return False
-
-
-def get_all_nodes_with_tag(root: Element, tags) -> list[Element]:
-    """NodeUtility.cs:198-201 (QuerySelectorAll over tag list), snapshot,
-    document order."""
-    return root.get_elements_by_tag_name(*tags)

@@ -41,23 +41,12 @@ def extract_html(html: str, uri: str = DEFAULT_URI, options: Options | None = No
         return _error_result(result.error, title=result.title)
 
     if result.content is None:
-        return {
-            "spans": [],
-            "title": result.title or None,
-            "byline": None,
-            "dir": None,
-            "language": None,
-            "excerpt": None,
-            "site_name": None,
-            "author": None,
-            "published_at": None,
-            "featured_image": None,
-            "alternative_language_uris": dict(result.alternative_language_uris or {}),
-            "reading_time_sec": 0,
-            "is_readable": bool(result.is_readable),
-            "metrics": result.metrics or _zero_metrics(),
-            "error": None,
-        }
+        return _result(
+            title=result.title or None,
+            alternative_language_uris=dict(result.alternative_language_uris or {}),
+            is_readable=bool(result.is_readable),
+            metrics=result.metrics or _zero_metrics(),
+        )
 
     opts = options
     element_text = result.content.text_content
@@ -75,23 +64,22 @@ def extract_html(html: str, uri: str = DEFAULT_URI, options: Options | None = No
     serializer = getattr(opts, "serializer", None) or dom_to_output_spans
     ttr_min = time_to_read_minutes(element_text, plaintext, language)
 
-    return {
-        "spans": serializer(result.content),
-        "title": result.title or None,
-        "byline": result.byline,
-        "dir": result.dir,
-        "language": language,
-        "excerpt": excerpt,
-        "site_name": result.site_name,
-        "author": result.author,
-        "published_at": result.publication_date,
-        "featured_image": result.featured_image,
-        "alternative_language_uris": dict(result.alternative_language_uris or {}),
-        "reading_time_sec": ttr_min * 60,
-        "is_readable": bool(result.is_readable),
-        "metrics": result.metrics,
-        "error": None,
-    }
+    return _result(
+        spans=serializer(result.content),
+        title=result.title or None,
+        byline=result.byline,
+        dir=result.dir,
+        language=language,
+        excerpt=excerpt,
+        site_name=result.site_name,
+        author=result.author,
+        published_at=result.publication_date,
+        featured_image=result.featured_image,
+        alternative_language_uris=dict(result.alternative_language_uris or {}),
+        reading_time_sec=ttr_min * 60,
+        is_readable=bool(result.is_readable),
+        metrics=result.metrics,
+    )
 
 
 def extract_spans(spans: list[dict], uri: str = DEFAULT_URI,
@@ -106,10 +94,13 @@ def _zero_metrics() -> dict:
     return {"candidates_scored": 0, "nodes_stripped": 0, "chars_retained": 0}
 
 
-def _error_result(error: str, title: str | None = None) -> dict:
+def _result(**fields) -> dict:
+    """The one result record: every key at its empty default (a fresh
+    dict each call), overridden by `fields`. Key order is the record's,
+    whatever the order of `fields`."""
     return {
         "spans": [],
-        "title": title,
+        "title": None,
         "byline": None,
         "dir": None,
         "language": None,
@@ -122,5 +113,11 @@ def _error_result(error: str, title: str | None = None) -> dict:
         "reading_time_sec": 0,
         "is_readable": False,
         "metrics": _zero_metrics(),
-        "error": error,
+        "error": None,
+        **fields,
     }
+
+
+def _error_result(error: str, title: str | None = None) -> dict:
+    # unlike the no-content record, the title is kept as given ("" stays "")
+    return _result(title=title, error=error)
