@@ -74,10 +74,11 @@ def read_extracted(spark: SparkSession, output_path: str) -> DataFrame:
 
     The retry policy (load_ledger excludes errored docs from the ledger)
     means a document that errored in run K and succeeded in run K+1 has
-    TWO rows in the output, under different run_id= partitions. On
-    Iceberg the write path is MERGE INTO (sources/io.write_ledgered), so
-    the duplicate never exists; on the plain-parquet emulation this
-    reader collapses it — error-free row preferred, then the latest run.
+    TWO rows in the output, under different run_id= partitions: the
+    runner always appends parquet (it does not go through
+    sources/io.write_ledgered, whose MERGE INTO would upsert on an
+    Iceberg table), and this reader collapses the duplicate — error-free
+    row preferred, then the latest run.
 
     Cost note for 100-TB reads: the window shuffles on doc_id. Pay it
     only when retries actually happened (any lineage row with errors >
@@ -139,7 +140,9 @@ def run_resumable_extraction(
     an earlier run and succeeded on retry has BOTH rows in the raw
     output (append-only parquet). Consumers must read through
     `read_extracted` (error-free row wins, then latest run) or filter
-    `error IS NULL`; on Iceberg the MERGE-INTO path upserts instead."""
+    `error IS NULL`. The data is appended as parquet whatever the
+    target; the MERGE-INTO upsert of `sources/io.write_ledgered` is not
+    used here."""
     from .extract import EXTRACT_SCHEMA, extract_articles
 
     run_id = run_id or f"run-{time.time_ns()}"

@@ -9,11 +9,11 @@ Three pieces, each written once:
   (each operator passes its count as a literal at its one call).
 - `drain` — an availableNow trigger through the exactly-once parquet
   file sink, then the rows are collected on the driver and rebuilt,
-  so the returned DataFrame has NO lineage to the sink (a
-  cached partition evicted later would otherwise recompute against
-  the deleted sink and fail with FileNotFoundException; gate-sized
-  data makes the collect cheap). Sink and checkpoint live in one
-  temporary directory that is removed whether or not the query fails.
+  so the returned DataFrame has NO lineage to the sink (a cached
+  partition evicted later would otherwise recompute against the
+  deleted sink and fail with FileNotFoundException; gate-sized data
+  makes the collect cheap). Sink and checkpoint live in one temporary
+  directory that is removed whether or not the query fails.
 - `time_ordered_events` — the events table laid out so that nothing is
   ever late. The file source advances the watermark from each batch's
   max event time, and a window evicted at batch N's commit silently
@@ -39,6 +39,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.events import _events
 
 FLUSH_TYPE = "__flush__"
 #: far-future sentinel (2100-01-01T00:00:00) — past every real event,
@@ -87,8 +89,6 @@ def time_ordered_events(spark: SparkSession, sf_dir: str) -> Iterator[str]:
     last-arriving file; the directory is removed on exit. Reading
     through `functions.events._events` pins the session timezone to UTC,
     which the operators' NTZ->TIMESTAMP casts rely on."""
-    from ..functions.events import _events
-
     with tempfile.TemporaryDirectory(prefix="smartreader_eventstream_src_",
                                      ignore_cleanup_errors=True) as src:
         (

@@ -22,8 +22,7 @@ sys.path.append(
     os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
 )
 from pages import generate_pages  # noqa: E402  (perfbench/, read-only)
-
-SF = "/root/testdata/sf0.001"
+from test_events import SF  # noqa: E402  (the event tests' sf tables)
 
 
 @pytest.fixture(scope="module")
