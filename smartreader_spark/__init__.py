@@ -4,16 +4,16 @@ A from-scratch reimplementation of the extraction semantics of
 Strumenta/SmartReader (itself a port of Mozilla Readability) designed for
 Spark's execution model: a pure-Python per-document kernel (no Spark
 dependency, pytest-testable) wrapped in vectorized Arrow ``mapInPandas``
-batches, with one scan spreader (``layout.spread``), a checkpoint/resume
-ledger and per-partition lineage + metrics.
+batches, with one scan spreader (``layout.spread``), one resumable run
+over a done-ledger (``pipeline.checkpoint.run_resumable``) and
+per-partition lineage + metrics.
 
 Layout:
   kernel/     pure-Python extraction kernel (DOM parse -> article spans + metadata)
   pipeline/   Spark DataFrame tier (scan, spread, mapInPandas, ledger, metrics)
   functions/  corpus-level ops (dedup, similarity, text QA, events) on plain tables
   streaming/  Structured Streaming operators on one bounded-replay path (replay.py)
-  sources/    output writers (parquet, or Iceberg when its runtime is
-              present) and the generated PDF corpus
+  sources/    the generated PDF corpus
   memo.py     session memo for shared intermediate results
   layout.py   the scan spreader
   sqltext.py  SQL literals built from Python values

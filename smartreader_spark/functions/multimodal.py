@@ -31,17 +31,6 @@ from pyspark.sql import types as T
 
 from smartreader_spark.layout import spread
 
-# one row per media object extracted from a document's spans
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("kind", T.StringType()),  # img | video | audio | ...
-        T.StructField("payload", T.BinaryType()),  # opaque bytes (may be null)
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),

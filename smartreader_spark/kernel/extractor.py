@@ -71,7 +71,6 @@ UNLIKELY_ROLES = frozenset(
 )
 
 _H1_H6 = ("h1", "h2", "h3", "h4", "h5", "h6")
-_WHITESPACE_RE = re.compile(r"^\s*$")
 
 
 @dataclass

@@ -60,9 +60,6 @@ _MASTER = re.compile(
     re.VERBOSE,
 )
 
-# no-attribute fast path for the in-tag body: empty or whitespace only
-_WS_ONLY = re.compile(r"[\s/]*\Z")
-
 # Full closing-tag regexes, exactly like stdlib set_cdata_mode (3.11):
 # ``re.compile(r'</\s*%s\s*>' % elem, re.I)``. A partial closer such as
 # '</script' (no '>') or '</scriptx>' never matches and therefore stays

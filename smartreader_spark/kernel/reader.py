@@ -35,10 +35,10 @@ def extract_html(html: str, uri: str = DEFAULT_URI, options: Options | None = No
         ex = Extractor(uri, html, options=options, language=language)
         result = ex.parse()
     except Exception as exc:  # error article (SmartReader.cs:592-597)
-        return _error_result(repr(exc))
+        return _result(error=repr(exc))
 
     if result.error is not None:
-        return _error_result(result.error, title=result.title)
+        return _result(title=result.title or None, error=result.error)
 
     if result.content is None:
         return _result(
@@ -116,8 +116,3 @@ def _result(**fields) -> dict:
         "error": None,
         **fields,
     }
-
-
-def _error_result(error: str, title: str | None = None) -> dict:
-    # unlike the no-content record, the title is kept as given ("" stays "")
-    return _result(title=title, error=error)

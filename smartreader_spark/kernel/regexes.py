@@ -88,37 +88,15 @@ JSONLD_CDATA = re.compile(r"^\s*<!\[CDATA\[|\]\]>\s*$")
 # Readability.cs — srcset URL splitter (RE_SrcSetUrl, :25)
 SRCSET_URL = re.compile(r"(\S+)(\s+[\d.]+[xw])?(\s*(?:,|$))")
 
-# Readability.cs meta-name / meta-property patterns (:520-610)
-META_NAME_PATTERN = re.compile(
-    r"^\s*((dc|dcterm|og|twitter|parsely|weibo:(article|webpage))\s*[-.:]\s*"
-    r"(author|creator|pub-date|description|title|image|image-url|site_name)|name)\s*$",
-    re.IGNORECASE,
-)
-META_PROPERTY_PATTERN = re.compile(
-    r"\s*(dc|dcterm|og|twitter|article|parsely)\s*:\s*"
-    r"(author|creator|description|title|published_time|image|site_name|pub-date|image-url)",
-    re.IGNORECASE,
-)
-
 # Readability.cs:246-249 word splitter; TextSimilarity tokenizer :324-336
 WHITESPACE = re.compile(r"\s+")
 NON_WORD_TOKENIZER = re.compile(r"\W+", re.UNICODE)
-
-# Readability.cs title separators (:228-314)
-TITLE_SEPARATOR = re.compile(r" [\|\-\\/>»–—] ")
-TITLE_HIERARCHY_SEP = re.compile(r" [\\/>»] ")
-
-# URL-path date fallback (Readability.cs:803-817)
-URL_DATE = re.compile(r"/(20\d{2})/(\d{2})/(\d{1,2})?/?")
 
 # base64 data-uri detector used by FixLazyImages (SmartReader.cs:1813-1906)
 B64_DATA_URL = re.compile(r"^data:\s*([^\s;,]+)\s*;\s*base64\s*,", re.IGNORECASE)
 IMG_EXT_ANYWHERE = re.compile(r"\.(jpg|jpeg|png|webp)", re.IGNORECASE)
 IMG_EXT_CANDIDATE = re.compile(r"^\s*\S+\.(jpg|jpeg|png|webp)\S*\s*$", re.IGNORECASE)
 SRCSET_CANDIDATE = re.compile(r"\.(jpg|jpeg|png|webp)\s+\d", re.IGNORECASE)
-
-# byline text cleanup (SmartReader.cs:974)
-BYLINE_PREFIX = re.compile(r"^\s*by[\s:]+|\{\{[^}]*\}\}", re.IGNORECASE)
 
 # sentence-ish paragraph test in sibling merge (SmartReader.cs:1470)
 SENTENCE_DOT = re.compile(r"\.( |$)")
@@ -128,8 +106,6 @@ PRE_CLEAN = re.compile(r"<p>\s*(&nbsp;| |\s)*\s*</p>", re.IGNORECASE)
 
 # hash-link for link-density discount (NodeUtility.cs:473-490)
 HASH_URL = re.compile(r"^#.+")
-
-_FLAG_MAP = {"i": re.IGNORECASE, "m": re.MULTILINE, "s": re.DOTALL}
 
 
 def build_regexes(overrides: dict[str, str] | None = None,

@@ -11,8 +11,10 @@ Design notes for 100 TB / 10^12-document scale:
   consecutive 10 MB pages land on different tasks and every task gets
   the same number of documents; with many documents per partition the
   byte totals even out.
-* Resumability: a done-ledger table keyed by doc_id; restart = left-anti
-  join input against the ledger (broadcast when small) and append.
+* Resumability: the output table is the done-ledger keyed by doc_id;
+  restart = left-anti join input against the ledger (broadcast when
+  small) and append under the run's own run_id= partition. One runner,
+  `checkpoint.run_resumable`, does this for the HTML and PDF legs.
 * Arrow batch size is bounded by records only (session.ARROW_MAX_RECORDS):
   a batch's bytes are at most the record cap × the largest document, as
   nothing upstream groups documents of similar size.

@@ -10,17 +10,17 @@ metrics, dedup, textqa, similarity — runs on them unchanged.
 Execution shape mirrors pipeline/extract.py: prune → round-robin
 spread (PDFs skew like HTML pages; see smartreader_spark/layout.py) →
 mapInPandas with Arrow-batched binary columns. Per-document
-failures land in the `error` column instead of failing the task (the
-resume ledger then retries them, pipeline/checkpoint.py).
+failures land in the `error` column instead of failing the task; a
+resume through `checkpoint.run_resumable` with `pdf_done_predicate`
+retries only the retryable ones.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from smartreader_spark.layout import spread
-from smartreader_spark.observed import observed_value
 
 from .extract import SPAN_TYPE
 
@@ -61,50 +61,13 @@ def is_permanent_error():
 def pdf_done_predicate():
     """Ledger predicate for the PDF leg: done = extracted cleanly OR
     failed permanently (retrying a PdfParseError/PdfDegraded blob cannot
-    change the outcome — the blob is what it is). Pass this to
-    ``checkpoint.load_ledger(..., done_predicate=pdf_done_predicate())``;
-    only PdfCrash rows stay retryable."""
+    change the outcome — the blob is what it is). Pass it as
+    ``checkpoint.run_resumable(..., pdf_to_span_table,
+    done_predicate=pdf_done_predicate())``; only PdfCrash rows stay
+    retryable."""
     from pyspark.sql import functions as F
 
     return F.col("error").isNull() | is_permanent_error()
-
-
-def run_resumable_pdf_ingest(
-    spark,
-    input_df: DataFrame,
-    output_path: str,
-    *,
-    num_partitions: int | None = None,
-    run_id: str | None = None,
-) -> dict:
-    """Resumable PDF ingest mirroring checkpoint.run_resumable_extraction,
-    with the taxonomy-aware ledger: a resume re-parses only docs that are
-    missing or whose previous failure was retryable (PdfCrash). Degraded
-    and container-broken blobs stay ledgered — no retry-forever loop."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from .checkpoint import load_ledger, remaining_input
-
-    run_id = run_id or f"pdfrun-{time.time_ns()}"
-    ledger = load_ledger(
-        spark, output_path, done_predicate=pdf_done_predicate(),
-        schema="doc_id long, error string",
-    )
-    todo = remaining_input(input_df, ledger)
-    out = pdf_to_span_table(todo, num_partitions=num_partitions)
-    # the run's doc count is observed while its rows are written, not read
-    # back from the output
-    obs = Observation()
-    out.withColumn("run_id", F.lit(run_id)).observe(
-        obs, F.count("*").alias("docs")
-    ).write.mode("append").partitionBy("run_id").parquet(output_path)
-    run_docs = observed_value(
-        obs, "docs",
-        lambda: spark.read.parquet(output_path).filter(F.col("run_id") == run_id).count(),
-    )
-    return {"run_id": run_id, "output_path": output_path, "run_docs": int(run_docs)}
 
 
 def _pdf_batch(batches):

@@ -77,11 +77,6 @@ def package_zip(out_path: str = "/tmp/smartreader_spark_pkg.zip") -> str:
     return out_path
 
 
-def ship_package(spark: SparkSession) -> None:
-    """Make smartreader_spark importable on executors (addPyFile)."""
-    spark.sparkContext.addPyFile(package_zip())
-
-
 def warm_python_workers(spark: SparkSession, n_workers: int) -> None:
     """Pre-fork the Python worker pool while the cluster is otherwise idle.
     Creating workers lazily *during* the first real mapInPandas stage

@@ -1,3 +1,1 @@
-"""Source/sink layer: Iceberg-first with parquet fallback."""
-
-from .io import write_articles, write_ledgered  # noqa: F401
+"""Sources: the deterministic synthetic PDF corpus (`pdf_corpus`)."""

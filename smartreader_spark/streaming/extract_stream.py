@@ -18,7 +18,7 @@ from .replay import drain, read_files
 
 
 def extraction_query(spark: SparkSession, source_dir: str, sink_dir: str,
-                     checkpoint_dir: str, options: dict | None = None):
+                     checkpoint_dir: str):
     """Start the end-to-end streaming job: the extraction operator,
     reused verbatim over a files-arrival stream of the span-table
     directory (stateless maps are streaming-safe; swap for Kafka by
@@ -26,8 +26,7 @@ def extraction_query(spark: SparkSession, source_dir: str, sink_dir: str,
     file-sink semantics (checkpointed offsets + file manifest). No
     repartition inside the streaming plan: micro-batches bound the
     per-trigger volume."""
-    out = extract_articles(read_files(spark, source_dir, INPUT_SCHEMA, 8),
-                           options=options)
+    out = extract_articles(read_files(spark, source_dir, INPUT_SCHEMA, 8))
     return (
         out.writeStream.format("parquet")
         .option("path", sink_dir)
@@ -37,8 +36,7 @@ def extraction_query(spark: SparkSession, source_dir: str, sink_dir: str,
     )
 
 
-def stream_extract_bounded(spark: SparkSession, source_dir: str,
-                           options: dict | None = None) -> DataFrame:
+def stream_extract_bounded(spark: SparkSession, source_dir: str) -> DataFrame:
     """Bounded replay of an existing span-table directory through the
     STREAMING plan: `replay.drain` empties the directory as
     rate-limited micro-batches through the exactly-once file sink, then
@@ -47,5 +45,4 @@ def stream_extract_bounded(spark: SparkSession, source_dir: str,
     `extract_corpus` query, proving batch/stream parity of the
     extraction tier (stateless maps are trigger-partitioning-invariant).
     """
-    return drain(spark, extract_articles(
-        read_files(spark, source_dir, INPUT_SCHEMA, 2), options=options))
+    return drain(spark, extract_articles(read_files(spark, source_dir, INPUT_SCHEMA, 2)))

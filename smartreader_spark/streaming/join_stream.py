@@ -31,9 +31,6 @@ from pyspark.sql import functions as F
 from .replay import EVENTS_SCHEMA, drain, read_files, time_ordered_events
 from .window_stream import WATERMARK_SPEC
 
-#: interval width: errors up to 1 h BEFORE the click
-INTERVAL_MICROS = 3600 * 1_000_000
-
 
 def interval_join_clicks_errors(clicks: DataFrame,
                                 errors: DataFrame) -> DataFrame:

@@ -1,8 +1,9 @@
 """Checkpoint/resume over a small synthetic spans table (no fixture
 corpus needed): the ledger anti-join, per-run lineage, the run's doc
-count observed on the lineage write, the job count of one resumed run,
-and the ledger's behaviour on empty and unreadable output directories,
-and on an output named by its ``file://`` URI."""
+count observed on the data write (on the HTML and the PDF leg), the job
+count of one resumed run, and the ledger's behaviour on empty and
+unreadable output directories, and on an output named by its
+``file://`` URI."""
 
 import os
 
@@ -16,9 +17,12 @@ from smartreader_spark.pipeline import checkpoint
 from smartreader_spark.pipeline.checkpoint import (
     load_ledger,
     remaining_input,
+    run_resumable,
     run_resumable_extraction,
 )
 from smartreader_spark.pipeline.extract import INPUT_SCHEMA
+from smartreader_spark.pipeline.pdf_ingest import pdf_done_predicate, pdf_to_span_table
+from smartreader_spark.sources.pdf_corpus import make_pdf
 
 N_DOCS = 12
 N_PRIOR = 5
@@ -54,6 +58,22 @@ def _page(i: int) -> str:
 def spans(spark):
     rows = [(f"d{i:02d}", html_to_input_spans(_page(i))) for i in range(N_DOCS)]
     return spark.createDataFrame(rows, INPUT_SCHEMA).cache()
+
+
+@pytest.fixture(scope="module")
+def pdfs(spark):
+    rows = [(i, bytearray(make_pdf(i))) for i in range(N_DOCS)]
+    return spark.createDataFrame(rows, "doc_id long, pdf binary").cache()
+
+
+def _run_leg(spark, leg, docs, out, run_id):
+    """One resumable run of the HTML leg (with its lineage) or the PDF leg."""
+    if leg == "html":
+        return run_resumable_extraction(spark, docs, out, run_id=run_id)
+    return run_resumable(
+        spark, docs, out, lambda todo: pdf_to_span_table(todo, num_partitions=1),
+        done_predicate=pdf_done_predicate(), run_id=run_id,
+    )
 
 
 def _prior(spark, spans, out):
@@ -100,15 +120,23 @@ def test_resume_extracts_only_the_remainder(spark, spans, tmp_path, form):
     assert len(jobs) <= 4, sorted(jobs)
 
 
-def test_run_docs_falls_back_when_metrics_never_arrive(spark, spans, tmp_path, monkeypatch):
+@pytest.mark.parametrize("leg", ["html", "pdf"])
+def test_run_docs_falls_back_when_metrics_never_arrive(
+    spark, spans, pdfs, tmp_path, monkeypatch, leg
+):
     """An observation whose metrics are never posted must not hang the
-    run: the bounded wait runs the lineage aggregate instead."""
+    run: the bounded wait counts the run's partition read back instead."""
     out = str(tmp_path / "out")
-    _prior(spark, spans, out)
+    docs = spans if leg == "html" else pdfs
+    first = sorted(r.doc_id for r in docs.select("doc_id").collect())[:N_PRIOR]
+    _run_leg(spark, leg, docs.filter(F.col("doc_id").isin(first)), out, "prior")
     monkeypatch.setattr(checkpoint, "Observation", NeverPosted)
     monkeypatch.setattr(observed, "OBSERVED_WAIT_S", 0.2)
-    r = run_resumable_extraction(spark, spans, out, run_id="resume")
-    assert r["run_docs"] == N_DOCS - N_PRIOR == _lineage_docs(spark, out, "resume")
+    r = _run_leg(spark, leg, docs, out, "resume")
+    written = spark.read.parquet(out).filter(F.col("run_id") == "resume").count()
+    assert r["run_docs"] == N_DOCS - N_PRIOR == written
+    if leg == "html":
+        assert _lineage_docs(spark, out, "resume") == written
 
 
 def test_empty_output_dir_is_an_empty_ledger(spark, spans, tmp_path):

@@ -184,15 +184,6 @@ def test_streaming_extraction_end_to_end(spark):
     try:
         load_corpus(spark).limit(12).repartition(3).write.parquet(src)
         q = extraction_query(spark, src, sink, ckpt)
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if not q.isActive or (q.lastProgress and q.lastProgress["numInputRows"] == 0
-                                  and q.recentProgress):
-                # all files consumed when a trigger reports 0 input rows
-                done = sum(p["numInputRows"] for p in q.recentProgress) >= 12
-                if done:
-                    break
-            time.sleep(2)
         q.processAllAvailable()
         q.stop()
         out = spark.read.parquet(sink)

@@ -250,6 +250,7 @@ def test_pathological_inputs_do_not_crash():
 def test_max_elems_guard():
     r = extract_html("<p>a</p>" * 100, options=Options(max_elems_to_parse=10))
     assert r["error"] is not None and "Aborting" in r["error"]
+    assert r["title"] is None
 
 
 def test_pluggable_article_hooks():

@@ -185,54 +185,6 @@ def test_whole_stage_codegen_covers_analytics(spark):
     assert "partial_sum" in plan
 
 
-def test_iceberg_merge_plan_shape(spark):
-    """The Iceberg runtime jar is absent from this sandbox, so the upsert
-    can't EXECUTE here — but Spark's SQL parser is jar-independent, so the
-    statement `write_ledgered` submits must still compile to a
-    MergeIntoTable logical plan with the doc_id join condition and both
-    matched/not-matched actions (execution is covered by the companion
-    test below wherever a jar is vendored)."""
-    from smartreader_spark.sources.io import merge_upsert_sql
-
-    sql = merge_upsert_sql("warehouse.db.articles", "updates")
-    jparser = spark._jsparkSession.sessionState().sqlParser()
-    plan_str = jparser.parsePlan(sql).toString()
-    assert "MergeIntoTable" in plan_str, plan_str[:500]
-    assert "doc_id" in plan_str
-    # both row-level actions present (retry-replaces + fresh-inserts)
-    assert "update" in plan_str.lower()
-    assert "insert" in plan_str.lower()
-
-
-def test_iceberg_merge_executes_with_runtime_jar(spark):
-    """Real end-to-end upsert — runs only where iceberg-spark-runtime is
-    on the classpath (documented gap: the jar is not vendorable offline
-    in this sandbox; VERDICT r2 'What's missing' #2)."""
-    from smartreader_spark.sources.io import _iceberg_available
-
-    if not _iceberg_available(spark):
-        pytest.skip("iceberg-spark-runtime jar absent: parse-level plan "
-                    "shape asserted in test_iceberg_merge_plan_shape; "
-                    "execution requires the jar")
-
-    import uuid
-
-    tbl = f"iceberg_test.db.t_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"CREATE TABLE {tbl} (doc_id BIGINT, text STRING, error STRING) USING iceberg")
-    try:
-        from smartreader_spark.sources.io import write_ledgered
-
-        spark.createDataFrame([(1, "old", "boom")],
-                              "doc_id long, text string, error string").writeTo(tbl).append()
-        write_ledgered(
-            spark.createDataFrame([(1, "new", None), (2, "fresh", None)],
-                                  "doc_id long, text string, error string"), tbl)
-        rows = {r.doc_id: r for r in spark.table(tbl).collect()}
-        assert len(rows) == 2 and rows[1].text == "new" and rows[1].error is None
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
 def test_pipeline_end_to_end_plan_shape(spark):
     """The composed training pipeline's plan must show ONE extraction
     pass per leg (2 distinct MapInPandas, behind the cache barrier, even

@@ -128,12 +128,15 @@ def test_unified_doc_table_pdf_source_injection(spark, tmp_path):
     assert pdf_ids2 == pdf_ids
 
 
-def test_resumable_pdf_ingest_skips_permanent_failures(spark, tmp_path):
+@pytest.mark.parametrize("form", ["path", "uri"])
+def test_resumable_pdf_ingest_skips_permanent_failures(spark, tmp_path, form):
     """A resume over PDF output must NOT re-parse permanently-failed
     blobs: PdfParseError (container) and PdfDegraded (partial data loss)
     are ledgered as done via pdf_done_predicate — only missing docs and
-    retryable PdfCrash rows would run again."""
-    from smartreader_spark.pipeline.pdf_ingest import run_resumable_pdf_ingest
+    retryable PdfCrash rows would run again. `form` names the output by
+    a bare local path or by the ``file://`` URI of the same directory."""
+    from smartreader_spark.pipeline.checkpoint import run_resumable
+    from smartreader_spark.pipeline.pdf_ingest import pdf_done_predicate, pdf_to_span_table
     from smartreader_spark.sources.pdf_corpus import make_pdf
 
     degraded = bytearray(make_pdf(1))  # corrupt page 1's Flate stream
@@ -148,16 +151,19 @@ def test_resumable_pdf_ingest_skips_permanent_failures(spark, tmp_path):
         ],
         "doc_id long, pdf binary",
     )
-    out = str(tmp_path / "pdf_out")
+    out = str(tmp_path / "pdf_out") if form == "path" else (tmp_path / "pdf_out").as_uri()
     sc = spark.sparkContext
     jobs = []
     for run in ("first", "resume"):
-        sc.setJobGroup(f"pdf-{run}-under-test", f"pdf ingest, {run} run")
+        sc.setJobGroup(f"pdf-{run}-{form}-under-test", f"pdf ingest, {run} run")
         try:
-            r = run_resumable_pdf_ingest(spark, corpus, out, num_partitions=1)
+            r = run_resumable(
+                spark, corpus, out, lambda todo: pdf_to_span_table(todo, num_partitions=1),
+                done_predicate=pdf_done_predicate(),
+            )
         finally:
             sc.setJobGroup("after-pdf-ingest", "")
-        jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"pdf-{run}-under-test")))
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"pdf-{run}-{form}-under-test")))
         assert r["run_docs"] == (3 if run == "first" else 0), "permanent failures were retried"
     # the run's doc count is observed on the data write: no schema-inference
     # read or count of the output (5 jobs per run when it was read back)
