@@ -486,11 +486,10 @@ def _serialize(node: Node, out: list[str]) -> None:
 class Document(Element):
     """Root node; always has html > (head, body)."""
 
-    __slots__ = ("base_uri",)
+    __slots__ = ()
 
     def __init__(self) -> None:
         super().__init__("#document")
-        self.base_uri: str | None = None
 
     @property
     def document_element(self) -> Element:

@@ -37,7 +37,6 @@ from .nodeutil import (
     get_char_count,
     get_element_ancestors,
     get_link_density,
-    get_node_ancestors,
     get_row_and_column_count,
     has_ancestor_tag,
     has_child_block_element,
@@ -481,7 +480,7 @@ class Extractor:
                 inner_text = get_inner_text(element_to_score)
                 if len(inner_text) < opts.paragraph_threshold:
                     continue
-                ancestors = get_node_ancestors(element_to_score, opts.ancestors_depth)
+                ancestors = get_element_ancestors(element_to_score, opts.ancestors_depth)
                 if not ancestors:
                     continue
 
@@ -540,7 +539,7 @@ class Extractor:
                 top_score = _get_score(top_candidate)
                 for i in range(1, len(top_candidates)):
                     if top_score != 0 and _get_score(top_candidates[i]) / top_score >= 0.75:
-                        alternative_ancestors.append(get_node_ancestors(top_candidates[i]))
+                        alternative_ancestors.append(get_element_ancestors(top_candidates[i]))
                 MINIMUM_TOPCANDIDATES = 3
                 if len(alternative_ancestors) >= MINIMUM_TOPCANDIDATES:
                     parent_of_top = top_candidate.parent

@@ -337,7 +337,9 @@ def get_row_and_column_count(table: Element) -> tuple[int, int]:
 
 
 def get_element_ancestors(el: Element, max_depth: int = 0) -> list[Element]:
-    """NodeUtility.cs:~560-575 (GetElementAncestors)."""
+    """NodeUtility.cs:~560-575 (GetElementAncestors), and GetNodeAncestors
+    too: in this tree a node's parents are always elements, up to the
+    #document root, where both stop."""
     ancestors: list[Element] = []
     i = 0
     node = el
@@ -348,14 +350,6 @@ def get_element_ancestors(el: Element, max_depth: int = 0) -> list[Element]:
             break
         node = node.parent
     return ancestors
-
-
-def get_node_ancestors(el: Element, max_depth: int = 0) -> list[Element]:
-    """NodeUtility.cs GetNodeAncestors — in our tree node parents are always
-    elements (or the document root, which the reference also yields as an
-    ancestor via INode.Parent up to IHtmlDocument; we stop at #document to
-    mirror 'ParentElement is null' guards downstream)."""
-    return get_element_ancestors(el, max_depth)
 
 
 def has_ancestor_tag(node: Element, tag: str, max_depth: int = 3, filter_fn=None) -> bool:

@@ -113,38 +113,16 @@ def _make_extract_batch(options_kwargs: dict | None, base_uri: str):
                 kw["regexes"] = build_regexes(overrides=overrides, additions=additions)
             options = Options(**kw)
 
+        # the kernel's record goes to Arrow as it is: its span and
+        # metrics dicts become the struct columns by field name
         for pdf in batches:
-            recs = []
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                r = extract_html(html, uri=base_uri, options=options)
-                recs.append(
-                    (
-                        doc_id,
-                        [
-                            (s["kind"], s["text"], s["media_ref"], s["offset"])
-                            for s in r["spans"]
-                        ],
-                        r["title"],
-                        r["byline"],
-                        r["dir"],
-                        r["language"],
-                        r["excerpt"],
-                        r["site_name"],
-                        r["author"],
-                        r["published_at"],
-                        r["featured_image"],
-                        r["alternative_language_uris"],
-                        r["reading_time_sec"],
-                        r["is_readable"],
-                        (
-                            r["metrics"]["candidates_scored"],
-                            r["metrics"]["nodes_stripped"],
-                            r["metrics"]["chars_retained"],
-                        ),
-                        r["error"],
-                    )
-                )
-            yield pd.DataFrame(recs, columns=_OUT_COLS)
+            yield pd.DataFrame(
+                [
+                    {"doc_id": doc_id, **extract_html(html, uri=base_uri, options=options)}
+                    for doc_id, html in zip(pdf["doc_id"], pdf["html"])
+                ],
+                columns=_OUT_COLS,
+            )
 
     return extract_batch
 
@@ -152,7 +130,6 @@ def _make_extract_batch(options_kwargs: dict | None, base_uri: str):
 def extract_articles(
     df: DataFrame,
     *,
-    base_uri: str = "https://localhost/",
     options: dict | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
@@ -169,4 +146,4 @@ def extract_articles(
     if num_partitions:
         pruned = spread(pruned, num_partitions)
     flat = pruned.select("doc_id", reassemble_html_expr().alias("html"))
-    return flat.mapInPandas(_make_extract_batch(options, base_uri), EXTRACT_SCHEMA)
+    return flat.mapInPandas(_make_extract_batch(options, "https://localhost/"), EXTRACT_SCHEMA)

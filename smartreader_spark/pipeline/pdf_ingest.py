@@ -81,10 +81,7 @@ def _pdf_batch(batches):
             raw = bytes(blob)
             diags: list[str] = []
             try:
-                spans = [
-                    (s["kind"], s["text"], s["media_ref"], s["offset"])
-                    for s in pdf_to_spans(raw, diagnostics=diags)
-                ]
+                spans = pdf_to_spans(raw, diagnostics=diags)
                 err = "PdfDegraded: " + "; ".join(diags) if diags else None
                 recs.append((doc_id, spans, len(raw), err))
             except PdfParseError as e:

@@ -12,8 +12,8 @@ from pyspark.sql import SparkSession
 # cap approximates a byte cap only when a batch's documents are of similar
 # size, and nothing upstream ensures that: layout.spread deals documents
 # round-robin, so one partition mixes docs of every size. bench.py and
-# perfbench/layers.py import this value; the test sessions set no cap of
-# their own.
+# perfbench/layers.py import this value; the tests (tests/conftest.py)
+# and tools run on the sessions built here.
 ARROW_MAX_RECORDS = 8
 
 
@@ -24,8 +24,12 @@ def make_session(
 ) -> SparkSession:
     """Local/test session. On a real cluster these land in spark-submit
     conf; the Arrow batch cap bounds Python-worker memory when documents
-    are MB-sized (median fixture ≈115 KB → a 256-doc batch ≈30 MB)."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    are MB-sized (median fixture ≈115 KB → a 256-doc batch ≈30 MB).
+    `master` and `shuffle_partitions` default to `SPARK_GRAFT_CPUS`
+    cores, else to the CPUs this process may run on. The driver memory
+    and JVM options take effect only in a process's first session: a
+    later builder's values show in its conf but the JVM keeps its heap."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
     b = (

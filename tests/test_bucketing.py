@@ -12,39 +12,16 @@ managed tables), and that the bucketed plan is value-identical to the
 shuffled one.
 """
 
-import shutil
-import tempfile
-
-import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    wh = tempfile.mkdtemp(prefix="bucketwh_")
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("smartreader-bucketing-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.warehouse.dir", wh)
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
-    s.stop()
-    shutil.rmtree(wh, ignore_errors=True)
 
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_bucketed_join_has_zero_exchanges(spark):
+def test_bucketed_join_has_zero_exchanges(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     tokens = docs.select(
         "doc_id", F.size(F.split(F.trim("text"), r"\s+")).alias("n_tokens")
@@ -53,11 +30,13 @@ def test_bucketed_join_has_zero_exchanges(spark):
         docs.select("doc_id", "source", "n_chars")
         .write.mode("overwrite")
         .bucketBy(8, "doc_id").sortBy("doc_id")
+        .option("path", str(tmp_path / "docs_b"))
         .saveAsTable("docs_b")
     )
     (
         tokens.write.mode("overwrite")
         .bucketBy(8, "doc_id").sortBy("doc_id")
+        .option("path", str(tmp_path / "tokens_b"))
         .saveAsTable("tokens_b")
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

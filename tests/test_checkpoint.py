@@ -28,22 +28,6 @@ N_DOCS = 12
 N_PRIOR = 5
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("smartreader-checkpoint-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
-    s.stop()
-
-
 def _page(i: int) -> str:
     para = " ".join(f"Paragraph {k} of story {i} tells a long, plain tale." for k in range(12))
     return (

@@ -12,28 +12,9 @@ both engines use) and requires row-identical output.
 import math
 from decimal import ROUND_HALF_UP, Decimal
 
-import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("smartreader-components-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
-    s.stop()
 
 
 def _components(spark, n_vertices, edge_list):

@@ -14,23 +14,13 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("smartreader-event-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    yield s
-    s.stop()
+@pytest.fixture(scope="module", autouse=True)
+def utc_session(spark):
+    """The event tests read and compare their timestamps in UTC."""
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    yield
+    spark.conf.set("spark.sql.session.timeZone", old)
 
 
 def _write_events(spark, tmp, rows):

@@ -1,5 +1,5 @@
 """Tests for corpus-level functions: dedup, similarity, textqa, multimodal,
-streaming. Shares the module-scope local session with the pipeline tests."""
+streaming."""
 
 import os
 import shutil
@@ -10,24 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("smartreader-fn-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
-    s.stop()
 
 
 def test_exact_dedup_finds_injected_dups(spark):

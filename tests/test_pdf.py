@@ -104,18 +104,9 @@ def test_error_paths():
     assert all(s["kind"] in ("text", "img") for s in spans)
 
 
-def test_spark_pdf_ingest(spark_session=None):
-    from pyspark.sql import SparkSession
-
+def test_spark_pdf_ingest(spark):
     from smartreader_spark.pipeline.pdf_ingest import pdf_to_span_table
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("smartreader-pdf-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
     df = spark.createDataFrame(pdf_corpus_rows(6), "doc_id long, pdf binary")
     out = pdf_to_span_table(df, num_partitions=2)
     rows = {r.doc_id: r for r in out.collect()}

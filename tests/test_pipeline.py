@@ -1,5 +1,5 @@
 """Spark-tier tests: extraction operator, spread balance, checkpoint/resume,
-span reassembly. Uses a shared local[4] session (module scope)."""
+span reassembly."""
 
 import os
 import shutil
@@ -33,24 +33,6 @@ sys.path.append(
 )
 from pages import generate_pages  # noqa: E402  (perfbench/, read-only)
 from workloads import WEB_PAGES  # noqa: E402
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("smartreader-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
-    s.stop()
 
 
 @pytest.fixture(scope="module")

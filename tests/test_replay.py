@@ -26,24 +26,6 @@ from test_events import SF  # noqa: E402  (the event tests' sf tables)
 
 
 @pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("smartreader-replay-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
-    s.stop()
-
-
-@pytest.fixture(scope="module")
 def pages_dir(spark, tmp_path_factory):
     """12 generated pages (seed 7) as a spans table in 4 parquet files."""
     d = str(tmp_path_factory.mktemp("pages") / "spans")

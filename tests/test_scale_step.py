@@ -16,23 +16,6 @@ import scale_step  # noqa: E402
 SF01 = os.path.join(os.path.dirname(SF), "sf0.01")
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("smartreader-scale-step-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
-
-
 @pytest.mark.parametrize("op", sorted(scale_step.OPS))
 def test_op_keeps_its_invariants_at_x2(spark, op):
     rec = scale_step.step(spark, op, SF, 2, attempts=1)

@@ -38,21 +38,14 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from smartreader_spark.pipeline.session import make_session
 
     only = set(sys.argv[1:])
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "6g")
-        .getOrCreate()
-    )
+    spark = make_session(app_name="oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

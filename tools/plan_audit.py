@@ -3,8 +3,9 @@
 scale-relevant properties called out (pushed filters, read schema,
 join strategies, exchanges, Python nodes, codegen coverage), and print
 one ``name sha256`` line per query: the digest of its executed plan
-with run-specific tokens masked (`plan_digest`), so two commits' plans
-compare with one `diff` of the printed lines.
+with run-specific tokens masked (`mask_plan`), so two commits' plans
+compare with one `diff` of the printed lines. PLANS.md holds the same
+masked plans, so a run at an unchanged commit leaves it as it was.
 
 Usage: python tools/plan_audit.py   (writes PLANS.md at repo root)
 """
@@ -55,9 +56,9 @@ def _distinct(plan: str, pattern: str) -> int:
     return len({m.strip() for m in re.findall(pattern, plan)})
 
 
-def plan_digest(plan: str) -> str:
-    """sha256 of `plan` with what differs between two runs of the same
-    plan masked: expression ids (``#123``), ``plan_id=``, PySpark's
+def mask_plan(plan: str) -> str:
+    """`plan` with what differs between two runs of the same plan
+    masked: expression ids (``#123``), ``plan_id=``, PySpark's
     lambda-variable counters (``x_125`` → ``x_K``), the checkout's root
     path, and the numbers of AQE query stages and whole-stage-codegen
     stages (``ShuffleQueryStage 15``, ``*(8)``), which follow the order
@@ -68,7 +69,7 @@ def plan_digest(plan: str) -> str:
     plan = re.sub(r"\b(lambda \w+?)_\d+\b", r"\1_K", plan)
     plan = re.sub(r"(QueryStage) \d+", r"\1 K", plan)
     plan = re.sub(r"\*\(\d+\)", "*(K)", plan)
-    return hashlib.sha256(plan.encode("utf-8")).hexdigest()
+    return plan
 
 
 def audit(plan: str) -> dict:
@@ -88,16 +89,10 @@ def audit(plan: str) -> dict:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from smartreader_spark.pipeline.session import make_session
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = make_session(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
 
     lines = [
@@ -123,16 +118,18 @@ def main() -> None:
         df = fn(spark, SF_DIR)
         df.collect()  # execute so AQE finalizes (real join picks, codegen)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        a = audit(plan)
-        print(f"{name} {plan_digest(plan)}", flush=True)
+        a = audit(plan)  # the raw plan: its ids tell operator instances apart
+        masked = mask_plan(plan)
+        print(f"{name} {hashlib.sha256(masked.encode('utf-8')).hexdigest()}", flush=True)
         lines.append(
             f"| {name} | {a['exchanges']} | "
             f"{a['broadcast_joins']}/{a['sortmerge_joins']}/{a['shuffledhash_joins']} | "
             f"{a['nested_loop']} | {a['python_nodes']} | {a['map_in_pandas']} | "
             f"{a['codegen_stages']} | {'yes' if a['pushed_filters'] else '-'} |"
         )
-        # keep the first 60 lines of each plan for inspection
-        head = "\n".join(plan.splitlines()[:60])
+        # keep the first 60 masked lines of each plan for inspection: an
+        # unchanged plan rewrites the same lines
+        head = "\n".join(masked.splitlines()[:60])
         details.append(f"## {name}\n\n```\n{head}\n```\n")
 
     out = "\n".join(lines) + "\n\n" + "\n".join(details)

@@ -383,11 +383,9 @@ def main(argv=None) -> int:
     try:
         from smartreader_spark.pipeline.session import make_session, warm_python_workers
 
-        nproc = len(os.sched_getaffinity(0))
-        spark = make_session(master=f"local[{nproc}]", app_name="scale-step",
-                             shuffle_partitions=nproc)
+        spark = make_session(app_name="scale-step")
         spark.sparkContext.setLogLevel("ERROR")
-        warm_python_workers(spark, nproc)
+        warm_python_workers(spark, spark.sparkContext.defaultParallelism)
         rec = step(spark, args.op, args.sf, args.replicas, args.attempts)
     finally:
         procs.stop_all()
