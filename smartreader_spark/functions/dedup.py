@@ -405,28 +405,29 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str,
     dropped pairs are ones exact dedup already collapsed; audit what was
     dropped with ``simhash_oversized_buckets`` — the composed pipeline
     (pipeline/training.py) surfaces that count as a funnel row so the
-    recall trade is observable in the primary path (ADVICE r3). The count
-    table is at most 6·1024 rows, so the cap costs one broadcast join,
-    never a shuffle. Pass ``max_bucket_size=None`` to disable."""
+    recall trade is observable in the primary path (ADVICE r3). The cap
+    is a count over the (band, bandbits) window, and the self-join reuses
+    that window's hash exchange: no separate aggregate, no broadcast. An
+    oversized bucket's rows still cross that one shuffle before they are
+    dropped — linear work, never the quadratic join. Pass
+    ``max_bucket_size=None`` to disable."""
     return _sf_simhash_pairs(
         spark, sf_dir, max_hamming=max_hamming, max_bucket_size=max_bucket_size
-    )
+    ).orderBy("doc_a", "doc_b")
 
 
 def simhash_banded_for_docs(docs: DataFrame) -> DataFrame:
     """60-bit simhash per doc exploded into 6 × 10-bit band keys —
     the shared candidate-generation table for pair mining and the
-    oversized-bucket audit. `docs` needs (doc_id, text)."""
-    sigs = simhash_wide_signatures(docs, n_bits=60)
-    return sigs.withColumn(
-        "band", F.explode(F.sequence(F.lit(0), F.lit(5)))
-    ).select(
-        "doc_id",
-        "simhash",
-        "band",
-        # shiftright() in the Python API needs a literal shift; use expr
-        # for the column-valued band shift
-        F.expr("shiftright(simhash, band * 10) & 1023").alias("bandbits"),
+    oversized-bucket audit. `docs` needs (doc_id, text). `bucket_n` is
+    the size of the row's (band, bandbits) bucket: a count over that
+    window, whose hash exchange (and sort) the pair miner's self-join
+    reads as they are."""
+    return (
+        simhash_wide_signatures(docs, n_bits=60)
+        .selectExpr("doc_id", "simhash", "explode(sequence(0, 5)) AS band")
+        .selectExpr("*", "shiftright(simhash, band * 10) & 1023 AS bandbits")
+        .selectExpr("*", "count(*) OVER (PARTITION BY band, bandbits) AS bucket_n")
     )
 
 
@@ -435,7 +436,9 @@ def simhash_pairs_for_docs(docs: DataFrame, max_hamming: int = 3,
                            banded: DataFrame | None = None) -> DataFrame:
     """DataFrame-level core of `simhash_near_dup_pairs` (same semantics,
     same scale shape) over any (doc_id, text) input — used standalone and
-    as the near-dup stage of the composed training pipeline.
+    as the near-dup stage of the composed training pipeline. The pairs
+    come back distinct and unordered: the standalone query sorts them,
+    the pipeline counts them.
 
     `banded`: optional precomputed `simhash_banded_for_docs(docs)` table
     (ideally cached) so a pipeline that also audits the skew valve
@@ -443,31 +446,29 @@ def simhash_pairs_for_docs(docs: DataFrame, max_hamming: int = 3,
     not once per consumer (r7)."""
     if banded is None:
         banded = simhash_banded_for_docs(docs)
+    return simhash_pair_rows(banded, max_hamming, max_bucket_size).distinct()
+
+
+def simhash_pair_rows(banded: DataFrame, max_hamming: int = 3,
+                      max_bucket_size: int | None = SIMHASH_MAX_BUCKET) -> DataFrame:
+    """The verified (doc_a < doc_b, hamming ≤ max_hamming) pairs of a
+    `simhash_banded_for_docs` table, one row per band the two docs share
+    in a bucket of at most `max_bucket_size` rows: `simhash_pairs_for_docs`
+    before its distinct. A consumer that ignores duplicates (an anti-join)
+    reads these rows and skips that shuffle."""
     if max_bucket_size is not None:
-        small = (
-            banded.groupBy("band", "bandbits")
-            .agg(F.count("*").alias("bucket_n"))
-            .filter(F.col("bucket_n") <= max_bucket_size)
-            .select("band", "bandbits")
-        )
-        banded = banded.join(F.broadcast(small), ["band", "bandbits"])
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bandbits") == F.col("b.bandbits")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash")).cast("long")
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-        .orderBy("doc_a", "doc_b")
+        banded = banded.filter(f"bucket_n <= {int(max_bucket_size)}")
+    # a sort-merge join, so the join reads the bucket window's partitioning
+    # and order as they are: no exchange, sort or broadcast of its own
+    return (
+        banded.alias("a")
+        .join(banded.alias("b").hint("merge"), F.expr(
+            "a.band = b.band AND a.bandbits = b.bandbits AND a.doc_id < b.doc_id"
+        ))
+        .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b",
+                    "bit_count(a.simhash ^ b.simhash) AS hamming")
+        .filter(f"hamming <= {int(max_hamming)}")
     )
-    return pairs
 
 
 def simhash_oversized_buckets(spark: SparkSession, sf_dir: str,

@@ -654,27 +654,23 @@ class Extractor:
             text_length = len(get_inner_text(article_content, normalize_spaces=True))
             if text_length < opts.char_threshold:
                 parse_successful = False
-                # restore the body (fresh rebuild) and retry with fewer flags
                 page.text_content = ""
-                restored = self._rebuild_body()
-                if restored is not None:
-                    for c in list(restored.child_nodes):
-                        page.append_child(c)
-
-                if self.flag_active(FLAG_STRIP_UNLIKELYS):
-                    self.remove_flag(FLAG_STRIP_UNLIKELYS)
-                    self.attempts.append((article_content, text_length))
-                elif self.flag_active(FLAG_WEIGHT_CLASSES):
-                    self.remove_flag(FLAG_WEIGHT_CLASSES)
-                    self.attempts.append((article_content, text_length))
-                elif self.flag_active(FLAG_CLEAN_CONDITIONALLY):
-                    self.remove_flag(FLAG_CLEAN_CONDITIONALLY)
-                    self.attempts.append((article_content, text_length))
+                self.attempts.append((article_content, text_length))
+                flag = next((f for f in (FLAG_STRIP_UNLIKELYS, FLAG_WEIGHT_CLASSES,
+                                         FLAG_CLEAN_CONDITIONALLY)
+                             if self.flag_active(f)), None)
+                if flag is not None:
+                    # restore the body (fresh rebuild) and retry with fewer
+                    # flags; after the last attempt nothing reads the body
+                    # again (the clear above detached every attempt from
+                    # it), so there it is not rebuilt
+                    restored = self._rebuild_body()
+                    if restored is not None:
+                        for c in list(restored.child_nodes):
+                            page.append_child(c)
+                    self.remove_flag(flag)
                 else:
-                    self.attempts.append((article_content, text_length))
                     self.attempts.sort(key=lambda a: a[1], reverse=True)
-                    if not self.attempts:
-                        return None
                     article_content = self.attempts[0][0]
                     parse_successful = True
 

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -40,6 +41,12 @@ def make_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
         .config("spark.sql.files.maxPartitionBytes", "64m")
+        # the catalog's default-database directory (static, so set here):
+        # out of the working directory, which under pytest is the checkout
+        .config(
+            "spark.sql.warehouse.dir",
+            os.path.join(tempfile.gettempdir(), "smartreader-spark-warehouse"),
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "12g"))
         # Arrow feeding of MB-sized documents churns the old gen; G1's
         # humongous-allocation handling stalls feeder threads under many

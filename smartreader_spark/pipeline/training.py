@@ -16,7 +16,8 @@ this module proves them COMPOSED, with one materialization barrier and
 one extraction pass, as a single driver-gated query
 (`pipeline_end_to_end` + `pipeline_funnel` in __spark_entry__).
 
-Scale notes (local[32] here; 1000 executors is the design point):
+Scale notes (`local[N]`, one task slot per core, on a single machine
+here; 1000 executors is the design point):
 
 * The unified doc table is cached after extraction
   (`spark.storage`-backed here; at 100 TB this is the write of the
@@ -26,11 +27,14 @@ Scale notes (local[32] here; 1000 executors is the design point):
   though dedup's self-joins consume the table multiple times.
 * Exact dedup is a window (row_number over fp) — one hash shuffle on a
   fixed-width digest; no self-join, no recompute.
-* The near-dup stage reuses functions.dedup.simhash_pairs_for_docs:
-  banded equi-join on (band, 10-bit bandbits), skew-valved, verified by
-  bit_count — the scale-correct candidate-generation shape.
+* The near-dup stage reuses functions.dedup's simhash pair miner:
+  banded equi-join on (band, 10-bit bandbits), verified by bit_count —
+  the scale-correct candidate-generation shape. Its skew valve is a
+  count over the (band, bandbits) window, and the self-join reads that
+  window's hash exchange as it is: no separate aggregate, no broadcast.
 * The loser set (larger member of each near-dup pair) is tiny relative
-  to the corpus → broadcast left-anti join.
+  to the corpus → broadcast left-anti join, built from the verified
+  pair rows with no distinct and no shuffle of its own.
 * Quality + token counting are pure projections (codegen, no shuffle).
 """
 
@@ -43,6 +47,7 @@ from pyspark.sql.window import Window
 from ..functions.dedup import (
     SIMHASH_MAX_BUCKET,
     oversized_buckets_for_docs,
+    simhash_pair_rows,
     simhash_pairs_for_docs,
 )
 from ..functions.textqa import STOPWORDS, _norm, tokens
@@ -69,30 +74,16 @@ def doc_text_expr():
     """Ordered concat of a document's *text* spans with a paragraph
     joiner — pure built-in expressions (JVM-side; same codegen shape as
     pipeline.extract.reassemble_html_expr, which it extends with the
-    kind filter)."""
-    return F.concat_ws(
-        TEXT_JOIN,
-        F.transform(
-            F.filter(
-                F.array_sort(
-                    F.transform(
-                        "spans",
-                        lambda s: F.struct(
-                            s["offset"].alias("o"),
-                            s["kind"].alias("k"),
-                            s["text"].alias("t"),
-                        ),
-                    )
-                ),
-                lambda s: s["k"] == "text",
-            ),
-            lambda s: s["t"],
-        ),
+    kind filter), stated as one SQL string (the `_lit_mat_sql`
+    discipline: one py4j call instead of one per sub-expression)."""
+    return F.expr(
+        f"concat_ws({sql_string(TEXT_JOIN)}, transform(filter(array_sort("
+        "transform(spans, s -> struct(s.offset AS o, s.kind AS k, s.text AS t))), "
+        "s -> s.k = 'text'), s -> s.t))"
     )
 
 
 def unified_doc_table(spark: SparkSession, sf_dir: str,
-                      num_partitions: int | None = None,
                       pdf_source: "DataFrame | str | None" = None,
                       pdf_partitions: int | None = None) -> DataFrame:
     """Both extraction legs → one (doc_id, source, text) table.
@@ -112,11 +103,10 @@ def unified_doc_table(spark: SparkSession, sf_dir: str,
     data)."""
     from ..sources.pdf_corpus import pdf_corpus_rows
 
-    if num_partitions is None:
-        # ~¾ of task slots: the measured mapInPandas sweet spot (the JVM
-        # feeder threads keep whole cores — BASELINE.md); at cluster
-        # scale pass 3-4× total slots instead (extract.py rationale)
-        num_partitions = max(4, (spark.sparkContext.defaultParallelism * 3) // 4)
+    # ~¾ of task slots: the measured mapInPandas sweet spot (the JVM
+    # feeder threads keep whole cores — BASELINE.md); at cluster scale
+    # 3-4× total slots would be the choice instead (extract.py rationale)
+    num_partitions = max(4, (spark.sparkContext.defaultParallelism * 3) // 4)
     html = (
         extract_articles(
             wrap_plain_documents(spark, sf_dir), num_partitions=num_partitions
@@ -162,61 +152,45 @@ def quality_token_stage(uniq: DataFrame) -> DataFrame:
     lexicographically greatest code), so a Spanish doc is graded against
     Spanish stopwords; `lang_guess` is emitted for observability. The
     punctuation class includes CJK/fullwidth marks (PUNCT_CHARS)."""
-    # hoist the normalize+split into a named column: the 13 per-language
-    # counters all reference it, and higher-order functions sit outside
-    # codegen subexpression elimination — without this the split would
-    # be recomputed per language (CollapseProject keeps a non-cheap
-    # alias that is referenced many times)
-    uniq = uniq.withColumn("_toks", tokens(F.col("text")))
-    toks = F.col("_toks")
-    n_toks = F.size(toks)
-
-    # the 13 per-language hit counters are assembled as ONE SQL string
-    # (the codebook _lit_mat_sql discipline): building them through the
-    # Column API was ~700 py4j round-trips (~0.5-1 s of driver time per
-    # fresh session). Same expressions — size(filter(...)) over a
-    # stopword array literal per language, argmax by (hits, lang) via
-    # array_max over structs — so results are identical.
+    # the token split (_toks) and the winning-language struct (_best) are
+    # named columns, each computed once: the 13 per-language counters read
+    # _toks, lang_guess and stopword_ratio read _best. Higher-order
+    # functions sit outside codegen subexpression elimination, and
+    # CollapseProject keeps a non-cheap alias that is referenced many
+    # times, so inlined they would be recomputed per reference.
+    #
+    # The expressions are SQL strings (the codebook _lit_mat_sql
+    # discipline) in one projection: through the Column API and a
+    # withColumn chain they cost ~700 py4j round-trips and one analysis
+    # of the whole plan per column. The counters are size(filter(...))
+    # over a stopword array literal per language, argmax by (hits, lang)
+    # via array_max over structs.
     def _hits_sql(words):
         # one-arg lambda (PySpark treats a 2-arg lambda as element+index)
         arr = "array(" + ",".join(sql_string(w) for w in words) + ")"
         return f"size(filter(_toks, t -> array_contains({arr}, t)))"
 
-    best = F.expr(
-        "array_max(array("
-        + ",".join(
-            f"struct({_hits_sql(words)} AS hits, {sql_string(lang)} AS lang)"
-            for lang, words in STOPWORDS.items()
-        )
-        + "))"
-    )
-    stop_hits = best["hits"]
-    punct = F.length(
-        F.regexp_replace(F.col("text"), "[^" + PUNCT_CHARS + "]", "")
+    best = "array_max(array(" + ",".join(
+        f"struct({_hits_sql(words)} AS hits, {sql_string(lang)} AS lang)"
+        for lang, words in STOPWORDS.items()
+    ) + ")) AS _best"
+    punct = (
+        f"length(regexp_replace(text, {sql_string('[^' + PUNCT_CHARS + ']')}, ''))"
+        " / greatest(length(text), 1)"
     )
     return (
-        uniq.withColumn("n_chars", F.length("text"))
-        .withColumn("n_tokens", n_toks)
-        .withColumn(
-            "lang_guess",
-            F.when(stop_hits > 0, best["lang"]).otherwise(F.lit("und")),
+        uniq.select("*", tokens(F.col("text")).alias("_toks"))
+        .selectExpr("*", best)
+        .selectExpr(
+            *(f"`{c}`" for c in uniq.columns),
+            "length(text) AS n_chars",
+            "size(_toks) AS n_tokens",
+            "CASE WHEN _best.hits > 0 THEN _best.lang ELSE 'und' END AS lang_guess",
+            f"round({punct}, 6) AS punct_ratio",
+            "round(_best.hits / greatest(size(_toks), 1), 6) AS stopword_ratio",
+            "CAST(ceil(length(text) / 4) AS BIGINT) AS n_subwords_est",
         )
-        .withColumn(
-            "punct_ratio",
-            F.round(punct / F.greatest(F.length("text"), F.lit(1)), 6),
-        )
-        .withColumn(
-            "stopword_ratio", F.round(stop_hits / F.greatest(n_toks, F.lit(1)), 6)
-        )
-        .withColumn(
-            "n_subwords_est", F.ceil(F.length("text") / 4).cast("long")
-        )
-        .filter(
-            (F.col("n_chars") >= 100)
-            & (F.col("n_tokens") >= 20)
-            & (punct / F.greatest(F.length("text"), F.lit(1)) < 0.1)
-        )
-        .drop("_toks")
+        .filter(f"n_chars >= 100 AND n_tokens >= 20 AND {punct} < 0.1D")
     )
 
 
@@ -227,27 +201,29 @@ _STAGES_CACHE = SessionMemo("training.stages")
 
 
 def _stages(spark: SparkSession, sf_dir: str,
-            max_hamming: int = 3,
             pdf_source: "DataFrame | str | None" = None,
             pdf_partitions: int | None = None) -> dict[str, DataFrame]:
     """Build every stage DataFrame once; `pipeline_end_to_end` returns
     the survivors, `pipeline_funnel` the per-stage lineage counts."""
     return _STAGES_CACHE.get_or_build(
         spark,
-        (sf_dir, max_hamming, pdf_source, pdf_partitions),
+        (sf_dir, pdf_source, pdf_partitions),
         (sf_dir, pdf_source),
-        lambda: _build_stages(spark, sf_dir, max_hamming, pdf_source,
-                              pdf_partitions),
+        lambda: _build_stages(spark, sf_dir, pdf_source, pdf_partitions),
     )
 
 
-def _build_stages(spark: SparkSession, sf_dir: str, max_hamming: int,
+def _build_stages(spark: SparkSession, sf_dir: str,
                   pdf_source: "DataFrame | str | None",
                   pdf_partitions: int | None) -> dict[str, DataFrame]:
     docs = unified_doc_table(
         spark, sf_dir, pdf_source=pdf_source, pdf_partitions=pdf_partitions
     ).cache()  # ONE extraction pass;
-    # at 100 TB this cache is the Iceberg write of the extracted table
+    # at 100 TB this cache is the Iceberg write of the extracted table.
+    # kept and banded are cached too: each feeds two branches of one
+    # query, and under AQE an exchange above a cached scan is never
+    # reused, so without a cache each branch would shuffle on its own.
+    # The pairs are not: only the funnel counts them.
 
     # stage 1 — exact dedup: window on the content digest (single hash
     # shuffle on a fixed-width key; min-doc_id keeper, deterministic)
@@ -261,20 +237,19 @@ def _build_stages(spark: SparkSession, sf_dir: str, max_hamming: int,
     )
 
     # stage 2 — simhash near-dup: drop the LARGER member of every
-    # (hamming ≤ max_hamming) pair; keep-smallest is the same greedy
-    # deterministic rule as the exact stage's min-doc_id keeper
-    # r7: ONE 60-bit signature pass feeds both the pair miner and the
-    # funnel's skew-valve audit (the audit previously re-tokenized and
-    # re-aggregated the whole banded table)
+    # (hamming ≤ 3) pair; keep-smallest is the same greedy deterministic
+    # rule as the exact stage's min-doc_id keeper. ONE 60-bit signature
+    # pass feeds both the pair miner and the funnel's skew-valve audit.
     from ..functions.dedup import simhash_banded_for_docs
 
     banded = simhash_banded_for_docs(kept.select("doc_id", "text")).cache()
-    pairs = simhash_pairs_for_docs(
-        kept.select("doc_id", "text"), max_hamming=max_hamming, banded=banded
-    ).cache()  # consumed twice (loser set + funnel count); at 100 TB
-    # this is a small materialized pairs table, not a recompute of the
-    # banded self-join
-    losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    pairs = simhash_pairs_for_docs(kept.select("doc_id", "text"), banded=banded)
+    # the losers are the doc_b of every verified pair row, before the
+    # pairs' distinct and with none of their own (a left-anti join keeps a
+    # row once however many right rows match it; the rule of
+    # checkpoint.remaining_input): the broadcast is built straight from
+    # the self-join, which reads the cached buckets with no shuffle
+    losers = simhash_pair_rows(banded).select(F.col("doc_b").alias("doc_id"))
     uniq = kept.join(F.broadcast(losers), "doc_id", "left_anti")
 
     # stage 3 — language-aware quality gate + token counts (factored out

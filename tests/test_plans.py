@@ -190,6 +190,12 @@ def test_pipeline_end_to_end_plan_shape(spark):
     assert distinct(r"(?:BroadcastNestedLoopJoin|CartesianProduct)[^\n]*") == 0
     # the stage barrier is the cache, not a driver collect
     assert "InMemoryTableScan" in plan
+    # the near-dup pairs feed an anti-join and a count: nothing sorts them
+    assert "rangepartitioning(doc_a" not in plan
+    # the winning-language struct is one named column of the final
+    # projection, not re-inlined into lang_guess and stopword_ratio
+    final_plan = plan.split("== Initial Plan ==")[0]
+    assert final_plan.count("array_max(") == 1, final_plan.count("array_max(")
 
 
 def test_source_cap_window_group_limit_pushdown(spark):

@@ -112,6 +112,36 @@ def test_unified_doc_table_pdf_source_injection(spark, tmp_path):
     assert pdf_ids2 == pdf_ids
 
 
+def test_training_pipeline_job_count(spark):
+    """One pipeline_end_to_end run, built and collected from scratch under
+    its own job group, submits at most 15 jobs. 13 of them: the schema
+    read, the two extraction shuffles and the extraction cache; the
+    exact-dedup shuffle and its cache; the signature and bucket-window
+    shuffles and their cache; the loser broadcast; the final sort's
+    sample, shuffle and result. Two scans of a cache that is not yet
+    materialized each submit a job, and the exact-dedup and bucket
+    caches are each scanned twice (the anti-join and the signatures; the
+    two sides of the self-join): 2 more. The old plan took 25."""
+    from smartreader_spark.pipeline import training
+
+    sc = spark.sparkContext
+    for key, stages in list(training._STAGES_CACHE.items()):
+        if key[0] == sc.applicationId:  # from an earlier test
+            for df in stages.values():
+                df.unpersist()
+    training._STAGES_CACHE.clear()
+
+    group = "training-pipeline-under-test"
+    sc.setJobGroup(group, "one training_pipeline run")
+    try:
+        rows = training.training_pipeline(spark, "/root/testdata/sf0.001").collect()
+    finally:
+        sc.setJobGroup("after-training-pipeline", "")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert rows
+    assert len(jobs) <= 15, sorted(jobs)
+
+
 @pytest.mark.parametrize("form", ["path", "uri"])
 def test_resumable_pdf_ingest_skips_permanent_failures(spark, tmp_path, form):
     """A resume over PDF output must NOT re-parse permanently-failed

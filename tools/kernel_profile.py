@@ -23,9 +23,11 @@ retries), serialize (dom_to_output_spans), plaintext
 reader.extract_html. A second pass counts, per document, the tree walks
 (full-document ones, rooted at the document or its <html>, and subtree
 ones) and the characters the text caches rebuild on a miss
-(``text_content`` joins and ``get_inner_text`` strip+split). It counts by
-wrapping dom's walk methods and text accessors from here, for that pass
-only; the kernel keeps no counters. A third pass runs extract_html under
+(``text_content`` joins and ``get_inner_text`` strip+split), and the HTML
+parses (``extractor.parse_html``: the first parse and every grabArticle
+body rebuild). It counts by wrapping dom's walk methods and text
+accessors and the extractor's parser from here, for that pass only; the
+kernel keeps no counters. A third pass runs extract_html under
 cProfile and prints the top functions by their own time. The extraction
 output schema is untouched: nothing here runs in Spark.
 """
@@ -47,7 +49,7 @@ from layers import kernel_metrics
 from pages import generate_pages
 from workloads import WEB_PAGES
 
-from smartreader_spark.kernel import dom, reader
+from smartreader_spark.kernel import dom, extractor, reader
 
 PHASES = ("parse_html", "metadata", "extractor_parse", "serialize", "plaintext")
 
@@ -85,7 +87,7 @@ def _patched(targets: list[tuple[object, str, object]]):
 def walk_counts(htmls: list[str]) -> dict[str, float]:
     """Per-document walk counts and text-cache rebuild sizes over one
     extract_html pass, measured by wrapping dom from outside."""
-    n = dict.fromkeys(("full-document walks", "subtree walks",
+    n = dict.fromkeys(("full-document walks", "subtree walks", "parses",
                        "text_content chars rebuilt", "get_inner_text chars split"), 0)
 
     def counted(fn):
@@ -113,6 +115,12 @@ def walk_counts(htmls: list[str]) -> dict[str, float]:
             n["get_inner_text chars split"] += len(el._it[0])
         return out
 
+    parse_html = extractor.parse_html
+
+    def parse_counted(html):
+        n["parses"] += 1
+        return parse_html(html)
+
     E = dom.Element
     targets = [(E, name, counted(getattr(E, name)))
                for name in ("get_elements_by_tag_name", "iter_elements", "_build_index")]
@@ -121,6 +129,7 @@ def walk_counts(htmls: list[str]) -> dict[str, float]:
                 for name, mod in sorted(sys.modules.items())
                 if name.startswith("smartreader_spark.kernel")
                 and getattr(mod, "get_inner_text", None) is inner_text]
+    targets.append((extractor, "parse_html", parse_counted))
     with _patched(targets):
         for html in htmls:
             reader.extract_html(html)
