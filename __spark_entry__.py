@@ -189,10 +189,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         kernel/pdfkit.py parser via mapInPandas, flattened to one row per
         interleaved span. Oracled against the committed expected table
         (tools/build_expected.py), like extract_*."""
+        from smartreader_spark.localrel import local_frame
         from smartreader_spark.pipeline.pdf_ingest import pdf_to_span_table
         from smartreader_spark.sources.pdf_corpus import pdf_corpus_rows
 
-        df = spark.createDataFrame(pdf_corpus_rows(8), "doc_id long, pdf binary")
+        df = local_frame(spark, pdf_corpus_rows(8), "doc_id long, pdf binary")
         out = pdf_to_span_table(df, num_partitions=2)
         return (
             out.select("doc_id", F.posexplode("spans").alias("seq", "s"))

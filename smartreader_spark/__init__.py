@@ -16,6 +16,7 @@ Layout:
   sources/    the generated PDF corpus
   memo.py     session memo for shared intermediate results
   layout.py   the scan spreader
+  localrel.py driver-side rows as Arrow-backed local relations
   sqltext.py  SQL literals built from Python values
   observed.py bounded wait on Observation metrics
 """

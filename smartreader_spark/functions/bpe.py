@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smartreader_spark.functions.textqa import load_documents, tokens
+from smartreader_spark.localrel import local_frame
 from smartreader_spark.memo import SessionMemo
 
 # the end-of-word sentinel of the original algorithm: lets the model
@@ -181,8 +182,8 @@ def learn_bpe_merges(
     early when the best remaining pair falls below `min_pair_count`
     (merging hapax pairs memorizes noise)."""
     merges, _ = _train(spark, sf_dir, num_merges, min_pair_count)
-    return spark.createDataFrame(
-        merges, "merge_rank long, lhs string, rhs string, pair_count long"
+    return local_frame(
+        spark, merges, "merge_rank long, lhs string, rhs string, pair_count long"
     ).orderBy("merge_rank")
 
 

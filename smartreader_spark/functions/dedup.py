@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..layout import spread
+from ..localrel import local_frame
 from ..memo import SessionMemo
 from .similarity import _dim_of, _load, _srp_bucket
 from .textqa import _norm, load_documents, tokens
@@ -186,7 +187,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str,
     schema = "vec_a bigint, vec_b bigint, cosine double"
     dim = _dim_of(spark, sf_dir)
     if dim is None:  # empty table
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     n_salt = 8  # cogroup fan-out: 2^n_planes buckets × 8 salts
 
     # each cogroup side gets its OWN scan subtree: a self-cogroup

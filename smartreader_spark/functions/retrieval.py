@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..layout import spread
+from ..localrel import local_frame
 from .textqa import load_documents, tokens
 
 BM25_K1 = 1.2
@@ -97,7 +98,8 @@ def bm25_search(spark: SparkSession, sf_dir: str,
     avgdl = float(s["tot"]) / float(s["n"])
 
     df_all = tf.groupBy("term").agg(F.count("*").alias("df"))
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         [(qid, t) for qid, q in BM25_QUERIES for t in q.split()],
         "query_id int, term string",
     )

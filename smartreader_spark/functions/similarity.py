@@ -47,6 +47,7 @@ from pyspark.sql.types import (
 )
 
 from ..layout import spread
+from ..localrel import local_frame
 
 DEFAULT_K = 5
 DEFAULT_QUERIES = 8  # vec_id < 8 are the query set (deterministic)
@@ -133,7 +134,7 @@ def _empty_or_raise(spark: SparkSession, sf_dir: str, schema: StructType,
     empty `embeddings` table gives the typed empty result `schema`; any
     other table lacks the rows `need` describes, so raise."""
     if _dim_of(spark, sf_dir) is None:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     raise ValueError(f"{need}; {sf_dir}/embeddings.parquet lacks them")
 
 
@@ -376,7 +377,7 @@ def ann_pq(spark: SparkSession, sf_dir: str,
             f"[{PQ_TRAIN_OFFSET}, {PQ_TRAIN_OFFSET + n_cent})",
         )
     if not queries:
-        return spark.createDataFrame([], _ANN_PQ_SCHEMA)
+        return local_frame(spark, [], _ANN_PQ_SCHEMA)
     dim = len(train[0])
     d0 = dim // m_sub
     # sub-codebook: centroid (m, j) = subspace-m slice of training vec j
@@ -590,7 +591,7 @@ def lsh_bucketed_topk(spark: SparkSession, sf_dir: str,
     base = _load(spark, sf_dir).select("vec_id", "embedding")
     dim = _dim_of(spark, sf_dir)
     if dim is None:  # empty table
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return local_frame(spark, [], _TOPK_SCHEMA)
     emb_b = (
         spread(base)
         .withColumn("bucket", _srp_bucket(F.col("embedding"), n_planes, dim))

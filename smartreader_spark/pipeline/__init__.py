@@ -15,9 +15,10 @@ Design notes for 100 TB / 10^12-document scale:
   restart = left-anti join input against the ledger (broadcast when
   small) and append under the run's own run_id= partition. One runner,
   `checkpoint.run_resumable`, does this for the HTML and PDF legs.
-* Arrow batch size is bounded by records only (session.ARROW_MAX_RECORDS):
-  a batch's bytes are at most the record cap × the largest document, as
-  nothing upstream groups documents of similar size.
+* Arrow batches are bounded by bytes (session.ARROW_MAX_BYTES, with a
+  high record cap, session.ARROW_MAX_RECORDS): a worker's input batch
+  is at most the byte cap plus one document whatever the documents'
+  sizes, and a task of tiny documents crosses in one or a few batches.
 """
 
 from .extract import (  # noqa: F401

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.textqa import load_documents
+from ..localrel import local_frame
 from .extract import INPUT_SCHEMA
 
 FIXTURE_PAGES = "/root/reference/src/SmartReaderTests/test-pages"
@@ -22,13 +23,13 @@ DEFAULT_CORPUS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirnam
     os.path.abspath(__file__)))), "fixtures", "corpus.parquet")
 
 
-def fixture_rows(pages_dir: str = FIXTURE_PAGES) -> list[tuple]:
+def fixture_rows() -> list[tuple]:
     """(doc_id, spans) for each golden fixture — pure Python, driver-side
     (32 MB total; the scale path replicates distributed, see scale_corpus)."""
     from smartreader_spark.kernel.serializer import html_to_input_spans
 
     rows = []
-    for path in sorted(glob.glob(os.path.join(pages_dir, "*", "source.html"))):
+    for path in sorted(glob.glob(os.path.join(FIXTURE_PAGES, "*", "source.html"))):
         name = os.path.basename(os.path.dirname(path))
         html = open(path, encoding="utf-8", errors="replace").read()
         spans = [
@@ -39,20 +40,19 @@ def fixture_rows(pages_dir: str = FIXTURE_PAGES) -> list[tuple]:
     return rows
 
 
-def build_fixture_corpus(spark: SparkSession, out_path: str = DEFAULT_CORPUS_DIR,
-                         overwrite: bool = False) -> str:
-    """Materialize the 142-fixture span corpus as parquet (idempotent)."""
-    if os.path.exists(out_path) and not overwrite:
-        return out_path
-    df = spark.createDataFrame(fixture_rows(), INPUT_SCHEMA)
-    df.repartition(4).write.mode("overwrite").parquet(out_path)
-    return out_path
+def build_fixture_corpus(spark: SparkSession) -> str:
+    """Materialize the 142-fixture span corpus as parquet at
+    DEFAULT_CORPUS_DIR (idempotent)."""
+    if os.path.exists(DEFAULT_CORPUS_DIR):
+        return DEFAULT_CORPUS_DIR
+    df = local_frame(spark, fixture_rows(), INPUT_SCHEMA)
+    df.repartition(4).write.mode("overwrite").parquet(DEFAULT_CORPUS_DIR)
+    return DEFAULT_CORPUS_DIR
 
 
-def load_corpus(spark: SparkSession, path: str = DEFAULT_CORPUS_DIR) -> DataFrame:
-    if not os.path.exists(path):
-        build_fixture_corpus(spark, path)
-    return spark.read.parquet(path)
+def load_corpus(spark: SparkSession) -> DataFrame:
+    build_fixture_corpus(spark)
+    return spark.read.parquet(DEFAULT_CORPUS_DIR)
 
 
 def wrap_plain_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

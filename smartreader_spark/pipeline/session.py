@@ -7,15 +7,23 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-# Arrow record cap of the sessions `make_session` builds. 8 is the r2
-# sweep's best for MB-sized pages at 24 workers on 32 cores (BASELINE.md:
-# 4→8 cut best wide walls 16.7s→8.2s; 16 regressed tail latency). A record
-# cap approximates a byte cap only when a batch's documents are of similar
-# size, and nothing upstream ensures that: layout.spread deals documents
-# round-robin, so one partition mixes docs of every size. bench.py and
-# perfbench/layers.py import this value; the tests (tests/conftest.py)
-# and tools run on the sessions built here.
-ARROW_MAX_RECORDS = 8
+# Arrow batches of the sessions `make_session` builds are bounded by
+# bytes: a batch closes at ARROW_MAX_BYTES or at ARROW_MAX_RECORDS rows,
+# whichever comes first (Spark 4.1 applies both to mapInPandas input).
+# r2 tuned a record cap of 8 for MB-sized pages, but a record cap bounds
+# bytes only when a batch's documents are of similar size, and for tiny
+# documents it mostly buys per-batch fixed cost: 250 sf docs of about
+# 400 bytes per task made 32 round trips, the worker waiting 0.10-0.19 s
+# per task for its next batch. Swept on both perfbench workloads at 1, 2
+# and 4 MiB (CHANGES.md): training_pipeline's 250-doc tasks take one
+# batch at any of them, and web_pages' ~3 MB files take 3-4, 2-3 and 1-2
+# batches (at 8 records: 3); 2 MiB keeps a batch to a few MB-sized pages.
+# The record cap only stops a batch of tiny rows from growing without
+# end. bench.py (which sets no byte cap) and perfbench/layers.py import
+# ARROW_MAX_RECORDS; the tests (tests/conftest.py) and tools run on the
+# sessions built here.
+ARROW_MAX_RECORDS = 1024
+ARROW_MAX_BYTES = 2 << 20
 
 
 def make_session(
@@ -24,8 +32,10 @@ def make_session(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Local/test session. On a real cluster these land in spark-submit
-    conf; the Arrow batch cap bounds Python-worker memory when documents
-    are MB-sized (median fixture ≈115 KB → a 256-doc batch ≈30 MB).
+    conf; the Arrow byte cap bounds a Python worker's input batch to
+    about ARROW_MAX_BYTES plus one document, whatever the documents'
+    sizes (median fixture ≈115 KB → about 18 docs per batch; tiny sf
+    docs → one batch per task).
     `master` and `shuffle_partitions` default to `SPARK_GRAFT_CPUS`
     cores, else to the CPUs this process may run on. The driver memory
     and JVM options take effect only in a process's first session: a
@@ -40,6 +50,7 @@ def make_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES))
         .config("spark.sql.files.maxPartitionBytes", "64m")
         # the catalog's default-database directory (static, so set here):
         # out of the working directory, which under pytest is the checkout
@@ -61,13 +72,14 @@ def make_session(
     return spark
 
 
-def package_zip(out_path: str = "/tmp/smartreader_spark_pkg.zip") -> str:
+def package_zip() -> str:
     """Zip the smartreader_spark package for --py-files shipment to
-    executors (multi-executor clusters don't share the driver's cwd).
-    Idempotent per content: rebuilt when any source file is newer."""
-    import os
+    executors (multi-executor clusters don't share the driver's cwd) into
+    the temporary directory; return the zip's path. Idempotent per
+    content: rebuilt when any source file is newer."""
     import zipfile
 
+    out_path = os.path.join(tempfile.gettempdir(), "smartreader_spark_pkg.zip")
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     newest = 0.0
     files = []

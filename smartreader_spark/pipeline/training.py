@@ -51,6 +51,7 @@ from ..functions.dedup import (
     simhash_pairs_for_docs,
 )
 from ..functions.textqa import STOPWORDS, _norm, tokens
+from ..localrel import local_frame
 from ..memo import SessionMemo
 from ..sqltext import sql_string
 from .corpus import wrap_plain_documents
@@ -119,9 +120,7 @@ def unified_doc_table(spark: SparkSession, sf_dir: str,
         )
     )
     if pdf_source is None:
-        pdf_df = spark.createDataFrame(
-            pdf_corpus_rows(PDF_DOCS), "doc_id long, pdf binary"
-        )
+        pdf_df = local_frame(spark, pdf_corpus_rows(PDF_DOCS), "doc_id long, pdf binary")
         pdf_partitions = pdf_partitions or 2  # gate-sized default
     else:
         pdf_df = (

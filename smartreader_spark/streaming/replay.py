@@ -8,12 +8,13 @@ Three pieces, each written once:
   per micro-batch is what makes state genuinely cross batch boundaries
   (each operator passes its count as a literal at its one call).
 - `drain` — an availableNow trigger through the exactly-once parquet
-  file sink, then the rows are collected on the driver and rebuilt,
-  so the returned DataFrame has NO lineage to the sink (a cached
-  partition evicted later would otherwise recompute against the
-  deleted sink and fail with FileNotFoundException; gate-sized data
-  makes the collect cheap). Sink and checkpoint live in one temporary
-  directory that is removed whether or not the query fails.
+  file sink, then the rows are collected on the driver as an Arrow
+  table and rebuilt as a local relation, so the returned DataFrame
+  has NO lineage to the sink (a cached partition evicted later would
+  otherwise recompute against the deleted sink and fail with
+  FileNotFoundException; gate-sized data makes the collect cheap).
+  Sink and checkpoint live in one temporary directory that is removed
+  whether or not the query fails.
 - `time_ordered_events` — the events table laid out so that nothing is
   ever late. The file source advances the watermark from each batch's
   max event time, and a window evicted at batch N's commit silently
@@ -41,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.events import _events
+from ..localrel import local_frame
 
 FLUSH_TYPE = "__flush__"
 #: far-future sentinel (2100-01-01T00:00:00) — past every real event,
@@ -66,7 +68,8 @@ def read_files(spark: SparkSession, path: str, schema: str,
 
 def drain(spark: SparkSession, stream: DataFrame) -> DataFrame:
     """Run `stream` to completion with an availableNow trigger and
-    return its output as a batch DataFrame rebuilt from driver rows."""
+    return its output as a batch DataFrame rebuilt from driver rows
+    (a local relation)."""
     with tempfile.TemporaryDirectory(prefix="smartreader_stream_",
                                      ignore_cleanup_errors=True) as tmp:
         (
@@ -79,7 +82,10 @@ def drain(spark: SparkSession, stream: DataFrame) -> DataFrame:
             .awaitTermination()
         )
         read = spark.read.parquet(f"{tmp}/sink")
-        return spark.createDataFrame(read.collect(), read.schema)
+        # an Arrow collect rebuilt as a local relation: every drained
+        # operator's columns (timestamps, nested span arrays) come back
+        # as equal rows, and no Python worker unpickles them
+        return local_frame(spark, read.toArrow(), read.schema)
 
 
 @contextlib.contextmanager
@@ -104,7 +110,8 @@ def time_ordered_events(spark: SparkSession, sf_dir: str) -> Iterator[str]:
         real = sorted(glob.glob(f"{src}/part-*.parquet"))
         for i, p in enumerate(real):
             os.utime(p, (t0 + 2 * i, t0 + 2 * i))
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(-1, FLUSH_TS, -1, FLUSH_TYPE, 0.0, "{}")],
             "event_id long, ts_s string, user_id long, "
             "event_type string, value double, props string",

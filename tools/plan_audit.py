@@ -4,8 +4,10 @@ scale-relevant properties called out (pushed filters, read schema,
 join strategies, exchanges, Python nodes, codegen coverage), and print
 one ``name sha256`` line per query: the digest of its executed plan
 with run-specific tokens masked (`mask_plan`), so two commits' plans
-compare with one `diff` of the printed lines. PLANS.md holds the same
-masked plans, so a run at an unchanged commit leaves it as it was.
+compare with one `diff` of the printed lines. Each query runs from a
+cold session (the stage memos and Spark's cache emptied), so its digest
+does not depend on the queries that ran before it. PLANS.md holds the
+same masked plans, so a run at an unchanged commit leaves it as it was.
 
 Usage: python tools/plan_audit.py   (writes PLANS.md at repo root)
 """
@@ -83,6 +85,7 @@ def audit(plan: str) -> dict:
         + _distinct(plan, r"CartesianProduct[^\n]*"),
         "python_nodes": _distinct(plan, r"(?:BatchEvalPython|ArrowEvalPython)[^\n]*"),
         "map_in_pandas": _distinct(plan, r"MapInPandas [^\n]*"),
+        "existing_rdd_scans": _distinct(plan, r"Scan ExistingRDD[^\n]*"),
         "codegen_stages": len(set(re.findall(r"\*\((\d+)\)", plan))),
         "pushed_filters": bool(re.search(r"PushedFilters: \[[^\]]", plan)),
     }
@@ -90,10 +93,25 @@ def audit(plan: str) -> dict:
 
 def main() -> None:
     import __spark_entry__ as entrymod
+    from smartreader_spark.functions import bpe, curation, dedup
+    from smartreader_spark.pipeline import training
     from smartreader_spark.pipeline.session import make_session
+
+    memos = (bpe._TRAIN_CACHE, curation._GATES_CACHE, dedup._PAIRS_CACHE,
+             training._STAGES_CACHE)
 
     spark = make_session(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
+    # Spark cuts a scan's metadata strings (DataFilters, ReadSchema, ...)
+    # at this many characters of the raw plan, before mask_plan runs: at
+    # the default of 100 the cut moves with the digit count of the
+    # expression ids in front of it, and with it the digest
+    spark.conf.set("spark.sql.maxMetadataStringLength", str(1 << 20))
+    # the event loaders pin the session time zone to UTC and leave it
+    # set (functions/events._events), and expressions such as sequence()
+    # print the zone: pin it from the start, so they print the same zone
+    # whichever query ran first
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     lines = [
         "# PLANS — physical-plan audit of every driver query",
@@ -104,17 +122,28 @@ def main() -> None:
         "broadcast-tiny-query-set vs corpus theta-join IS the exact-baseline",
         "design — the scale path is ann_lsh_bucketed's equi-join), broadcast",
         "for small dims, filters pushed to the parquet scan, extraction as",
-        "MapInPandas only. Plans are AQE-finalized (queries executed first);",
+        "MapInPandas only, driver-side rows as local relations",
+        "(`LocalTableScan`; `createDataFrame(<list>)` would add a",
+        "`Scan ExistingRDD` of pickled Python rows). A `localCheckpoint`ed",
+        "frame also scans as `Scan ExistingRDD`, so that column counts",
+        "both. Plans are AQE-finalized (queries executed first);",
         "operator counts are DISTINCT physical instances (reprints of a",
         "cached build subplan at each InMemoryTableScan reference collapse,",
         "so the composed pipeline's extraction shows its true single",
         "execution: one MapInPandas per leg).",
         "",
-        "| query | exchanges | joins (bcast/smj/shj) | nested-loop | python nodes | MapInPandas | codegen stages | pushed filters |",
-        "|---|---|---|---|---|---|---|---|",
+        "| query | exchanges | joins (bcast/smj/shj) | nested-loop | python nodes | MapInPandas | ExistingRDD scans | codegen stages | pushed filters |",
+        "|---|---|---|---|---|---|---|---|---|",
     ]
     details = []
     for name, fn in entrymod.queries().items():
+        # every query from a cold session: a memo hit scans a cache that
+        # is already materialized, whose known partitioning can drop an
+        # exchange, so a warm memo would make the plan depend on which
+        # queries ran before it
+        for memo in memos:
+            memo.clear()
+        spark.catalog.clearCache()
         df = fn(spark, SF_DIR)
         df.collect()  # execute so AQE finalizes (real join picks, codegen)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -125,6 +154,7 @@ def main() -> None:
             f"| {name} | {a['exchanges']} | "
             f"{a['broadcast_joins']}/{a['sortmerge_joins']}/{a['shuffledhash_joins']} | "
             f"{a['nested_loop']} | {a['python_nodes']} | {a['map_in_pandas']} | "
+            f"{a['existing_rdd_scans']} | "
             f"{a['codegen_stages']} | {'yes' if a['pushed_filters'] else '-'} |"
         )
         # keep the first 60 masked lines of each plan for inspection: an

@@ -272,11 +272,12 @@ OPS = {
 def write_pages(spark, out_dir: str) -> None:
     """The extract op's ×1 input: PAGES pages as a (doc_id, spans) table."""
     from smartreader_spark.kernel.serializer import html_to_input_spans
+    from smartreader_spark.localrel import local_frame
     from smartreader_spark.pipeline.extract import INPUT_SCHEMA
 
     rows = [(p.doc_id, html_to_input_spans(p.html))
             for p in generate_pages(PAGES_SEED, PAGES)]
-    spark.createDataFrame(rows, INPUT_SCHEMA).write.parquet(
+    local_frame(spark, rows, INPUT_SCHEMA).write.parquet(
         os.path.join(out_dir, "pages.parquet"))
 
 
